@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from padua_spark.io_utils import local_frame
+
 # Modulus (prime, < 2^31) and per-permutation affine constants for
 # MinHash; products stay inside int64.
 MOD = 2147483647
@@ -1379,12 +1381,13 @@ def longest_duplicated_substring(
         "n_occurrences bigint, substring string"
     )
     if nmax == 0:
-        return spark.createDataFrame([(0, 0, 0, None)], schema)
+        return local_frame(spark, [(0, 0, 0, None)], schema)
 
     b1 = base % mod
     b2 = (base + 2) % mod  # independent second channel (mod prime)
     i1, i2 = pow(b1, mod - 2, mod), pow(b2, mod - 2, mod)
-    pw = spark.createDataFrame(
+    pw = local_frame(
+        spark,
         [
             (
                 i,
@@ -1555,7 +1558,7 @@ def longest_duplicated_substring(
     lo = _kary_search(_probe_multi)
     if lo == 0:
         ex.unpersist()
-        return spark.createDataFrame([(0, 0, 0, None)], schema)
+        return local_frame(spark, [(0, 0, 0, None)], schema)
     final = _dup_substrings(lo)
     if len(final.take(1)) == 0:
         # A double-hash collision (≈ n²/2^62) inflated the converged
@@ -1564,7 +1567,7 @@ def longest_duplicated_substring(
         nmax = lo - 1
         if nmax == 0:
             ex.unpersist()
-            return spark.createDataFrame([(0, 0, 0, None)], schema)
+            return local_frame(spark, [(0, 0, 0, None)], schema)
 
         def _probe_verified(lengths: list[int]) -> set[int]:
             return {
@@ -1576,11 +1579,12 @@ def longest_duplicated_substring(
         lo = _kary_search(_probe_verified)
         if lo == 0:
             ex.unpersist()
-            return spark.createDataFrame([(0, 0, 0, None)], schema)
+            return local_frame(spark, [(0, 0, 0, None)], schema)
         final = _dup_substrings(lo)
     n_distinct, chosen, n_occ = _lds_summarize(final)
     ex.unpersist()
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(lo, n_distinct, n_occ, chosen)], schema
     )
 

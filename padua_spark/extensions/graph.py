@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from padua_spark.io_utils import local_frame
+
 
 def connected_components(
     edges: DataFrame,
@@ -135,7 +137,7 @@ def connected_components(
                 StructField("component", node_type),
             ]
         )
-        result = edges.sparkSession.createDataFrame(out_rows, schema)
+        result = local_frame(edges.sparkSession, out_rows, schema)
         sym.unpersist()
         return result
     # seed each node with min(node, neighbors) — algebraically the

@@ -85,7 +85,6 @@ def extract_features(
     id_col: str = "media_id",
     content_col: str = "content",
     n_features: int = 8,
-    batch_size_conf: str | None = "10000",
 ) -> DataFrame:
     """Feature extraction as a ``mapInPandas`` stage: one Arrow batch in,
     one feature frame out; no shuffle, scales linearly with partitions.
@@ -93,11 +92,6 @@ def extract_features(
     With a real decoder the body is the only place that changes — the
     schema, batching and distribution stay as tested here.
     """
-    spark = media.sparkSession
-    if batch_size_conf:
-        spark.conf.set(
-            "spark.sql.execution.arrow.maxRecordsPerBatch", batch_size_conf
-        )
 
     def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 
 from padua_spark.extensions.dedup import MOD
 from padua_spark.extensions.text import STOPWORDS, tokens
+from padua_spark.io_utils import local_frame
 
 #: Knuth multiplicative constant for the deterministic weight table.
 _KNUTH = 2654435761
@@ -645,7 +646,8 @@ def benford_first_digit(
         .agg(F.count(F.lit(1)).alias("n_obs"))
     )
     spark = df.sparkSession
-    all_digits = spark.createDataFrame(
+    all_digits = local_frame(
+        spark,
         [(d, math.log10(1.0 + 1.0 / d)) for d in range(1, 10)],
         "digit long, p_benford double",
     )
@@ -701,7 +703,8 @@ def chi2_gof(
         exp_n = total / k.cast("double")
     else:
         spark = df.sparkSession
-        exp_df = spark.createDataFrame(
+        exp_df = local_frame(
+            spark,
             [(str(c), float(p)) for c, p in sorted(expected.items())],
             "_cat string, _p double",
         )

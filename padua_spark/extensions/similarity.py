@@ -16,6 +16,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from padua_spark.functions.scalar import _IH_M
+from padua_spark.io_utils import local_frame
 
 
 def _as_double(vec: Column) -> Column:
@@ -828,8 +829,8 @@ def kmeans_quantized(
             (cl, [float(s) / float(n) for s in sums])
             for cl, sums, n in state
         ]
-        cents_df = spark.createDataFrame(
-            rows, "cl int, m array<double>"
+        cents_df = local_frame(
+            spark, rows, "cl int, m array<double>"
         )
         scored = q.crossJoin(F.broadcast(cents_df)).select(
             id_col,
@@ -966,8 +967,8 @@ def write_ivf_partitioned(
     """
     cents_lazy = ivf_centroids(df, id_col, vec_col, n_cells, n_iter)
     spark = df.sparkSession
-    cents = spark.createDataFrame(
-        cents_lazy.collect(), schema=cents_lazy.schema
+    cents = local_frame(
+        spark, cents_lazy.collect(), schema=cents_lazy.schema
     )
     assigned = ivf_assign(df, id_col, vec_col, cents)
     out = assigned.join(
@@ -1216,8 +1217,8 @@ def ivfpq_build(
     """
     spark = df.sparkSession
     cents_lazy = ivf_centroids(df, id_col, vec_col, n_cells)
-    cents = spark.createDataFrame(
-        cents_lazy.collect(), schema=cents_lazy.schema
+    cents = local_frame(
+        spark, cents_lazy.collect(), schema=cents_lazy.schema
     )
     assigned = ivf_assign(df, id_col, vec_col, cents)
     v = _as_double(F.col(vec_col))
@@ -1880,7 +1881,7 @@ def mmr_rerank(
         )
     )
     if not rows:
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     ids = [r["_id"] for r in rows]
     scores = np.array([r["_score"] for r in rows], dtype=np.float64)
     mat = np.array([r["_m"] for r in rows], dtype=np.int64)
@@ -1921,7 +1922,7 @@ def mmr_rerank(
         with np.errstate(invalid="ignore", divide="ignore"):
             sims = np.where(denom > 0, dots / denom, 0.0)
         max_sim = np.maximum(max_sim, sims)
-    return spark.createDataFrame(out, schema)
+    return local_frame(spark, out, schema)
 
 
 def hard_negative_mining(

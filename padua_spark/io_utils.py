@@ -1,4 +1,5 @@
-"""Storage-layout helpers for co-located joins at scale.
+"""Storage-layout helpers for co-located joins at scale, plus the one
+way the engine turns driver-side rows into a frame (:func:`local_frame`).
 
 Bucketing pre-shuffles a table ONCE at write time; subsequent joins and
 aggregations on the bucket key read co-located data and skip the
@@ -9,7 +10,49 @@ it (every §2.6 stat operator shuffles on that key otherwise).
 
 from __future__ import annotations
 
+from collections.abc import Iterable
+
 from pyspark.sql import DataFrame
+from pyspark.sql.types import DataType, StructType
+
+
+def local_frame(
+    spark, rows: Iterable[tuple], schema: StructType | str
+) -> DataFrame:
+    """Driver-side rows (tuples or Rows, positional) as a JVM
+    ``LocalRelation``, typed exactly by ``schema`` (a StructType or a
+    DDL string such as ``"n bigint, p double"``).
+
+    The rows become one ``pyarrow.Table`` cast to the schema's Arrow
+    types, handed to ``createDataFrame``. A plain-list
+    ``createDataFrame`` instead builds a ``LogicalRDD`` over a
+    PythonRDD: its first use starts a second Python daemon plus one
+    worker per core, beside the Arrow worker pool the UDFs already
+    use, and its size estimate is effectively unbounded. The
+    LocalRelation starts no Python worker, runs no job to collect,
+    carries exact size stats, and needs no Arrow session conf.
+
+    Python ints may fill double columns; numpy scalars and ``None``
+    are accepted in any column. Every engine-side driver frame goes
+    through here (tests/test_units.py lints for stray
+    ``createDataFrame`` calls).
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = DataType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    rows = list(rows)
+    columns = (
+        list(zip(*rows, strict=True)) if rows else [()] * len(schema)
+    )
+    arrays = [
+        pa.array(col, type=f.type)
+        for col, f in zip(columns, arrow_schema, strict=True)
+    ]
+    table = pa.Table.from_arrays(arrays, schema=arrow_schema)
+    return spark.createDataFrame(table, schema)
 
 
 def spread_narrow_scan(df: DataFrame, min_partitions: int | None = None) -> DataFrame:

@@ -19,8 +19,10 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 from padua_spark.functions.scalar import protein_ids
+from padua_spark.io_utils import local_frame
 
 
 def collect_distinct_ids(
@@ -68,7 +70,11 @@ def go_enrichment(
 
     rows = list(csv.reader(io.StringIO(tsv), delimiter="\t"))
     header, data = rows[0], rows[1:]
-    res = spark.createDataFrame(data, header)
+    res = local_frame(
+        spark,
+        data,
+        StructType([StructField(h, StringType()) for h in header]),
+    )
     res = res.withColumn("P", F.col("P").cast("double")).withColumn(
         "FDR", F.col("FDR").cast("double")
     )
@@ -109,8 +115,15 @@ def uniprot_mapping_join(
     ]
     mapping = fetch(ids)
     spark = df.sparkSession
-    mdf = spark.createDataFrame(
-        list(mapping.items()), [id_col, mapped_col]
+    mdf = local_frame(
+        spark,
+        list(mapping.items()),
+        StructType(
+            [
+                StructField(id_col, df.schema[id_col].dataType),
+                StructField(mapped_col, StringType()),
+            ]
+        ),
     )
     return df.join(F.broadcast(mdf), on=id_col, how="left")
 

@@ -30,8 +30,9 @@ import numpy as np
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
-from padua_spark.io_utils import track_cached
+from padua_spark.io_utils import local_frame, track_cached
 
 # nipals_pls is called from executor-side closures (impute_pls) —
 # serialize this module by value for foreign-cwd drivers (see
@@ -67,6 +68,21 @@ def _sample_cross_products(
         left.join(right, on=feature_cols)
         .groupBy("sample_x", "sample_y")
         .agg(F.sum(F.col("_vx") * F.col("_vy")).alias("xy"))
+    )
+
+
+def _sample_pc_schema(
+    df: DataFrame, sample_col: str, value_col: str
+) -> StructType:
+    """(sample, pc, value) schema of the per-sample component tables
+    pca/pls_gram build driver-side; the sample column keeps ``df``'s
+    type."""
+    return StructType(
+        [
+            StructField(sample_col, df.schema[sample_col].dataType),
+            StructField("pc", LongType()),
+            StructField(value_col, DoubleType()),
+        ]
     )
 
 
@@ -154,8 +170,8 @@ def pca(
                 (s, c + 1, float(evecs[idx[s], c] * sing[c]))
             )
     spark = df.sparkSession
-    scores_df = spark.createDataFrame(
-        scores_rows, [sample_col, "pc", "score"]
+    scores_df = local_frame(
+        spark, scores_rows, _sample_pc_schema(df, sample_col, "score")
     )
     # weights: V[f, c] = Σ_s X[f, s]·U[s, c]/S_c — distributed join with
     # the broadcast U/S table.
@@ -164,7 +180,9 @@ def pca(
         for c in range(k):
             if sing[c] > 0:
                 u_rows.append((s, c + 1, float(evecs[idx[s], c] / sing[c])))
-    u_df = spark.createDataFrame(u_rows, [sample_col, "pc", "_u"])
+    u_df = local_frame(
+        spark, u_rows, _sample_pc_schema(df, sample_col, "_u")
+    )
     weights_df = (
         filled.join(F.broadcast(u_df), on=sample_col)
         .groupBy(*feature_cols, "pc")
@@ -406,13 +424,15 @@ def pls_gram(
     scores_rows = [
         (s, c + 1, float(T[idx[s], c])) for s in samples for c in range(k)
     ]
-    scores_df = spark.createDataFrame(
-        scores_rows, [sample_col, "pc", "score"]
+    scores_df = local_frame(
+        spark, scores_rows, _sample_pc_schema(df, sample_col, "score")
     )
     r_rows = [
         (s, c + 1, float(R[idx[s], c])) for s in samples for c in range(k)
     ]
-    r_df = spark.createDataFrame(r_rows, [sample_col, "pc", "_r"])
+    r_df = local_frame(
+        spark, r_rows, _sample_pc_schema(df, sample_col, "_r")
+    )
     weights_df = (
         filled.join(F.broadcast(r_df), on=sample_col)
         .groupBy(*feature_cols, "pc")
@@ -560,7 +580,17 @@ def cluster_timecourse_means(
     (cluster, group levels) distributed."""
     spark = df.sparkSession
     items = [(k, int(v)) for k, v in cluster_map.items()]
-    cdf = spark.createDataFrame(items, [*feature_cols, "cluster"])
+    key = feature_cols[0]
+    cdf = local_frame(
+        spark,
+        items,
+        StructType(
+            [
+                StructField(key, df.schema[key].dataType),
+                StructField("cluster", LongType()),
+            ]
+        ),
+    )
     return (
         df.join(F.broadcast(cdf), on=feature_cols)
         .groupBy("cluster", *group_cols)
@@ -688,8 +718,8 @@ def logistic_regression(
         (names[i], float(beta[i]), float(np.sqrt(cov[i, i])))
         for i in range(p)
     ]
-    out = spark.createDataFrame(
-        rows, "feature string, _coef double, _se double"
+    out = local_frame(
+        spark, rows, "feature string, _coef double, _se double"
     )
     z = F.col("_coef") / F.col("_se")
     return out.select(
@@ -783,7 +813,8 @@ def ols_regression(
     else:
         ses = [None] * p
     spark = df.sparkSession
-    out = spark.createDataFrame(
+    out = local_frame(
+        spark,
         [(names[i], float(beta[i]), ses[i]) for i in range(p)],
         "feature string, _coef double, _se double",
     )

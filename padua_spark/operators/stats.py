@@ -25,6 +25,7 @@ from padua_spark.functions.distributions import (
     f_sf_udf,
     t_sf_udf,
 )
+from padua_spark.io_utils import local_frame
 
 
 def _group_value(group_col: str, group, value_col: str) -> Column:
@@ -2964,8 +2965,8 @@ def cox_ph(
         (feature_cols[i], float(beta[i]), float(np.sqrt(cov[i, i])))
         for i in range(p)
     ]
-    out = spark.createDataFrame(
-        rows, "feature string, _coef double, _se double"
+    out = local_frame(
+        spark, rows, "feature string, _coef double, _se double"
     )
     z = F.col("_coef") / F.col("_se")
     return out.select(
@@ -8418,7 +8419,8 @@ def stuart_maxwell(
         )
     spark = df.sparkSession
     if k < 2:
-        out = spark.createDataFrame(
+        out = local_frame(
+            spark,
             [(int(sum(r["_c"] for r in rows)), k, None, 0, 1.0)],
             "n bigint, k_categories int, chi2 double, df int, "
             "p_value double",
@@ -8452,7 +8454,8 @@ def stuart_maxwell(
             from padua_spark.functions.distributions import chi2_sf
 
             p = float(chi2_sf(chi2, k - 1))
-    out = spark.createDataFrame(
+    out = local_frame(
+        spark,
         [(
             n, k,
             None if chi2 is None else round(chi2, 6),
@@ -10048,7 +10051,7 @@ def hodges_lehmann_shift(
         if conf_level is not None:
             schema += ", ci_lo double, ci_hi double"
             row += [None, None]
-        out = spark.createDataFrame([tuple(row)], schema)
+        out = local_frame(spark, [tuple(row)], schema)
         cells.unpersist()
         return out
     va = cells.where(F.col("_isa")).select(
@@ -10172,7 +10175,8 @@ def hodges_lehmann_pseudomedian(
     spark = df.sparkSession
     if n == 0:
         cells.unpersist()
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [(0, 0, None)],
             "n bigint, n_pairs bigint, pseudomedian double",
         )
@@ -10961,7 +10965,8 @@ def control_chart_limits(
     )
     row = agg.collect()[0]
     if row["n_subgroups"] == 0:
-        return df.sparkSession.createDataFrame(
+        return local_frame(
+            df.sparkSession,
             [(0, None, None, None, None, None, None, None, None,
               None)],
             "n_subgroups bigint, n_min bigint, n_max bigint, "

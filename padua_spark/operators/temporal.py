@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from padua_spark.io_utils import local_frame
+
 
 def asof_join(
     left: DataFrame,
@@ -635,7 +637,8 @@ def markov_attribution(
         )
     tot = sum(removals.values())
     spark = transitions.sparkSession
-    out = spark.createDataFrame(
+    out = local_frame(
+        spark,
         [
             (
                 c,
@@ -3146,6 +3149,10 @@ def hurst_rs(
     # a subset of the clustering keys), so the 5 window sorts run
     # exchange-free. Parallelism is unchanged — the row_number window
     # upstream already serializes each group into one partition.
+    # Caveat: the same key also caps each scale's window sort at group
+    # cardinality — with few groups (3 at sf10) the per-scale passes
+    # run on that many tasks and the sf1->sf10 exponent sits at about
+    # 0.96-0.99; a (group, _blk) shuffle would parallelize them there.
     rep = stepped.repartition(*group_cols) if group_cols else stepped
     scale_frames = []
     for m in sizes:

@@ -251,3 +251,16 @@ def test_synthesize_image_bytes_round_trip_python_replica(spark):
             r["format"], r["width"], r["height"], r["bit_depth"],
             r["n_bytes"],
         ) == exp, f"id {i}"
+
+
+def test_extract_features_leaves_session_conf_untouched(spark):
+    """Building and sinking the feature stage sets no session conf
+    (it used to pin spark.sql.execution.arrow.maxRecordsPerBatch
+    session-wide)."""
+    df = spark.createDataFrame(
+        [(i, f"doc {i}") for i in range(20)], ["doc_id", "text"]
+    )
+    before = dict(spark.conf.getAll)
+    media = text_as_media(df, "doc_id", "text")
+    extract_features(media, n_features=4).collect()
+    assert dict(spark.conf.getAll) == before

@@ -13088,3 +13088,132 @@ def test_bench_ledger_filters_medians_to_headline_cpus(tmp_path):
     assert doc["n_passes_total"] == 3
     assert doc["median_queries"]["a"] == 1.1       # 8-core 9.0 excluded
     assert doc["median_total"] == 1.1
+
+
+def test_local_frame_exact_types_nulls_and_numpy_scalars(spark):
+    """local_frame keeps the declared type of every column — int,
+    bigint, double, string, boolean, decimal, array<double> — with
+    NULLs in each, numpy scalars, and Python ints in double columns."""
+    from decimal import Decimal
+
+    from pyspark.sql.types import (
+        ArrayType,
+        BooleanType,
+        DecimalType,
+        DoubleType,
+        IntegerType,
+        LongType,
+        StringType,
+        StructField,
+        StructType,
+    )
+
+    from padua_spark.io_utils import local_frame
+
+    schema = StructType(
+        [
+            StructField("i", IntegerType()),
+            StructField("b", LongType()),
+            StructField("d", DoubleType()),
+            StructField("s", StringType()),
+            StructField("f", BooleanType()),
+            StructField("m", DecimalType(38, 18)),
+            StructField("a", ArrayType(DoubleType())),
+        ]
+    )
+    rows = [
+        (1, 2**40, 1.5, "x", True, Decimal("1.25"), [1.0, 2.5]),
+        (None, None, None, None, None, None, None),
+        (np.int32(3), np.int64(4), 7, None, np.bool_(False), None,
+         np.array([0.5])),
+        (4, 5, np.float64(2.5), "z", None, Decimal("-3"), [None, 1]),
+    ]
+    df = local_frame(spark, rows, schema)
+    assert df.schema == schema
+    got = [tuple(r) for r in df.collect()]
+    assert got == [
+        (1, 2**40, 1.5, "x", True, Decimal("1.25"), [1.0, 2.5]),
+        (None, None, None, None, None, None, None),
+        (3, 4, 7.0, None, False, None, [0.5]),
+        (4, 5, 2.5, "z", None, Decimal("-3"), [None, 1.0]),
+    ]
+    assert isinstance(got[2][2], float)
+    ddl = local_frame(spark, [(1, 2.0)], "n bigint, p double")
+    assert ddl.schema == StructType(
+        [StructField("n", LongType()), StructField("p", DoubleType())]
+    )
+    with pytest.raises(ValueError):
+        local_frame(spark, [(1, 2.0), (1,)], "n bigint, p double")
+
+
+def test_local_frame_empty_rows_keep_schema(spark):
+    from padua_spark.io_utils import local_frame
+
+    schema = "rank int, id string, score double, v array<double>"
+    df = local_frame(spark, [], schema)
+    assert df.collect() == []
+    assert [(f.name, f.dataType.simpleString()) for f in df.schema] == [
+        ("rank", "int"), ("id", "string"), ("score", "double"),
+        ("v", "array<double>"),
+    ]
+
+
+def test_local_frame_is_a_local_relation_and_collects_without_jobs(spark):
+    """The plan is a JVM LocalRelation (no LogicalRDD over a PythonRDD,
+    hence no second Python worker pool), and collecting it schedules
+    no Spark job at all."""
+    from padua_spark.io_utils import local_frame
+
+    df = local_frame(
+        spark, [(i, float(i)) for i in range(100)], "k int, v double"
+    )
+    opt = df._jdf.queryExecution().optimizedPlan().toString()
+    assert "LocalRelation" in opt and "LogicalRDD" not in opt, opt
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    sc.setJobGroup("local_frame_collect", "local_frame_collect")
+    rows = df.collect()
+    # control: an action that does run a job registers under its group
+    sc.setJobGroup("local_frame_control", "local_frame_control")
+    spark.range(8).groupBy((F.col("id") % 2).alias("g")).count().collect()
+    sc.setJobGroup("other", "other")
+    assert len(rows) == 100
+    assert tracker.getJobIdsForGroup("local_frame_collect") == []
+    assert tracker.getJobIdsForGroup("local_frame_control") != []
+
+
+def test_no_create_dataframe_outside_local_frame():
+    """Lint: engine code builds driver-side frames only through
+    io_utils.local_frame — a stray ``.createDataFrame(`` call brings
+    back the PythonRDD path and its second Python worker pool."""
+    import ast
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parents[1]
+    files = sorted((root / "padua_spark").rglob("*.py"))
+    files.append(root / "__spark_entry__.py")
+    helper = root / "padua_spark" / "io_utils.py"
+    offenders, allowed_seen = [], 0
+    for path in files:
+        tree = ast.parse(path.read_text(), str(path))
+        allowed = set()
+        if path == helper:
+            for node in ast.walk(tree):
+                if (isinstance(node, ast.FunctionDef)
+                        and node.name == "local_frame"):
+                    allowed = {id(n) for n in ast.walk(node)}
+        for node in ast.walk(tree):
+            if (isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "createDataFrame"):
+                if id(node) in allowed:
+                    allowed_seen += 1
+                else:
+                    offenders.append(
+                        f"{path.relative_to(root)}:{node.lineno}"
+                    )
+    assert allowed_seen == 1  # the helper itself was scanned
+    assert not offenders, (
+        "createDataFrame outside io_utils.local_frame: "
+        + ", ".join(offenders)
+    )
