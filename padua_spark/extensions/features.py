@@ -145,7 +145,6 @@ def rfm_segments(
     ts_col: str,
     monetary_col: str,
     n_bins: int = 5,
-    small_domain_threshold: int | None = None,
 ) -> DataFrame:
     """RFM (recency / frequency / monetary) segmentation — the
     classic customer-value grid, computed with EXACT distributed
@@ -217,9 +216,7 @@ def rfm_segments(
         per = users.groupBy(F.col(metric).alias("_v")).agg(
             F.count(F.lit(1)).cast("bigint").alias("_c")
         )
-        stepped = _stepped_running_counts(
-            per, "_v", ["_c"], small_domain_threshold
-        )
+        stepped = _stepped_running_counts(per, "_v", ["_c"])
         aggs = []
         for i, q in enumerate(qs):
             rank = F.ceil(
@@ -277,7 +274,6 @@ def gains_table(
     score_col: str,
     label_col: str,
     n_bins: int = 10,
-    small_domain_threshold: int | None = None,
 ) -> DataFrame:
     """Lift / gains table — the model-evaluation decile report ("if we
     act on the top 10% by score, what fraction of positives do we
@@ -314,9 +310,7 @@ def gains_table(
     per = base.groupBy(F.col("_s").alias("_v")).agg(
         F.count(F.lit(1)).cast("bigint").alias("_c")
     )
-    stepped = _stepped_running_counts(
-        per, "_v", ["_c"], small_domain_threshold
-    )
+    stepped = _stepped_running_counts(per, "_v", ["_c"])
     qs = [i / n_bins for i in range(1, n_bins)]
     aggs = []
     for i, q in enumerate(qs):
@@ -639,7 +633,6 @@ def hosmer_lemeshow(
     prob_col: str,
     label_col: str,
     n_bins: int = 10,
-    small_domain_threshold: int | None = None,
 ) -> DataFrame:
     """Hosmer–Lemeshow goodness-of-fit test for binary-probability
     calibration — the classical binned chi-square behind "is this
@@ -687,9 +680,7 @@ def hosmer_lemeshow(
     per = base.groupBy(F.col("_p").alias("_v")).agg(
         F.count(F.lit(1)).cast("bigint").alias("_c")
     )
-    stepped = _stepped_running_counts(
-        per, "_v", ["_c"], small_domain_threshold
-    )
+    stepped = _stepped_running_counts(per, "_v", ["_c"])
     k = int(n_bins)
     qs = [i / k for i in range(1, k)]
     aggs = []

@@ -32,6 +32,12 @@ from pyspark.sql import functions as F
 
 from padua_spark.io_utils import local_frame
 
+#: Node (edge, for the triangle family) count at/below which the graph
+#: operators broadcast that join side — 2M rows of (id, double) is a few
+#: tens of MB — instead of the at-scale shuffle joins with per-round
+#: ``localCheckpoint``. Tests set it to 0 to pin the at-scale plan.
+BROADCAST_GRAPH_ROWS = 2_000_000
+
 
 def connected_components(
     edges: DataFrame,
@@ -281,7 +287,6 @@ def pagerank(
     k_iters: int = 5,
     damping: float = 0.85,
     edges_distinct: bool = False,
-    broadcast_ranks_threshold: int = 2_000_000,
 ) -> DataFrame:
     """Fixed-iteration PageRank over a directed edge list — importance
     propagation for link-graph curation (seed-quality spreading along
@@ -301,7 +306,7 @@ def pagerank(
     ``io_utils.unpersist_intermediates``), and joined against the
     rank frame each iteration. N is one scalar count (driver-side,
     legitimate) — and it doubles as the join-strategy pivot: when
-    ``n_nodes <= broadcast_ranks_threshold`` the rank recurrence is
+    ``n_nodes <= BROADCAST_GRAPH_ROWS`` the rank recurrence is
     FUSED into one lazy plan — ``rank_t(u) = base + d·in_t(u)`` is
     inlined into the contribution join, so each iteration is a
     broadcast join of the previous node-sized incoming-mass frame
@@ -351,7 +356,7 @@ def pagerank(
     # so the full edge list is never shuffled to build contrib
     # (measured: contrib stage 1.65→0.80 s on the sf0.1 trade graph).
     n_nodes = nodes.count()
-    small = n_nodes <= broadcast_ranks_threshold
+    small = n_nodes <= BROADCAST_GRAPH_ROWS
     outdeg = e.groupBy("_s").agg(F.count(F.lit(1)).alias("_o"))
     eprobe = e
     if small:
@@ -442,7 +447,6 @@ def triangle_count(
     src_col: str = "id_a",
     dst_col: str = "id_b",
     persist_oriented: bool = True,
-    broadcast_edges_threshold: int = 2_000_000,
 ) -> DataFrame:
     """Global triangle count and transitivity of an undirected graph
     via degree orientation (the MapReduce-era standard that makes the
@@ -464,7 +468,7 @@ def triangle_count(
     ``transitivity = 3·triangles / wedges`` (NULL when wedge-free).
 
     Small-graph pivot (the pagerank/label_propagation lever): when the
-    cleaned edge frame has at most ``broadcast_edges_threshold`` rows
+    cleaned edge frame has at most :data:`BROADCAST_GRAPH_ROWS` rows
     (one count on the already-persisted frame — the edge count the
     output needs anyway), the degree/wedge/closing join sides are
     broadcast and the probe side coalesced to cores/4: a
@@ -497,7 +501,7 @@ def triangle_count(
         from pyspark import StorageLevel
 
         e = e.persist(StorageLevel.MEMORY_AND_DISK)
-        small = e.count() <= broadcast_edges_threshold
+        small = e.count() <= BROADCAST_GRAPH_ROWS
     deg = (
         e.select(F.col("_u").alias("_x"))
         .unionAll(e.select(F.col("_v").alias("_x")))
@@ -647,7 +651,6 @@ def label_propagation(
     n_rounds: int = 4,
     src: str = "src",
     dst: str = "dst",
-    broadcast_labels_threshold: int = 2_000_000,
 ) -> DataFrame:
     """Community detection by synchronous label propagation (Raghavan
     et al. 2007) with a DETERMINISTIC schedule: every node starts
@@ -668,7 +671,7 @@ def label_propagation(
     (node, label) count + one argmax aggregation — all shuffles on
     the node key; no windows over data-sized frames, no driver
     collect. When the node count is at most
-    ``broadcast_labels_threshold`` (one count job up front — the
+    :data:`BROADCAST_GRAPH_ROWS` (one count job up front — the
     :func:`pagerank` pivot) the label frame is BROADCAST into the
     per-round join so the symmetrized edge frame is never reshuffled;
     above it the canonical shuffle join runs. Each round's label
@@ -689,7 +692,7 @@ def label_propagation(
         .localCheckpoint(eager=False)
     )
     nodes = sym.select(F.col("_s").alias("_n")).distinct()
-    small = nodes.count() <= broadcast_labels_threshold
+    small = nodes.count() <= BROADCAST_GRAPH_ROWS
     sprobe = sym
     if small:
         # Small-graph probe side: the symmetrized edge frame carries
@@ -825,7 +828,6 @@ def hits(
     src: str = "src",
     dst: str = "dst",
     k_iters: int = 3,
-    broadcast_scores_threshold: int = 2_000_000,
 ) -> DataFrame:
     """Fixed-iteration HITS (Kleinberg 1999) — hub and authority
     scores over a directed edge list, the query-independent companion
@@ -842,7 +844,7 @@ def hits(
 
     Scale shape: the distinct edge frame is persisted once and
     joined per half-step against a NODE-sized score frame. When the
-    larger node side is at most ``broadcast_scores_threshold`` rows
+    larger node side is at most :data:`BROADCAST_GRAPH_ROWS` rows
     (one count job up front — the :func:`pagerank` pivot) the score
     frames are BROADCAST, so the edge frame is never reshuffled: the
     only per-half-step shuffle is the map-side-combined partial sums
@@ -876,7 +878,7 @@ def hits(
             F.count_distinct("_d").alias("_nd"),
         ).collect()[0][:2]
     )
-    small = n_side <= broadcast_scores_threshold
+    small = n_side <= BROADCAST_GRAPH_ROWS
     eprobe = e
     if small:
         # Small-graph probe side: coalesce the persisted edge frame to
@@ -945,7 +947,6 @@ def local_clustering(
     edges: DataFrame,
     src_col: str = "id_a",
     dst_col: str = "id_b",
-    broadcast_edges_threshold: int = 2_000_000,
 ) -> DataFrame:
     """Per-node local clustering coefficient of an undirected graph —
     ``cc(v) = 2·T(v) / (deg(v)·(deg(v)−1))`` where ``T(v)`` is the
@@ -966,7 +967,7 @@ def local_clustering(
 
     Beyond the reference; standard per Watts & Strogatz 1998.
     Small-graph pivot as in :func:`triangle_count`: at most
-    ``broadcast_edges_threshold`` cleaned edges (one count on the
+    :data:`BROADCAST_GRAPH_ROWS` cleaned edges (one count on the
     already-persisted frame) broadcasts the degree/wedge/closing join
     sides and coalesces the probe side to cores/4; the at-scale path
     is unchanged.
@@ -984,7 +985,7 @@ def local_clustering(
         .distinct()
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    small = e.count() <= broadcast_edges_threshold
+    small = e.count() <= BROADCAST_GRAPH_ROWS
     deg = (
         e.select(F.col("_u").alias("_x"))
         .unionAll(e.select(F.col("_v").alias("_x")))
@@ -1254,7 +1255,6 @@ def personalized_pagerank(
     k_iters: int = 5,
     damping: float = 0.85,
     edges_distinct: bool = False,
-    broadcast_ranks_threshold: int = 2_000_000,
 ) -> DataFrame:
     """Fixed-iteration PERSONALIZED PageRank — importance relative to
     a seed set (Haveliwala 2002): the restart mass lands uniformly on
@@ -1275,7 +1275,7 @@ def personalized_pagerank(
     contribution table (with the seed flag FUSED onto its source
     column via one broadcast join at build time, so the restart-mass
     term needs no per-iteration seed lookup), one count for N/|S|;
-    below ``broadcast_ranks_threshold`` nodes the rank recurrence is
+    below :data:`BROADCAST_GRAPH_ROWS` nodes the rank recurrence is
     inlined into the contribution join (one broadcast join + one
     partial-agg shuffle per iteration, no node join, no checkpoint
     barrier — one fused job); above it the canonical shuffle join
@@ -1327,7 +1327,7 @@ def personalized_pagerank(
         F.sum(F.col("is_seed").cast("int")).alias("_ns"),
     ).collect()[0]
     n_nodes, n_seeds = row["_n"], row["_ns"] or 0
-    small = n_nodes <= broadcast_ranks_threshold
+    small = n_nodes <= BROADCAST_GRAPH_ROWS
     outdeg = e.groupBy("_s").agg(F.count(F.lit(1)).alias("_o"))
     eprobe = e
     if small:
@@ -1567,7 +1567,6 @@ def katz_centrality(
     alpha: float = 0.01,
     beta: float = 1.0,
     edges_distinct: bool = False,
-    broadcast_ranks_threshold: int = 2_000_000,
 ) -> DataFrame:
     """Fixed-iteration Katz centrality — attenuated path counting:
     ``x_{t+1}(v) = β + α·Σ_{u→v} x_t(u)`` from ``x₀ = β`` for exactly
@@ -1580,7 +1579,7 @@ def katz_centrality(
     (documented, same convention as :func:`pagerank`'s fixed k).
 
     Scale shape: identical to :func:`pagerank`'s — below
-    ``broadcast_ranks_threshold`` nodes the recurrence is inlined as
+    :data:`BROADCAST_GRAPH_ROWS` nodes the recurrence is inlined as
     one broadcast join + one map-side-combined aggregation per
     iteration over the persisted (cores/4-coalesced) edge list;
     above it the canonical shuffle join with per-iteration
@@ -1607,7 +1606,7 @@ def katz_centrality(
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     n_nodes = nodes.count()
-    small = n_nodes <= broadcast_ranks_threshold
+    small = n_nodes <= BROADCAST_GRAPH_ROWS
     eprobe = e
     if small:
         # same task-count lever as pagerank (round 13)

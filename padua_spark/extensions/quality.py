@@ -522,7 +522,6 @@ def cohens_kappa(
 def gini_concentration(
     df: DataFrame,
     value_col: str,
-    small_domain_threshold: int | None = None,
     exact: bool = True,
 ) -> DataFrame:
     """Gini coefficient of a non-negative numeric column — the
@@ -585,9 +584,7 @@ def gini_concentration(
         .groupBy(v.alias("_v"))
         .agg(F.count(F.lit(1)).alias("_c"))
     )
-    stepped = _stepped_running_counts(
-        per, "_v", ["_c"], small_domain_threshold
-    )
+    stepped = _stepped_running_counts(per, "_v", ["_c"])
     two_rbar = 2 * (F.col("_c_run") - F.col("_c")) + F.col("_c") + 1
     dec = "decimal(38,0)" if exact else "double"
     agg = stepped.agg(
@@ -885,7 +882,6 @@ def split_conformal_intervals(
     pred_col: str,
     actual_col: str,
     alpha: float = 0.1,
-    small_domain_threshold: int | None = None,
 ) -> DataFrame:
     """Split conformal prediction intervals — distribution-free
     finite-sample coverage for ANY point predictor (Vovk et al.;
@@ -916,9 +912,7 @@ def split_conformal_intervals(
         .groupBy(resid.alias("_v"))
         .agg(F.count(F.lit(1)).alias("_c"))
     )
-    stepped = _stepped_running_counts(
-        per, "_v", ["_c"], small_domain_threshold
-    )
+    stepped = _stepped_running_counts(per, "_v", ["_c"])
     k = F.least(
         F.ceil(
             (F.col("_c_tot") + 1).cast("double") * F.lit(1.0 - alpha)
@@ -945,7 +939,6 @@ def qini_auuc(
     treat_col: str,
     outcome_col: str,
     score_col: str,
-    small_domain_threshold: int | None = None,
 ) -> DataFrame:
     """Qini curve area for uplift-model evaluation — "does targeting
     by this score actually concentrate incremental outcomes?" (the
@@ -988,10 +981,7 @@ def qini_auuc(
         F.sum(F.when(F.col("_t") == 0, F.col("_y")).otherwise(0.0))
         .alias("_yc"),
     )
-    stepped = _stepped_running_counts(
-        per, "_ns", ["_nt", "_nc", "_yt", "_yc"],
-        small_domain_threshold,
-    )
+    stepped = _stepped_running_counts(per, "_ns", ["_nt", "_nc", "_yt", "_yc"])
     ntot = (F.col("_nt_tot") + F.col("_nc_tot")).cast("double")
 
     def _qini(ntc, ncc, ytc, ycc):
@@ -1682,7 +1672,6 @@ def abc_analysis(
     value_col: str,
     a_threshold: float = 0.8,
     b_threshold: float = 0.95,
-    small_domain_threshold: int | None = None,
 ) -> DataFrame:
     """Pareto ABC classification — the inventory/revenue workhorse
     beside :func:`hhi_concentration`'s single number: rank keys by
@@ -1725,9 +1714,7 @@ def abc_analysis(
     per_val = per_key.groupBy(
         (-F.col("_tot")).alias("_negv")
     ).agg(F.sum("_tot").alias("_mass"))
-    stepped = _stepped_running_counts(
-        per_val, "_negv", ["_mass"], small_domain_threshold
-    )
+    stepped = _stepped_running_counts(per_val, "_negv", ["_mass"])
     classed = stepped.select(
         (-F.col("_negv")).alias("_tot"),
         (F.col("_mass_run") / F.col("_mass_tot")).alias("_cum"),
@@ -1913,7 +1900,6 @@ def category_diversity(
 def lorenz_curve(
     df: DataFrame,
     value_col: str,
-    small_domain_threshold: int | None = None,
 ) -> DataFrame:
     """The Lorenz curve as a TABLE — one point per distinct value
     (ascending) with the cumulative population share and cumulative
@@ -1936,6 +1922,12 @@ def lorenz_curve(
     value ascending: ``(value, n_le, pop_share, value_share_cum,
     gini)``, 6dp (shares 9dp).
 
+    Mass is summed in exact integer micro-units (``floor(v·10⁶ +
+    0.5)`` as ``decimal(38,0)``) and ``Σ trap = Σ c·(2·M_run − m) /
+    (n·M_tot)``, so each share and the Gini is ONE division of exact
+    sums: float sums follow the partition count in their last ulp,
+    which flips 9dp shares that sit on a rounding boundary.
+
     Beyond the reference; standard per Lorenz 1905 / Gastwirth 1972.
     """
     from padua_spark.io_utils import track_cached
@@ -1947,31 +1939,30 @@ def lorenz_curve(
         .groupBy(v.alias("_v"))
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("_c"),
-            F.sum(v).alias("_m"),
+            F.sum(
+                F.floor(v * 1e6 + 0.5).cast("decimal(38,0)")
+            ).alias("_m"),
         )
     )
-    stepped = _stepped_running_counts(
-        per, "_v", ["_c", "_m"], small_domain_threshold
-    )
-    n = F.col("_c_tot").cast("double")
-    tot = F.col("_m_tot")
-    p_lo = (F.col("_c_run") - F.col("_c")).cast("double") / n
-    p_hi = F.col("_c_run").cast("double") / n
-    l_lo = (F.col("_m_run") - F.col("_m")) / tot
-    l_hi = F.col("_m_run") / tot
+    stepped = _stepped_running_counts(per, "_v", ["_c", "_m"])
+
+    def ratio(num, den):
+        return F.col(num).cast("double") / F.col(den).cast("double")
+
     staged = stepped.select(
         F.col("_v").alias("value"),
         F.col("_c_run").cast("bigint").alias("n_le"),
-        p_hi.alias("_p"),
-        l_hi.alias("_l"),
-        ((p_hi - p_lo) * (l_hi + l_lo)).alias("_trap"),
+        ratio("_c_run", "_c_tot").alias("_p"),
+        ratio("_m_run", "_m_tot").alias("_l"),
+        (F.col("_c") * (2 * F.col("_m_run") - F.col("_m"))).alias("_t"),
+        (F.col("_c_tot") * F.col("_m_tot")).alias("_nm"),
     )
-    g = staged.agg(F.sum("_trap").alias("_ts"))
+    g = staged.agg(F.sum("_t").alias("_ts"), F.max("_nm").alias("_nt"))
     out = staged.join(F.broadcast(g)).select(
         "value", "n_le",
         F.round("_p", 9).alias("pop_share"),
         F.round("_l", 9).alias("value_share_cum"),
-        F.round(1.0 - F.col("_ts"), 6).alias("gini"),
+        F.round(1.0 - ratio("_ts", "_nt"), 6).alias("gini"),
     )
     return track_cached(out, *getattr(stepped, "_padua_cached", ()))
 

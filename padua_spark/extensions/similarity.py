@@ -695,6 +695,12 @@ def random_projection(
     )
 
 
+#: k·dims at/below which :func:`kmeans_quantized` embeds its centroids
+#: as a per-row literal array; above it scoring joins a broadcast
+#: k-row centroid frame. Tests set it to 1 to pin the join path.
+KMEANS_LITERAL_CENTROIDS = 4096
+
+
 def kmeans_quantized(
     df: DataFrame,
     id_col: str,
@@ -702,7 +708,6 @@ def kmeans_quantized(
     k: int = 8,
     n_iter: int = 2,
     scale: float = 1_000_000.0,
-    broadcast_threshold: int = 4096,
 ) -> DataFrame:
     """Distributed Lloyd's k-means whose EVERY iteration is
     bit-reproducible across engines — the oracle-checkable refinement
@@ -727,8 +732,8 @@ def kmeans_quantized(
     pattern); the corpus itself is never collected and never
     shuffled except the one stats aggregation per iteration.
 
-    **Scoring path by k·dims** (``broadcast_threshold``): small
-    centroid sets are embedded as a per-row literal array (zero
+    **Scoring path by k·dims** (:data:`KMEANS_LITERAL_CENTROIDS`):
+    small centroid sets are embedded as a per-row literal array (zero
     shuffle, zero join). Above the threshold a k·dims literal
     expression tree becomes a plan-size/codegen hazard (thousands of
     Literal nodes per iteration at IVF-scale k), so scoring switches
@@ -855,7 +860,7 @@ def kmeans_quantized(
 
     _assign = (
         _assign_literal
-        if k * max(dims, 1) <= broadcast_threshold
+        if k * max(dims, 1) <= KMEANS_LITERAL_CENTROIDS
         else _assign_broadcast
     )
 

@@ -1244,7 +1244,6 @@ def heaps_law(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    small_domain_threshold: int | None = None,
 ) -> DataFrame:
     """Heaps'-law vocabulary-growth fit — the corpus-health companion
     to :func:`zipf_slope`: distinct-vocabulary size grows as
@@ -1292,9 +1291,7 @@ def heaps_law(
         F.col("_ctok"),
         F.coalesce("_cnew", F.lit(0)).cast("bigint").alias("_cnew"),
     )
-    stepped = _stepped_running_counts(
-        per, "_id", ["_ctok", "_cnew"], small_domain_threshold
-    )
+    stepped = _stepped_running_counts(per, "_id", ["_ctok", "_cnew"])
     pts = stepped.where(F.col("_ctok_run") > 0).select(
         F.log(F.col("_ctok_run").cast("double")).alias("_x"),
         F.log(F.col("_cnew_run").cast("double")).alias("_y"),
@@ -2430,7 +2427,7 @@ def vocabulary_coverage_curve(
         F.sum("_c").cast("bigint").alias("_mass"),
     )
     stepped = _stepped_running_counts(
-        per, "_negc", ["_ntypes", "_mass"], None
+        per, "_negc", ["_ntypes", "_mass"]
     ).persist()
     branches = []
     for k in ks:

@@ -55,7 +55,7 @@ def local_frame(
     return spark.createDataFrame(table, schema)
 
 
-def spread_narrow_scan(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
+def spread_narrow_scan(df: DataFrame) -> DataFrame:
     """Round-robin repartition a scan that arrived with fewer partitions
     than the session's parallelism — but ONLY then.
 
@@ -74,7 +74,7 @@ def spread_narrow_scan(df: DataFrame, min_partitions: int | None = None) -> Data
     4-5x on the text/embedding operators, e.g. language_id 2.0s->0.4s,
     embedding_near_dup 3.7s->0.8s.
     """
-    target = min_partitions or df.sparkSession.sparkContext.defaultParallelism
+    target = df.sparkSession.sparkContext.defaultParallelism
     # .rdd analyzes the plan (no job); cheap, and callers memoize.
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)

@@ -323,7 +323,6 @@ def levene_stats(
     group_col: str,
     value_col: str,
     center: str = "median",
-    broadcast_centers: bool = False,
 ) -> DataFrame:
     """Brown–Forsythe / Levene homogeneity-of-variance test — the
     assumption check behind every pooled-variance t/ANOVA the
@@ -337,15 +336,13 @@ def levene_stats(
     two-column projection (median) or one aggregation (mean), a join
     back on the (feature, group) key, then the
     :func:`anova_1way_stats` aggregation on |v − center|.
-    ``broadcast_centers`` (default False) lets AQE pick the join
-    strategy from the MEASURED size of the centers side — the safe
-    default at any cardinality, since the centers frame is
-    |features|·|groups| rows and at extreme per-feature scale
-    (millions of features) a forced broadcast would OOM the driver
-    (the winsorize extreme-cardinality precedent). In padua's regime
-    (thousands of features, a handful of groups) AQE converts the
-    join to a broadcast at runtime anyway; pass True to hint it
-    statically when the cardinality is known small. Output =
+    The join carries no broadcast hint: AQE picks the strategy from
+    the MEASURED size of the centers side — safe at any cardinality,
+    since the centers frame is |features|·|groups| rows and at extreme
+    per-feature scale (millions of features) a forced broadcast would
+    OOM the driver (the winsorize extreme-cardinality precedent). In
+    padua's regime (thousands of features, a handful of groups) AQE
+    converts the join to a broadcast at runtime anyway. Output =
     anova_1way_stats schema with ``f_stat`` being Levene's W.
     """
     from padua_spark.operators.normalization import group_medians
@@ -358,9 +355,8 @@ def levene_stats(
         centers = df.filter(v.isNotNull()).groupBy(*keys).agg(
             F.avg(v).alias("_c")
         )
-    c_side = F.broadcast(centers) if broadcast_centers else centers
     dev = (
-        df.join(c_side, on=keys, how="left")
+        df.join(centers, on=keys, how="left")
         .withColumn("_z", F.abs(v - F.col("_c")))
     )
     return anova_1way_stats(dev, feature_cols, group_col, "_z")
@@ -569,6 +565,14 @@ def linregress(
     )
 
 
+#: Distinct-value domains at/below this take the direct
+#: single-partition cumsum (the two-pass distributed machinery — range
+#: repartition, three window specs, broadcast offset join — is pure
+#: overhead when the whole per-value frame fits one task); above it,
+#: the distributed two-pass plan. 32k rows of (value, 2 counts) is
+#: ~1 MB in one window task — far below any skew/executor-memory
+#: concern — while continuous 100 TB domains (|distinct| ~ n) stay on
+#: the scale path. Tests set it to 0 to pin the distributed plan.
 SMALL_ECDF_DOMAIN = 32_768
 
 #: target distinct-value rows per range partition in
@@ -576,13 +580,6 @@ SMALL_ECDF_DOMAIN = 32_768
 #: on a 583k domain; 32 best at 5.8M). Tests shrink this to pin the
 #: distributed plan shape on small fixtures.
 STEPPED_ROWS_PER_PARTITION = 75_000
-"""Distinct-value domains at/below this take the direct
-single-partition cumsum (the two-pass distributed machinery — range
-repartition, three window specs, broadcast offset join — is pure
-overhead when the whole per-value frame fits one task); above it, the
-distributed two-pass plan. 32k rows of (value, 2 counts) is ~1 MB in
-one window task — far below any skew/executor-memory concern — while
-continuous 100 TB domains (|distinct| ~ n) stay on the scale path."""
 
 
 def _ecdf_stepped_counts(
@@ -591,7 +588,6 @@ def _ecdf_stepped_counts(
     value_col: str,
     group_a,
     group_b,
-    small_domain_threshold: int | None = None,
 ) -> DataFrame:
     """Shared ECDF scaffolding for the rank/ECDF statistics (KS,
     Mann–Whitney, Wilcoxon): per-distinct-value conditional counts
@@ -618,11 +614,11 @@ def _ecdf_stepped_counts(
        cumsum = local cumsum + offset.
 
     **Adaptive small-domain shortcut**: the per-value frame is
-    persisted and counted first; at/below ``small_domain_threshold``
-    (default :data:`SMALL_ECDF_DOMAIN`) the cumsum is computed
-    directly with a single-partition window over the tiny persisted
-    frame — same output, none of the two-pass machinery. Pass ``0``
-    to force the distributed plan (the plan tests do).
+    persisted and counted first; at/below :data:`SMALL_ECDF_DOMAIN`
+    the cumsum is computed directly with a single-partition window
+    over the tiny persisted frame — same output, none of the two-pass
+    machinery. Setting the constant to ``0`` forces the distributed
+    plan (the plan tests monkeypatch it).
 
     **Determinism**: on the distributed path the range-partitioned
     frame is persisted and materialized BEFORE its two consumers
@@ -652,9 +648,7 @@ def _ecdf_stepped_counts(
             F.count(F.when(F.col(group_col) == group_b, 1)).alias("_cb"),
         )
     )
-    stepped = _stepped_running_counts(
-        per, "_v", ["_ca", "_cb"], small_domain_threshold
-    )
+    stepped = _stepped_running_counts(per, "_v", ["_ca", "_cb"])
     from padua_spark.io_utils import track_cached
 
     out = stepped.select(
@@ -673,7 +667,6 @@ def _stepped_running_counts(
     per: DataFrame,
     value_col: str,
     count_cols: list[str],
-    small_domain_threshold: int | None = None,
 ) -> DataFrame:
     """Generalized distributed running sums over a per-distinct-value
     counts frame: for each column ``c`` in ``count_cols`` emit
@@ -695,12 +688,7 @@ def _stepped_running_counts(
     other_cols = [c for c in per.columns if c != value_col]
     per = per.persist(StorageLevel.MEMORY_AND_DISK)
     n_domain = per.count()
-    thresh = (
-        SMALL_ECDF_DOMAIN
-        if small_domain_threshold is None
-        else small_domain_threshold
-    )
-    if n_domain <= thresh:
+    if n_domain <= SMALL_ECDF_DOMAIN:
         # |domain|-row frame, bounded by the threshold: the
         # partitionless windows run over ONE small cached task.
         w_loc = Window.orderBy(value_col).rowsBetween(
@@ -791,7 +779,6 @@ def ks_2samp_stat(
     value_col: str,
     group_a,
     group_b,
-    small_domain_threshold: int | None = None,
 ) -> DataFrame:
     """Two-sample Kolmogorov–Smirnov D statistic, fully relational:
     ``D = sup_x |F_a(x) − F_b(x)|`` evaluated at every distinct value
@@ -810,10 +797,7 @@ def ks_2samp_stat(
     """
     from padua_spark.io_utils import track_cached
 
-    stepped = _ecdf_stepped_counts(
-        df, group_col, value_col, group_a, group_b,
-        small_domain_threshold=small_domain_threshold,
-    )
+    stepped = _ecdf_stepped_counts(df, group_col, value_col, group_a, group_b)
     d = F.abs(
         F.col("_fa").cast("double") / F.col("_na").cast("double")
         - F.col("_fb").cast("double") / F.col("_nb").cast("double")
@@ -835,7 +819,6 @@ def mannwhitney_u_stat(
     value_col: str,
     group_a,
     group_b,
-    small_domain_threshold: int | None = None,
 ) -> DataFrame:
     """Mann–Whitney U (rank-sum) statistic with midrank tie handling,
     in EXACT integer arithmetic: for each distinct value the doubled
@@ -853,10 +836,7 @@ def mannwhitney_u_stat(
     from padua_spark.io_utils import track_cached
 
     cnt = F.col("_ca") + F.col("_cb")
-    ecdf = _ecdf_stepped_counts(
-        df, group_col, value_col, group_a, group_b,
-        small_domain_threshold=small_domain_threshold,
-    )
+    ecdf = _ecdf_stepped_counts(df, group_col, value_col, group_a, group_b)
     stepped = ecdf.select(
         "_ca",
         "_cb",
@@ -888,7 +868,6 @@ def wilcoxon_signed_rank_stats(
     value_col: str,
     cond_a,
     cond_b,
-    small_domain_threshold: int | None = None,
 ) -> DataFrame:
     """Wilcoxon signed-rank test — the PAIRED nonparametric test
     completing the battery's 2×2 (t paired/unpaired ↔ Wilcoxon /
@@ -937,10 +916,7 @@ def wilcoxon_signed_rank_stats(
     from padua_spark.io_utils import track_cached
 
     cnt = F.col("_ca") + F.col("_cb")
-    ecdf = _ecdf_stepped_counts(
-        diffs, "_sgn", "_absd", "+", "-",
-        small_domain_threshold=small_domain_threshold,
-    )
+    ecdf = _ecdf_stepped_counts(diffs, "_sgn", "_absd", "+", "-")
     stepped = ecdf.select(
         "_ca",
         "_cb",
@@ -1083,7 +1059,6 @@ def mannwhitney_z_stats(
     value_col: str,
     group_a,
     group_b,
-    small_domain_threshold: int | None = None,
 ) -> DataFrame:
     """Mann–Whitney U with the tie-corrected normal approximation:
     ``z = (U_a − n_a·n_b/2) / σ`` where ``σ² = n_a·n_b/12 ·
@@ -1098,10 +1073,7 @@ def mannwhitney_z_stats(
     from padua_spark.io_utils import track_cached
 
     cnt = F.col("_ca") + F.col("_cb")
-    ecdf = _ecdf_stepped_counts(
-        df, group_col, value_col, group_a, group_b,
-        small_domain_threshold=small_domain_threshold,
-    )
+    ecdf = _ecdf_stepped_counts(df, group_col, value_col, group_a, group_b)
     stepped = ecdf.select(
         "_ca", "_cb", cnt.alias("_cnt"),
         (F.col("_fa") + F.col("_fb") - cnt).alias("_before"),
@@ -1144,7 +1116,6 @@ def kruskal_wallis_stats(
     group_col: str,
     value_col: str,
     groups: list,
-    small_domain_threshold: int | None = None,
 ) -> DataFrame:
     """Kruskal–Wallis H test — the g-group generalization of
     Mann–Whitney (rank-based one-way ANOVA), completing the
@@ -1191,9 +1162,7 @@ def kruskal_wallis_stats(
         "_v", *cols,
         sum([F.col(c) for c in cols[1:]], F.col(cols[0])).alias("_ct"),
     )
-    stepped = _stepped_running_counts(
-        pooled, "_v", ["_ct"], small_domain_threshold
-    )
+    stepped = _stepped_running_counts(pooled, "_v", ["_ct"])
     two_rbar = (
         2 * (F.col("_ct_run") - F.col("_ct")) + F.col("_ct") + 1
     )
@@ -1248,7 +1217,6 @@ def spearman_rho(
     df: DataFrame,
     x_col: str,
     y_col: str,
-    small_domain_threshold: int | None = None,
 ) -> DataFrame:
     """Spearman rank correlation between two numeric columns —
     Pearson on midranks, the robust complement to the reference's
@@ -1294,9 +1262,7 @@ def spearman_rho(
         F.sum("_ax").cast("bigint").alias("_cx"),
         F.sum(1 - F.col("_ax")).cast("bigint").alias("_cy"),
     )
-    stepped = _stepped_running_counts(
-        per, "_v", ["_cx", "_cy"], small_domain_threshold
-    )
+    stepped = _stepped_running_counts(per, "_v", ["_cx", "_cy"])
     two_rx = 2 * (F.col("_cx_run") - F.col("_cx")) + F.col("_cx") + 1
     two_ry = 2 * (F.col("_cy_run") - F.col("_cy")) + F.col("_cy") + 1
     dec = "decimal(38,0)"
@@ -1406,7 +1372,6 @@ def anderson_darling_ksamp(
     group_col: str,
     value_col: str,
     groups: list,
-    small_domain_threshold: int | None = None,
 ) -> DataFrame:
     """k-sample Anderson–Darling test (Scholz–Stephens 1987, the
     tie-aware MIDRANK version — scipy's ``anderson_ksamp`` default):
@@ -1456,9 +1421,7 @@ def anderson_darling_ksamp(
         "_v", *cols,
         sum([F.col(c) for c in cols[1:]], F.col(cols[0])).alias("_ct"),
     )
-    stepped = _stepped_running_counts(
-        pooled, "_v", [*cols, "_ct"], small_domain_threshold
-    )
+    stepped = _stepped_running_counts(pooled, "_v", [*cols, "_ct"])
     dec = "decimal(38,0)"
     h = F.col("_ct")
     d_j = 2 * F.col("_ct_run") - h  # doubled mid cumulative, pooled
@@ -2068,7 +2031,6 @@ def logrank_test(
     event_col: str,
     group_a,
     group_b,
-    small_domain_threshold: int | None = None,
 ) -> DataFrame:
     """Two-group log-rank test — the standard significance companion to
     :func:`kaplan_meier` (KM answers "what do the survival curves look
@@ -2116,7 +2078,7 @@ def logrank_test(
         F.count(F.when(~in_a, 1)).cast("bigint").alias("lv_b"),
     )
     stepped = _stepped_running_counts(
-        per, "_t", ["ev_a", "lv_a", "ev_b", "lv_b"], small_domain_threshold
+        per, "_t", ["ev_a", "lv_a", "ev_b", "lv_b"]
     )
     # at risk at t = total subjects − subjects who left strictly before
     n_a = F.col("lv_a_tot") - (F.col("lv_a_run") - F.col("lv_a"))
@@ -2242,7 +2204,6 @@ def dunn_posthoc(
     group_col: str,
     value_col: str,
     groups: list,
-    small_domain_threshold: int | None = None,
 ) -> DataFrame:
     """Dunn's post-hoc pairwise comparisons after Kruskal–Wallis —
     WHICH groups differ, not just whether any do: for each group pair,
@@ -2294,9 +2255,7 @@ def dunn_posthoc(
         "_v", *cols,
         sum([F.col(c) for c in cols[1:]], F.col(cols[0])).alias("_ct"),
     )
-    stepped = _stepped_running_counts(
-        pooled, "_v", ["_ct"], small_domain_threshold
-    )
+    stepped = _stepped_running_counts(pooled, "_v", ["_ct"])
     two_rbar = (
         2 * (F.col("_ct_run") - F.col("_ct")) + F.col("_ct") + 1
     )
@@ -3201,7 +3160,6 @@ def cox_baseline_hazard(
     duration_col: str,
     event_col: str,
     betas: list[float],
-    small_domain_threshold: int | None = None,
 ) -> DataFrame:
     """Breslow baseline cumulative hazard for a FITTED Cox model —
     the piece that turns :func:`cox_ph` coefficients into per-subject
@@ -3242,9 +3200,7 @@ def cox_baseline_hazard(
         F.sum("_e").cast("bigint").alias("_d"),
         F.sum("_r").alias("_sr"),
     )
-    stepped = _stepped_running_counts(
-        per, "_t", ["_sr"], small_domain_threshold
-    )
+    stepped = _stepped_running_counts(per, "_t", ["_sr"])
     s0 = F.col("_sr_tot") - F.col("_sr_run") + F.col("_sr")
     ev_times = stepped.where(F.col("_d") > 0).select(
         "_t",
@@ -3252,9 +3208,7 @@ def cox_baseline_hazard(
         s0.alias("_s0"),
         (F.col("_d").cast("double") / s0).alias("_term"),
     )
-    cum = _stepped_running_counts(
-        ev_times, "_t", ["_term"], small_domain_threshold
-    )
+    cum = _stepped_running_counts(ev_times, "_t", ["_term"])
     out = cum.select(
         F.col("_t").alias("t"),
         F.col("_d").alias("n_events"),
@@ -3474,7 +3428,6 @@ def effect_sizes(
     value_col: str,
     group_a,
     group_b,
-    small_domain_threshold: int | None = None,
 ) -> DataFrame:
     """Two-group effect-size battery — the magnitude companion every
     significance test in this module needs at scale (at 100 TB
@@ -3508,10 +3461,7 @@ def effect_sizes(
         F.var_samp(va).alias("_va"),
         F.var_samp(vb).alias("_vb"),
     )
-    u = mannwhitney_u_stat(
-        df, group_col, value_col, group_a, group_b,
-        small_domain_threshold=small_domain_threshold,
-    )
+    u = mannwhitney_u_stat(df, group_col, value_col, group_a, group_b)
     na, nb = F.col("_na"), F.col("_nb")
     dof = (na + nb - 2).cast("double")
     sp = F.sqrt(
@@ -3763,7 +3713,6 @@ def cvm_2samp_stat(
     value_col: str,
     group_a,
     group_b,
-    small_domain_threshold: int | None = None,
 ) -> DataFrame:
     """Two-sample Cramér–von Mises statistic (Anderson 1962) — the
     whole-distribution companion to :func:`ks_2samp_stat` (KS sees
@@ -3791,10 +3740,7 @@ def cvm_2samp_stat(
     """
     from padua_spark.io_utils import track_cached
 
-    stepped = _ecdf_stepped_counts(
-        df, group_col, value_col, group_a, group_b,
-        small_domain_threshold=small_domain_threshold,
-    )
+    stepped = _ecdf_stepped_counts(df, group_col, value_col, group_a, group_b)
     dec = "decimal(38,0)"
     diff = (
         F.col("_fa").cast(dec) * F.col("_nb").cast(dec)
@@ -4064,7 +4010,6 @@ def ansari_bradley(
     value_col: str,
     group_a,
     group_b,
-    small_domain_threshold: int | None = None,
 ) -> DataFrame:
     """Ansari–Bradley two-sample SCALE test (scipy.stats.ansari's
     statistic with the tie-aware normal approximation): are the two
@@ -4088,10 +4033,7 @@ def ansari_bradley(
     """
     from padua_spark.io_utils import track_cached
 
-    ecdf = _ecdf_stepped_counts(
-        df, group_col, value_col, group_a, group_b,
-        small_domain_threshold=small_domain_threshold,
-    )
+    ecdf = _ecdf_stepped_counts(df, group_col, value_col, group_a, group_b)
     h = F.col("_ca") + F.col("_cb")
     f_pool = F.col("_fa") + F.col("_fb")
     n2 = F.col("_na") + F.col("_nb")  # totals are constant per row
@@ -4925,7 +4867,6 @@ def brunner_munzel(
     value_col: str,
     group_a,
     group_b,
-    small_domain_threshold: int | None = None,
 ) -> DataFrame:
     """Brunner-Munzel two-sample test (2000) — the modern replacement
     for Mann-Whitney when the two groups may differ in VARIANCE, not
@@ -4955,10 +4896,7 @@ def brunner_munzel(
     from padua_spark.functions.distributions import t_sf_udf
     from padua_spark.io_utils import track_cached
 
-    ecdf = _ecdf_stepped_counts(
-        df, group_col, value_col, group_a, group_b,
-        small_domain_threshold=small_domain_threshold,
-    )
+    ecdf = _ecdf_stepped_counts(df, group_col, value_col, group_a, group_b)
     h = F.col("_ca") + F.col("_cb")
     f_pool = F.col("_fa") + F.col("_fb")
     # doubled midranks: pooled and within-group — exact integers
@@ -5024,7 +4962,6 @@ def quade_test(
     block_col: str,
     treatment_col: str,
     value_col: str,
-    small_domain_threshold: int | None = None,
 ) -> DataFrame:
     """Quade test (1979) — the repeated-measures rank test that,
     unlike :func:`friedman_test`, WEIGHTS blocks by how much signal
@@ -5084,9 +5021,7 @@ def quade_test(
     per = ranges.groupBy(F.col("_rng").alias("_v")).agg(
         F.count(F.lit(1)).cast("bigint").alias("_c")
     )
-    stepped = _stepped_running_counts(
-        per, "_v", ["_c"], small_domain_threshold
-    )
+    stepped = _stepped_running_counts(per, "_v", ["_c"])
     qmap = stepped.select(
         F.col("_v").alias("_rng"),
         (
@@ -5240,7 +5175,6 @@ def chatterjee_xi(
     x_col: str,
     y_col: str,
     id_col: str,
-    small_domain_threshold: int | None = None,
 ) -> DataFrame:
     """Chatterjee's rank correlation ξ (JASA 2021) — the modern
     DEPENDENCE coefficient: 0 iff independent, 1 iff y is a
@@ -5279,9 +5213,7 @@ def chatterjee_xi(
     per = pairs.groupBy(F.col("_y").alias("_v")).agg(
         F.count(F.lit(1)).cast("bigint").alias("_c")
     )
-    stepped = _stepped_running_counts(
-        per, "_v", ["_c"], small_domain_threshold
-    )
+    stepped = _stepped_running_counts(per, "_v", ["_c"])
     rmap = stepped.select(
         F.col("_v"),
         F.col("_c_run").alias("_r"),  # #{y_j <= v}
@@ -5481,7 +5413,6 @@ def yuen_test(
     group_a,
     group_b,
     trim: float = 0.2,
-    small_domain_threshold: int | None = None,
 ) -> DataFrame:
     """Yuen's trimmed-mean two-sample test (1974) — the robust t-test:
     compares 20%-trimmed means with winsorized variances, keeping
@@ -5510,10 +5441,7 @@ def yuen_test(
     from padua_spark.functions.distributions import t_sf_udf
     from padua_spark.io_utils import track_cached
 
-    ecdf = _ecdf_stepped_counts(
-        df, group_col, value_col, group_a, group_b,
-        small_domain_threshold=small_domain_threshold,
-    )
+    ecdf = _ecdf_stepped_counts(df, group_col, value_col, group_a, group_b)
     tr = F.lit(float(trim))
 
     def _side(cc, ff, nn):
@@ -5934,7 +5862,6 @@ def ks_1samp(
     value_col: str,
     dist: str,
     params: dict,
-    small_domain_threshold: int | None = None,
 ) -> DataFrame:
     """One-sample Kolmogorov-Smirnov goodness-of-fit against a NAMED
     continuous distribution — the distribution-fit acceptance gate
@@ -5963,9 +5890,7 @@ def ks_1samp(
         .groupBy(v.alias("_v"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("_c"))
     )
-    stepped = _stepped_running_counts(
-        per, "_v", ["_c"], small_domain_threshold
-    )
+    stepped = _stepped_running_counts(per, "_v", ["_c"])
     x = F.col("_v")
     if dist == "uniform":
         a = float(params["a"])
@@ -6089,7 +6014,6 @@ def distribution_distances_1d(
     value_col: str,
     group_a,
     group_b,
-    small_domain_threshold: int | None = None,
 ) -> DataFrame:
     """Exact 1-D Wasserstein-1 (earth mover's) and energy distances
     between two groups — the MAGNITUDE complement to the KS family's
@@ -6115,10 +6039,7 @@ def distribution_distances_1d(
 
     from padua_spark.io_utils import track_cached
 
-    ecdf = _ecdf_stepped_counts(
-        df, group_col, value_col, group_a, group_b,
-        small_domain_threshold=small_domain_threshold,
-    )
+    ecdf = _ecdf_stepped_counts(df, group_col, value_col, group_a, group_b)
     spark = df.sparkSession
     try:
         n_parts = max(
@@ -6276,7 +6197,6 @@ def _group_score_test(
     groups: list,
     score_from_midrank,
     center_scores: bool,
-    small_domain_threshold: int | None,
     stat_name: str,
 ):
     """Shared k-group normal-scores machinery (Fligner-Killeen / van
@@ -6307,9 +6227,7 @@ def _group_score_test(
         "_v", *cols,
         sum([F.col(c) for c in cols[1:]], F.col(cols[0])).alias("_ct"),
     )
-    stepped = _stepped_running_counts(
-        pooled, "_v", [*cols, "_ct"], small_domain_threshold
-    )
+    stepped = _stepped_running_counts(pooled, "_v", [*cols, "_ct"])
     h = F.col("_ct")
     n_tot = F.col("_ct_tot").cast("double")
     midrank = (
@@ -6367,7 +6285,6 @@ def van_der_waerden(
     group_col: str,
     value_col: str,
     groups: list,
-    small_domain_threshold: int | None = None,
 ) -> DataFrame:
     """Van der Waerden normal-scores k-group test — Kruskal-Wallis's
     power upgraded back to ANOVA efficiency under normality (scores
@@ -6384,7 +6301,6 @@ def van_der_waerden(
         df, group_col, value_col, groups,
         lambda r, n: norm_ppf_col(r / (n + 1.0)),
         center_scores=False,
-        small_domain_threshold=small_domain_threshold,
         stat_name="vdw_stat",
     )
 
@@ -6394,7 +6310,6 @@ def fligner_killeen(
     group_col: str,
     value_col: str,
     groups: list,
-    small_domain_threshold: int | None = None,
 ) -> DataFrame:
     """Fligner-Killeen test of homogeneity of variances — the
     MOST ROBUST of the classical scale tests to non-normality
@@ -6429,7 +6344,6 @@ def fligner_killeen(
             F.lit(0.5) + r / (2.0 * (n + 1.0))
         ),
         center_scores=True,
-        small_domain_threshold=small_domain_threshold,
         stat_name="fk_stat",
     )
 
@@ -6437,7 +6351,6 @@ def fligner_killeen(
 def normality_ppcc(
     df: DataFrame,
     value_col: str,
-    small_domain_threshold: int | None = None,
 ) -> DataFrame:
     """Filliben probability-plot correlation test of normality
     (1975) — the visual QQ-plot judgment made numeric: the Pearson
@@ -6466,9 +6379,7 @@ def normality_ppcc(
         .groupBy(v.alias("_v"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("_c"))
     )
-    stepped = _stepped_running_counts(
-        per, "_v", ["_c"], small_domain_threshold
-    )
+    stepped = _stepped_running_counts(per, "_v", ["_c"])
     n = F.col("_c_tot").cast("double")
     midrank = (
         (2 * (F.col("_c_run") - F.col("_c")) + F.col("_c") + 1)
@@ -7014,7 +6925,6 @@ def cuzick_trend(
     value_col: str,
     groups: list,
     scores: list | None = None,
-    small_domain_threshold: int | None = None,
 ) -> DataFrame:
     """Cuzick's nonparametric test for TREND across ordered groups
     (Cuzick 1985; Stata's ``nptrend``) — the ordered-alternative
@@ -7057,9 +6967,7 @@ def cuzick_trend(
         "_v", *cols,
         sum([F.col(c) for c in cols[1:]], F.col(cols[0])).alias("_ct"),
     )
-    stepped = _stepped_running_counts(
-        pooled, "_v", ["_ct"], small_domain_threshold
-    )
+    stepped = _stepped_running_counts(pooled, "_v", ["_ct"])
     two_rbar = (
         2 * (F.col("_ct_run") - F.col("_ct")) + F.col("_ct") + 1
     )
@@ -7379,7 +7287,6 @@ def grubbs_test(
 def lilliefors_normal(
     df: DataFrame,
     value_col: str,
-    small_domain_threshold: int | None = None,
 ) -> DataFrame:
     """Lilliefors normality test — the Kolmogorov–Smirnov D against a
     normal whose mean and sd are ESTIMATED from the same sample (the
@@ -7405,9 +7312,7 @@ def lilliefors_normal(
         .groupBy(v.alias("_v"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("_c"))
     )
-    stepped = _stepped_running_counts(
-        per, "_v", ["_c"], small_domain_threshold
-    )
+    stepped = _stepped_running_counts(per, "_v", ["_c"])
     mom = (
         stepped.agg(
             F.sum("_c").cast("bigint").alias("n"),
@@ -9133,7 +9038,6 @@ def delong_test(
     label_col: str,
     score_a_col: str,
     score_b_col: str,
-    small_domain_threshold: int | None = None,
 ) -> DataFrame:
     """DeLong's test for comparing two CORRELATED ROC-AUCs — "is model
     B actually better than model A on the SAME eval rows?" (the
@@ -9184,9 +9088,7 @@ def delong_test(
             )
             .withColumn("_cn", F.col("_c") - F.col("_cp"))
         )
-        stepped = _stepped_running_counts(
-            per, "_v", ["_c", "_cp", "_cn"], small_domain_threshold
-        )
+        stepped = _stepped_running_counts(per, "_v", ["_c", "_cp", "_cn"])
         cached.extend(getattr(stepped, "_padua_cached", ()))
         mr_all = (
             (F.col("_c_run") - F.col("_c")).cast("double")
@@ -10302,7 +10204,6 @@ def propensity_strata_att(
     outcome_col: str,
     score_col: str,
     n_strata: int = 5,
-    small_domain_threshold: int | None = None,
 ) -> DataFrame:
     """Propensity-score SUBCLASSIFICATION estimate of the average
     treatment effect on the treated (Rosenbaum & Rubin 1984) — the
@@ -10351,9 +10252,7 @@ def propensity_strata_att(
     per = base.where(F.col("_t") == 1).groupBy(
         F.col("_s").alias("_v")
     ).agg(F.count(F.lit(1)).cast("bigint").alias("_c"))
-    stepped = _stepped_running_counts(
-        per, "_v", ["_c"], small_domain_threshold
-    )
+    stepped = _stepped_running_counts(per, "_v", ["_c"])
     k = int(n_strata)
     qs = [i / k for i in range(1, k)]
     aggs = []
@@ -10457,7 +10356,6 @@ def fleming_harrington_test(
     group_a,
     group_b,
     rho: float = 1.0,
-    small_domain_threshold: int | None = None,
 ) -> DataFrame:
     """Fleming–Harrington G^ρ weighted log-rank test — the
     late-vs-early sensitivity dial on :func:`logrank_test`: each event
@@ -10501,7 +10399,6 @@ def fleming_harrington_test(
     )
     stepped = _stepped_running_counts(
         per, "_t", ["ev_a", "lv_a", "ev_b", "lv_b"],
-        small_domain_threshold,
     )
     n_a = F.col("lv_a_tot") - (F.col("lv_a_run") - F.col("lv_a"))
     n_b = F.col("lv_b_tot") - (F.col("lv_b_run") - F.col("lv_b"))
@@ -10523,9 +10420,7 @@ def fleming_harrington_test(
     )
     # second stepped pass: running sum of the log factors, EXCLUSIVE
     # of the current time (S(t-)), in event-time order
-    stepped2 = _stepped_running_counts(
-        staged, "_t", ["_lf"], small_domain_threshold
-    )
+    stepped2 = _stepped_running_counts(staged, "_t", ["_lf"])
     s_minus = F.exp(F.col("_lf_run") - F.col("_lf"))
     w = F.pow(s_minus, F.lit(float(rho)))
     na_, nb_ = F.col("_na"), F.col("_nb")
@@ -10575,7 +10470,6 @@ def fleming_harrington_test(
 def l_moments(
     df: DataFrame,
     value_col: str,
-    small_domain_threshold: int | None = None,
 ) -> DataFrame:
     """Sample L-moments λ₁–λ₄ and the L-ratios (L-CV, L-skewness,
     L-kurtosis; Hosking 1990) — the order-statistic alternative to
@@ -10605,9 +10499,7 @@ def l_moments(
         .groupBy(v.alias("_v"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("_c"))
     )
-    stepped = _stepped_running_counts(
-        per, "_v", ["_c"], small_domain_threshold
-    )
+    stepped = _stepped_running_counts(per, "_v", ["_c"])
     p = (F.col("_c_run") - F.col("_c")).cast("double")
     pc = F.col("_c_run").cast("double")
 
@@ -10720,7 +10612,6 @@ def score_separation(
     df: DataFrame,
     score_col: str,
     label_col: str,
-    small_domain_threshold: int | None = None,
 ) -> DataFrame:
     """KS separation and the Youden-optimal cutoff of a binary
     score — the credit-scoring/threshold-picking companion to
@@ -10753,9 +10644,7 @@ def score_separation(
         F.sum(y).cast("bigint").alias("_p"),
         F.sum(F.lit(1) - y).cast("bigint").alias("_g"),
     )
-    stepped = _stepped_running_counts(
-        per, "_v", ["_p", "_g"], small_domain_threshold
-    )
+    stepped = _stepped_running_counts(per, "_v", ["_p", "_g"])
     npos = F.col("_p_tot").cast("double")
     nneg = F.col("_g_tot").cast("double")
     # classify positive when score > v: TPR = 1 - F_pos(v)
@@ -11006,7 +10895,6 @@ def roc_points(
     df: DataFrame,
     score_col: str,
     label_col: str,
-    small_domain_threshold: int | None = None,
 ) -> DataFrame:
     """The full ROC curve as a TABLE — one (threshold, tpr, fpr)
     point per distinct score (classify positive when ``score > t``),
@@ -11036,9 +10924,7 @@ def roc_points(
         F.sum(y).cast("bigint").alias("_p"),
         F.sum(F.lit(1) - y).cast("bigint").alias("_g"),
     )
-    stepped = _stepped_running_counts(
-        per, "_v", ["_p", "_g"], small_domain_threshold
-    )
+    stepped = _stepped_running_counts(per, "_v", ["_p", "_g"])
     npos = F.col("_p_tot")
     nneg = F.col("_g_tot")
     p_gt = npos - F.col("_p_run")
@@ -11091,7 +10977,6 @@ def youden_threshold(
     df: DataFrame,
     score_col: str,
     label_col: str,
-    small_domain_threshold: int | None = None,
 ) -> DataFrame:
     """The optimal operating point of a classifier score — the
     threshold maximizing Youden's ``J = tpr − fpr`` (equivalently
@@ -11125,9 +11010,7 @@ def youden_threshold(
         F.sum(y).cast("bigint").alias("_p"),
         F.sum(F.lit(1) - y).cast("bigint").alias("_g"),
     )
-    stepped = _stepped_running_counts(
-        per, "_v", ["_p", "_g"], small_domain_threshold
-    )
+    stepped = _stepped_running_counts(per, "_v", ["_p", "_g"])
     dec = "decimal(38,0)"
     npos = F.col("_p_tot")
     nneg = F.col("_g_tot")
@@ -11175,7 +11058,6 @@ def value_at_risk(
     df: DataFrame,
     value_col: str,
     alpha: float = 0.95,
-    small_domain_threshold: int | None = None,
 ) -> DataFrame:
     """Historical Value-at-Risk and Expected Shortfall (CVaR) of a
     loss distribution — the risk-tail pair behind "how bad is the
@@ -11207,9 +11089,7 @@ def value_at_risk(
         )
         .withColumn("_vc", F.col("_v") * F.col("_c").cast("double"))
     )
-    stepped = _stepped_running_counts(
-        per, "_v", ["_c", "_vc"], small_domain_threshold
-    )
+    stepped = _stepped_running_counts(per, "_v", ["_c", "_vc"])
     rank = F.ceil(
         F.lit(float(alpha)) * F.col("_c_tot").cast("double")
     ).cast("bigint")
@@ -11928,7 +11808,6 @@ def passing_bablok(
     y_col: str,
     max_points: int | None = 20_000,
     z: float = 1.959963984540054,
-    small_domain_threshold: int | None = None,
 ) -> DataFrame:
     """Passing–Bablok regression — the nonparametric method-comparison
     line beside :func:`deming_regression` (Deming needs the error-
@@ -11994,9 +11873,7 @@ def passing_bablok(
     per = slopes.groupBy(F.col("_s").alias("_v")).agg(
         F.count(F.lit(1)).cast("bigint").alias("_c")
     )
-    stepped = _stepped_running_counts(
-        per, "_v", ["_c"], small_domain_threshold
-    )
+    stepped = _stepped_running_counts(per, "_v", ["_c"])
     ktab = stepped.agg(
         F.max("_c_tot").alias("_n"),
         F.sum(
@@ -12746,7 +12623,6 @@ def kuiper_2samp(
     value_col: str,
     group_a,
     group_b,
-    small_domain_threshold: int | None = None,
 ) -> DataFrame:
     """Two-sample Kuiper test — the rotation-invariant KS variant
     (``V = D⁺ + D⁻`` instead of max|D|): equally sensitive at the
@@ -12774,10 +12650,7 @@ def kuiper_2samp(
     """
     from padua_spark.io_utils import track_cached
 
-    ecdf = _ecdf_stepped_counts(
-        df, group_col, value_col, group_a, group_b,
-        small_domain_threshold=small_domain_threshold,
-    )
+    ecdf = _ecdf_stepped_counts(df, group_col, value_col, group_a, group_b)
     dfa = F.col("_fa").cast("double") / F.col("_na").cast("double")
     dfb = F.col("_fb").cast("double") / F.col("_nb").cast("double")
     agg = ecdf.agg(
@@ -12963,7 +12836,6 @@ def lepage_test(
     value_col: str,
     group_a,
     group_b,
-    small_domain_threshold: int | None = None,
 ) -> DataFrame:
     """Lepage two-sample LOCATION-AND-SCALE omnibus test: the sum of
     the squared standardized Wilcoxon rank-sum (location) and
@@ -12988,10 +12860,7 @@ def lepage_test(
     """
     from padua_spark.io_utils import track_cached
 
-    ecdf = _ecdf_stepped_counts(
-        df, group_col, value_col, group_a, group_b,
-        small_domain_threshold=small_domain_threshold,
-    )
+    ecdf = _ecdf_stepped_counts(df, group_col, value_col, group_a, group_b)
     h = F.col("_ca") + F.col("_cb")
     f_pool = F.col("_fa") + F.col("_fb")
     n2 = F.col("_na") + F.col("_nb")
@@ -13058,7 +12927,6 @@ def cucconi_test(
     value_col: str,
     group_a,
     group_b,
-    small_domain_threshold: int | None = None,
 ) -> DataFrame:
     """Cucconi two-sample location-scale test — older than Lepage and
     based on SQUARED ranks and squared contrary ranks of the second
@@ -13080,10 +12948,7 @@ def cucconi_test(
     """
     from padua_spark.io_utils import track_cached
 
-    ecdf = _ecdf_stepped_counts(
-        df, group_col, value_col, group_a, group_b,
-        small_domain_threshold=small_domain_threshold,
-    )
+    ecdf = _ecdf_stepped_counts(df, group_col, value_col, group_a, group_b)
     h = F.col("_ca") + F.col("_cb")
     f_pool = F.col("_fa") + F.col("_fb")
     n2 = F.col("_na") + F.col("_nb")
@@ -13146,7 +13011,6 @@ def conover_squared_ranks(
     group_col: str,
     value_col: str,
     groups: list,
-    small_domain_threshold: int | None = None,
 ) -> DataFrame:
     """Conover squared-ranks k-group SCALE test: rank the absolute
     deviations from each group's own mean over the POOLED sample,
@@ -13196,9 +13060,7 @@ def conover_squared_ranks(
         "_v", *cols,
         sum([F.col(c) for c in cols[1:]], F.col(cols[0])).alias("_ct"),
     )
-    stepped = _stepped_running_counts(
-        pooled, "_v", ["_ct"], small_domain_threshold
-    )
+    stepped = _stepped_running_counts(pooled, "_v", ["_ct"])
     dmid = (
         2 * (F.col("_ct_run") - F.col("_ct")) + F.col("_ct") + 1
     )
@@ -13355,7 +13217,6 @@ EDF_CASE3_CRIT = {
 def edf_normality_battery(
     df: DataFrame,
     value_col: str,
-    small_domain_threshold: int | None = None,
 ) -> DataFrame:
     """EDF goodness-of-fit battery vs a FITTED normal — the
     Anderson–Darling A², Cramér–von Mises W², and Watson U²
@@ -13396,9 +13257,7 @@ def edf_normality_battery(
         .groupBy(v.alias("_v"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("_c"))
     )
-    stepped = _stepped_running_counts(
-        per, "_v", ["_c"], small_domain_threshold
-    )
+    stepped = _stepped_running_counts(per, "_v", ["_c"])
     mom = (
         stepped.agg(
             F.sum("_c").cast("bigint").alias("n"),
@@ -14346,7 +14205,6 @@ def cliffs_delta(
     value_col: str,
     group_a,
     group_b,
-    small_domain_threshold: int | None = None,
 ) -> DataFrame:
     """Cliff's delta ordinal effect size for two groups — the
     dominance measure every "the test is significant, but is the
@@ -14369,10 +14227,7 @@ def cliffs_delta(
     """
     from padua_spark.io_utils import track_cached
 
-    ecdf = _ecdf_stepped_counts(
-        df, group_col, value_col, group_a, group_b,
-        small_domain_threshold=small_domain_threshold,
-    )
+    ecdf = _ecdf_stepped_counts(df, group_col, value_col, group_a, group_b)
     dec = "decimal(38,0)"
     b_lt = (F.col("_fb") - F.col("_cb")).cast(dec)
     b_gt = (F.col("_nb") - F.col("_fb")).cast(dec)
@@ -14420,7 +14275,6 @@ def mood_scale_test(
     value_col: str,
     group_a,
     group_b,
-    small_domain_threshold: int | None = None,
 ) -> DataFrame:
     """Mood's two-sample SCALE test (distinct from
     :func:`mood_median_test`, which is a k-group LOCATION test):
@@ -14443,10 +14297,7 @@ def mood_scale_test(
     """
     from padua_spark.io_utils import track_cached
 
-    ecdf = _ecdf_stepped_counts(
-        df, group_col, value_col, group_a, group_b,
-        small_domain_threshold=small_domain_threshold,
-    )
+    ecdf = _ecdf_stepped_counts(df, group_col, value_col, group_a, group_b)
     h = F.col("_ca") + F.col("_cb")
     f_pool = F.col("_fa") + F.col("_fb")
     n2 = F.col("_na") + F.col("_nb")

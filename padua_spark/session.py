@@ -70,28 +70,34 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
-    # The wrapper memoizes the flag process-wide on first use; force the
-    # memo coherent with the conf even when an earlier session (or a
-    # foreign driver session in the same process) already populated it.
-    # Verify the private memo still EXISTS before poking it (ADVICE r13):
-    # if a future PySpark renames it, assigning blindly would create a
-    # dead attribute and silently re-enable the 3-5x construction tax —
-    # warn once instead so the regression is observable.
+    # an earlier session in this process may have set the memo already
+    disable_dataframe_debugging()
+    return spark
+
+
+def disable_dataframe_debugging() -> None:
+    """Force PySpark 4's process-wide DataFrame-debugging memo off.
+
+    The wrapper costs ~4 py4j round trips per Column/function call
+    (~3-5x driver-side construction time) for error-message metadata
+    only. Its conf is static, so a running session — ours or a foreign
+    driver's — is switched only through this private memo. Poke it only
+    if it still exists: after a PySpark rename a blind assignment would
+    silently restore the tax, so warn instead (tests/test_units.py pins
+    the attribute)."""
     try:  # pragma: no cover - defensive against PySpark internals moving
         import pyspark.errors.utils as _eu
-
-        if hasattr(_eu, "_enable_debugging_cache"):
-            _eu._enable_debugging_cache = False
-        else:
-            import warnings
-
-            warnings.warn(
-                "pyspark.errors.utils._enable_debugging_cache is gone; "
-                "the dataFrameDebugging fast path may no longer apply "
-                "to pre-built sessions (construction-perf regression)",
-                RuntimeWarning,
-                stacklevel=2,
-            )
     except ImportError:
-        pass
-    return spark
+        return
+    if hasattr(_eu, "_enable_debugging_cache"):
+        _eu._enable_debugging_cache = False
+    else:
+        import warnings
+
+        warnings.warn(
+            "pyspark.errors.utils._enable_debugging_cache is gone; "
+            "the dataFrameDebugging fast path no longer applies "
+            "(construction-perf regression)",
+            RuntimeWarning,
+            stacklevel=2,
+        )

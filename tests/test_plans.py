@@ -278,19 +278,15 @@ def test_running_balance_single_shuffle(spark):
 
 
 def test_levene_centers_join_aqe_default(spark):
-    """levene_stats default lets AQE choose the centers-join strategy
-    from the measured size (no static broadcast hint in the analyzed
-    plan); broadcast_centers=True injects the hint. At test scale the
-    executed adaptive plan still broadcasts — AQE converts the join at
-    runtime from the real centers size, which is the whole point of
-    the default."""
+    """levene_stats lets AQE choose the centers-join strategy from the
+    measured size (no static broadcast hint in the analyzed plan). At
+    test scale the executed adaptive plan still broadcasts — AQE
+    converts the join at runtime from the real centers size, which is
+    the whole point of leaving the hint out."""
     li = _li(spark)
     default = st.levene_stats(li, ["l_partkey"], "l_returnflag",
                               "l_quantity")
-    hinted = st.levene_stats(li, ["l_partkey"], "l_returnflag",
-                             "l_quantity", broadcast_centers=True)
     assert "ResolvedHint" not in default._jdf.queryExecution().analyzed().toString()
-    assert "ResolvedHint" in hinted._jdf.queryExecution().analyzed().toString()
     default.write.format("noop").mode("overwrite").save()
     final = default._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in final, final[:2000]
@@ -323,15 +319,14 @@ def test_ecdf_cumsum_is_distributed(spark, monkeypatch):
     import re
 
     monkeypatch.setattr(st, "STEPPED_ROWS_PER_PARTITION", 1000)
+    monkeypatch.setattr(st, "SMALL_ECDF_DOMAIN", 0)
 
     for build in (
         lambda df: st.ks_2samp_stat(
-            df, "l_returnflag", "l_extendedprice", "R", "A",
-            small_domain_threshold=0,
+            df, "l_returnflag", "l_extendedprice", "R", "A"
         ),
         lambda df: st.mannwhitney_z_stats(
-            df, "l_returnflag", "l_extendedprice", "R", "A",
-            small_domain_threshold=0,
+            df, "l_returnflag", "l_extendedprice", "R", "A"
         ),
     ):
         plan = explain_str(build(_li(spark)), "simple")
@@ -350,7 +345,7 @@ def test_ecdf_cumsum_is_distributed(spark, monkeypatch):
         assert "InMemoryTableScan" in plan, plan[:2000]
 
 
-def test_ecdf_small_domain_shortcut(spark):
+def test_ecdf_small_domain_shortcut(spark, monkeypatch):
     """At/below SMALL_ECDF_DOMAIN the per-value frame is tiny and the
     cumsum runs directly on the persisted single partition — no range
     exchange, none of the two-pass machinery — and the two paths
@@ -363,9 +358,9 @@ def test_ecdf_small_domain_shortcut(spark):
     # l_quantity has a ~50-value domain: the shortcut must engage
     assert "rangepartitioning(_v#" not in plan, plan[:2000]
     assert "InMemoryTableScan" in plan, plan[:2000]
+    monkeypatch.setattr(st, "SMALL_ECDF_DOMAIN", 0)
     forced = st.mannwhitney_z_stats(
-        df, "l_returnflag", "l_quantity", "R", "A",
-        small_domain_threshold=0,
+        df, "l_returnflag", "l_quantity", "R", "A"
     )
     a = [tuple(r) for r in small.collect()]
     b = [tuple(r) for r in forced.collect()]
@@ -585,11 +580,15 @@ def test_no_cartesian_products_anywhere(spark):
             return name, "unexpected BroadcastNestedLoopJoin"
         return None
 
+    # building a query must not leak session conf; the threads share
+    # one session, so a set() while building one query reaches the rest
+    conf_before = dict(spark.conf.getAll)
     with ThreadPoolExecutor(max_workers=4) as pool:
         bad = dict(
             r for r in pool.map(_lint, em.queries().items()) if r
         )
     assert not bad, bad
+    assert dict(spark.conf.getAll) == conf_before
 
 
 def test_cms_sketch_partial_aggregation(spark):
@@ -730,12 +729,13 @@ def test_stepped_helper_single_range_partition(spark, monkeypatch):
     import padua_spark.operators.stats as _st_mod
 
     monkeypatch.setattr(_st_mod, "STEPPED_ROWS_PER_PARTITION", 1000)
+    monkeypatch.setattr(_st_mod, "SMALL_ECDF_DOMAIN", 100)
     per = (
         _li(spark)
         .groupBy(F.col("l_extendedprice").alias("_v"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("_c"))
     )
-    out = _stepped_running_counts(per, "_v", ["_c"], 100)
+    out = _stepped_running_counts(per, "_v", ["_c"])
     plan = explain_str(out)
     # the ranged frame is PERSISTED and its subtree prints once per
     # consumer (see test_bm25_single_corpus_scan): the range exchange
@@ -832,7 +832,7 @@ def test_acf_lag_windows_partition_by_group(spark):
 
 def test_textrank_cache_and_truncation(spark):
     """textrank_keywords (re-included after the round-9 exemption):
-    below broadcast_ranks_threshold pagerank now FUSES the rank
+    below BROADCAST_GRAPH_ROWS pagerank now FUSES the rank
     recurrence into one lazy plan — the final plan nests one
     BroadcastExchange per iteration boundary (k broadcast joins of
     the node-sized incoming frame into the cached contribution
@@ -851,8 +851,8 @@ def test_textrank_cache_and_truncation(spark):
     assert unpersist_intermediates(out) == 3
 
 
-def test_pagerank_small_path_is_one_fused_plan(spark):
-    """pagerank below broadcast_ranks_threshold: the k-iteration
+def test_pagerank_small_path_is_one_fused_plan(spark, monkeypatch):
+    """pagerank below BROADCAST_GRAPH_ROWS: the k-iteration
     recurrence compiles to ONE lazy plan — (k−1) broadcast joins of
     the incoming-mass frame plus the final node join (k total
     BroadcastExchanges, allowing AQE reuse to dedupe), every
@@ -860,6 +860,7 @@ def test_pagerank_small_path_is_one_fused_plan(spark):
     per-iteration node join of the data-sized frame. Above the
     threshold the canonical shuffle-join loop still checkpoints
     (Scan ExistingRDD present)."""
+    import padua_spark.extensions.graph as graph
     from padua_spark.extensions.graph import pagerank
 
     edges = spark.range(30).select(
@@ -870,7 +871,8 @@ def test_pagerank_small_path_is_one_fused_plan(spark):
     plan = explain_str(small, "simple")
     assert "Scan ExistingRDD" not in plan, plan[:1500]
     assert plan.count("BroadcastExchange") >= 2, plan[:1500]
-    big = pagerank(edges, k_iters=3, broadcast_ranks_threshold=0)
+    monkeypatch.setattr(graph, "BROADCAST_GRAPH_ROWS", 0)
+    big = pagerank(edges, k_iters=3)
     big_plan = explain_str(big, "simple")
     assert "Scan ExistingRDD" in big_plan, big_plan[:1500]
     # both paths agree numerically

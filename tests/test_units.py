@@ -1826,13 +1826,14 @@ def test_kmeans_quantized_planted_clusters(spark):
         assert out2[i][0] == out[i]
 
 
-def test_kmeans_quantized_broadcast_path_matches_literal(spark):
-    """Above ``broadcast_threshold`` (k·dims) scoring switches from a
-    per-row literal centroid array to a broadcast join against a k-row
+def test_kmeans_quantized_broadcast_path_matches_literal(spark, monkeypatch):
+    """Above ``KMEANS_LITERAL_CENTROIDS`` (k·dims) scoring switches from
+    a per-row literal centroid array to a broadcast join against a k-row
     centroid frame. Assignments AND distances must be bit-identical
     between paths (same driver-side means, same left-fold distance,
     same struct-lexicographic tie rule), and at IVF-scale k the plan
     must show the broadcast join with no k·dims literal tree."""
+    import padua_spark.extensions.similarity as sim
     from padua_spark.extensions.similarity import kmeans_quantized
 
     rows = []
@@ -1848,13 +1849,14 @@ def test_kmeans_quantized_broadcast_path_matches_literal(spark):
             df, "vec_id", "embedding", k=4, n_iter=2
         ).collect()
     }
-    bc_out = {
-        r["vec_id"]: (r["cluster"], r["dist"])
-        for r in kmeans_quantized(
-            df, "vec_id", "embedding", k=4, n_iter=2,
-            broadcast_threshold=1,
-        ).collect()
-    }
+    with monkeypatch.context() as mp:
+        mp.setattr(sim, "KMEANS_LITERAL_CENTROIDS", 1)
+        bc_out = {
+            r["vec_id"]: (r["cluster"], r["dist"])
+            for r in kmeans_quantized(
+                df, "vec_id", "embedding", k=4, n_iter=2
+            ).collect()
+        }
     assert bc_out == lit_out  # bit-identical, distances included
 
     # Plan shape at k=256, dims=32 (k·dims = 8192 > default 4096):
@@ -2057,13 +2059,14 @@ def test_calibration_and_kappa_closed_form(spark):
     assert r3["kappa"] is None
 
 
-def test_kruskal_wallis_matches_reference(spark):
+def test_kruskal_wallis_matches_reference(spark, monkeypatch):
     """kruskal_wallis_stats equals a numpy midrank replica (tied data,
     3 groups), is invariant under repartitioning, and the forced
-    distributed cumsum path (small_domain_threshold=0) agrees with
+    distributed cumsum path (SMALL_ECDF_DOMAIN=0) agrees with
     the small-domain shortcut."""
     import numpy as np
 
+    import padua_spark.operators.stats as st
     from padua_spark.operators.stats import kruskal_wallis_stats
 
     rows = []
@@ -2095,12 +2098,10 @@ def test_kruskal_wallis_matches_reference(spark):
     hc_exp = h_exp / (1.0 - tie / float(n**3 - n))
 
     for frame in (df, df.repartition(7)):
-        for thr in (None, 0):
-            kw = {}
-            if thr is not None:
-                kw["small_domain_threshold"] = thr
+        for thr in (st.SMALL_ECDF_DOMAIN, 0):
+            monkeypatch.setattr(st, "SMALL_ECDF_DOMAIN", thr)
             row = kruskal_wallis_stats(
-                frame, "g", "v", ["a", "b", "c"], **kw
+                frame, "g", "v", ["a", "b", "c"]
             ).collect()[0]
             assert row["n_total"] == n
             assert row["k_groups"] == 3
@@ -2111,12 +2112,13 @@ def test_kruskal_wallis_matches_reference(spark):
             )
 
 
-def test_spearman_rho_matches_reference(spark):
+def test_spearman_rho_matches_reference(spark, monkeypatch):
     """spearman_rho equals the numpy midrank Pearson on tied data,
     is exactly +1 on a monotone pair and -1 on an antitone pair, and
     both cumsum paths agree."""
     import numpy as np
 
+    import padua_spark.operators.stats as st
     from padua_spark.operators.stats import spearman_rho
 
     xs = [float((i * 3) % 7) for i in range(60)]        # ties in x
@@ -2133,11 +2135,12 @@ def test_spearman_rho_matches_reference(spark):
 
     rx, ry = midranks(np.array(xs)), midranks(np.array(ys))
     rho_exp = np.corrcoef(rx, ry)[0, 1]
-    for thr in (None, 0):
-        kw = {"small_domain_threshold": thr} if thr is not None else {}
-        row = spearman_rho(df, "x", "y", **kw).collect()[0]
+    for thr in (st.SMALL_ECDF_DOMAIN, 0):
+        monkeypatch.setattr(st, "SMALL_ECDF_DOMAIN", thr)
+        row = spearman_rho(df, "x", "y").collect()[0]
         assert row["n"] == 60
         assert row["rho"] == pytest.approx(rho_exp, abs=1e-10)
+    monkeypatch.undo()
 
     mono = spark.createDataFrame(
         [(float(i), float(i * i)) for i in range(30)], ["x", "y"]
@@ -2319,12 +2322,13 @@ def test_pq_errors(spark):
         pq_topk(df.select("vec_id"), "vec_id", cbs, [1.0], k=1)
 
 
-def test_gini_concentration_known_cases(spark):
+def test_gini_concentration_known_cases(spark, monkeypatch):
     """Gini: 0 for a uniform distribution, (n-1)/n for total
     concentration, numpy reference on a tied mixed case, and the
     forced distributed-cumsum path agrees."""
     import numpy as np
 
+    import padua_spark.operators.stats as st
     from padua_spark.extensions.quality import gini_concentration
 
     even = spark.createDataFrame([(5,)] * 10, "v long")
@@ -2343,10 +2347,11 @@ def test_gini_concentration_known_cases(spark):
     g_exp = (2 * ((np.arange(1, n + 1)) * x).sum()) / (n * x.sum()) - (
         n + 1
     ) / n
-    for thr in (None, 0):
-        kw = {"small_domain_threshold": thr} if thr is not None else {}
-        got = gini_concentration(df, "v", **kw).collect()[0]["gini"]
+    for thr in (st.SMALL_ECDF_DOMAIN, 0):
+        monkeypatch.setattr(st, "SMALL_ECDF_DOMAIN", thr)
+        got = gini_concentration(df, "v").collect()[0]["gini"]
         assert got == pytest.approx(g_exp, abs=1e-12)
+    monkeypatch.undo()
 
     # fractional values: exact=True RAISES in-plan (the decimal cast
     # would silently truncate and return a plausible wrong number);
@@ -2465,11 +2470,12 @@ def test_decontaminate_ngrams(spark):
     assert 3 not in out  # the 1-token fallback must NOT fire
 
 
-def test_anderson_darling_ksamp_matches_reference(spark):
+def test_anderson_darling_ksamp_matches_reference(spark, monkeypatch):
     """anderson_darling_ksamp equals a pure-Python midrank replica of
     the Scholz-Stephens A2akN on tied 3-group data, agrees between the
     small-domain and forced distributed paths, and behaves sanely:
     near-identical groups score far lower than shifted groups."""
+    import padua_spark.operators.stats as st
     from padua_spark.operators.stats import anderson_darling_ksamp
 
     rows = []
@@ -2515,14 +2521,15 @@ def test_anderson_darling_ksamp_matches_reference(spark):
         [v for g_, v in rows if g_ == grp] for grp in ("a", "b", "c")
     ]
     exp = replica(samples)
-    for thr in (None, 0):
-        kw = {"small_domain_threshold": thr} if thr is not None else {}
+    for thr in (st.SMALL_ECDF_DOMAIN, 0):
+        monkeypatch.setattr(st, "SMALL_ECDF_DOMAIN", thr)
         row = anderson_darling_ksamp(
-            df, "g", "v", ["a", "b", "c"], **kw
+            df, "g", "v", ["a", "b", "c"]
         ).collect()[0]
         assert row["n_total"] == 120
         assert row["k_groups"] == 3
         assert row["a2_akn"] == pytest.approx(exp, rel=1e-12)
+    monkeypatch.undo()
 
     # identical groups -> much smaller statistic than the shifted case
     same = spark.createDataFrame(
@@ -2870,12 +2877,13 @@ def test_theil_sen_by_group(spark):
     assert got["intercept"] == pytest.approx(icpt, abs=1e-12)
 
 
-def test_logrank_test_freireich_trial(spark):
+def test_logrank_test_freireich_trial(spark, monkeypatch):
     """logrank_test reproduces the published chi2 of the classic
     Freireich 6-MP leukemia trial (chi2 = 16.79, p ~ 4.2e-5 — the
     canonical textbook log-rank example), is symmetric under group
     swap, returns chi2 = 0 for identical groups, and agrees between
     the small-domain and forced-distributed stepped-cumsum paths."""
+    import padua_spark.operators.stats as st
     from padua_spark.operators.stats import logrank_test
 
     mp_ev = [6, 6, 6, 7, 10, 13, 16, 22, 23]
@@ -2889,14 +2897,16 @@ def test_logrank_test_freireich_trial(spark):
     )
     df = spark.createDataFrame(rows, "g string, dur double, ev int")
 
-    for thr in (None, 0):  # default small-domain path + forced distributed
-        kw = {"small_domain_threshold": thr} if thr is not None else {}
-        r = logrank_test(df, "g", "dur", "ev", "mp", "plac", **kw).collect()[0]
+    # default small-domain path + forced distributed
+    for thr in (st.SMALL_ECDF_DOMAIN, 0):
+        monkeypatch.setattr(st, "SMALL_ECDF_DOMAIN", thr)
+        r = logrank_test(df, "g", "dur", "ev", "mp", "plac").collect()[0]
         assert (r["n_a"], r["n_b"]) == (21, 21)
         assert (r["observed_a"], r["observed_b"]) == (9, 21)
         assert r["expected_a"] == pytest.approx(19.2505, abs=5e-4)
         assert r["chi2"] == pytest.approx(16.7929, abs=5e-4)
         assert r["p_value"] == pytest.approx(4.17e-5, rel=5e-2)
+    monkeypatch.undo()
 
     # group swap: same chi2, O/E columns mirrored
     rs = logrank_test(df, "g", "dur", "ev", "plac", "mp").collect()[0]
@@ -4352,7 +4362,8 @@ def test_dsir_logweights_directionality(spark):
         assert out[_id]["log_weight"] == pytest.approx(lw, abs=2e-6)
 
 
-def test_heaps_law_brute_force(spark):
+def test_heaps_law_brute_force(spark, monkeypatch):
+    import padua_spark.operators.stats as st
     from padua_spark.extensions.text import heaps_law
 
     docs = [
@@ -4384,9 +4395,8 @@ def test_heaps_law_brute_force(spark):
     assert row["beta"] == pytest.approx(beta, abs=1e-6)
     assert row["log_k"] == pytest.approx(logk, abs=1e-6)
     # stepped (distributed) path agrees with the small-domain shortcut
-    row2 = heaps_law(
-        df, "doc_id", "text", small_domain_threshold=2
-    ).collect()[0]
+    monkeypatch.setattr(st, "SMALL_ECDF_DOMAIN", 2)
+    row2 = heaps_law(df, "doc_id", "text").collect()[0]
     assert (row2["beta"], row2["log_k"]) == (row["beta"], row["log_k"])
 
 
@@ -4669,9 +4679,10 @@ def test_proportion_wilson_and_odds_ratio(spark):
     )
 
 
-def test_qini_auuc_brute_force(spark):
+def test_qini_auuc_brute_force(spark, monkeypatch):
     import numpy as np
 
+    import padua_spark.operators.stats as st
     from padua_spark.extensions.quality import qini_auuc
 
     rng = np.random.RandomState(7)
@@ -4710,7 +4721,8 @@ def test_qini_auuc_brute_force(spark):
     # a genuinely uplift-ranked score should beat random targeting
     assert row["qini_coef"] > 0
     # stepped (distributed) path agrees with the small-domain shortcut
-    row2 = qini_auuc(df, "t", "y", "s", small_domain_threshold=5).collect()[0]
+    monkeypatch.setattr(st, "SMALL_ECDF_DOMAIN", 5)
+    row2 = qini_auuc(df, "t", "y", "s").collect()[0]
     assert row2["qini_area"] == pytest.approx(row["qini_area"], abs=1e-6)
 
 
@@ -6461,13 +6473,14 @@ def test_tokenizer_stats_hand_computed(spark):
     )
 
 
-def test_chatterjee_xi_vs_bruteforce(spark):
+def test_chatterjee_xi_vs_bruteforce(spark, monkeypatch):
     """xi against a brute-force replica of the tie-general formula:
     near 1 on a parabola (where Spearman sees nothing), near 0 on
     independence, exact match under heavy x/y ties on the forced
     distributed path, NULL on constant y."""
     import numpy as np
 
+    import padua_spark.operators.stats as st
     from padua_spark.operators.stats import chatterjee_xi
 
     def ref(x, y, ids):
@@ -6499,13 +6512,13 @@ def test_chatterjee_xi_vs_bruteforce(spark):
         [(a, b, i) for i, (a, b) in enumerate(zip(xt, yt))],
         ["x", "y", "id"],
     )
-    r3 = chatterjee_xi(
-        df3, "x", "y", "id", small_domain_threshold=0
-    ).collect()[0]
+    monkeypatch.setattr(st, "SMALL_ECDF_DOMAIN", 0)
+    r3 = chatterjee_xi(df3, "x", "y", "id").collect()[0]
     assert r3["xi"] == pytest.approx(
         ref(xt, yt, list(range(300))), abs=1e-6
     )
     assert abs(r3["xi"]) < 0.2
+    monkeypatch.undo()
     const = spark.createDataFrame(
         [(float(i), 1.0, i) for i in range(10)], ["x", "y", "id"]
     )
@@ -6574,12 +6587,13 @@ def test_breslow_day_vs_bisection(spark):
         assert rnt["bd_chi2"] == pytest.approx(x2nt, abs=1e-4)
 
 
-def test_yuen_test_vs_numpy(spark):
+def test_yuen_test_vs_numpy(spark, monkeypatch):
     """Yuen t, df and trimmed means against a numpy sort-based
     replica with outliers and ties, on both ECDF paths; trim
     bounds validated; the outliers must NOT move the trimmed means."""
     import numpy as np
 
+    import padua_spark.operators.stats as st
     from padua_spark.operators.stats import yuen_test
 
     rng = np.random.RandomState(4)
@@ -6606,11 +6620,9 @@ def test_yuen_test_vs_numpy(spark):
     )
     rows = [("a", float(v)) for v in x] + [("b", float(v)) for v in y]
     df = spark.createDataFrame(rows, ["g", "v"])
-    for thresh in (None, 0):
-        kw = {} if thresh is None else {
-            "small_domain_threshold": 0
-        }
-        r = yuen_test(df, "g", "v", "a", "b", **kw).collect()[0]
+    for thresh in (st.SMALL_ECDF_DOMAIN, 0):
+        monkeypatch.setattr(st, "SMALL_ECDF_DOMAIN", thresh)
+        r = yuen_test(df, "g", "v", "a", "b").collect()[0]
         assert r["trimmed_mean_a"] == pytest.approx(ta, abs=1e-6)
         assert r["trimmed_mean_b"] == pytest.approx(tb, abs=1e-6)
         assert r["t_stat"] == pytest.approx(t, abs=1e-5)
@@ -6821,12 +6833,13 @@ def test_weibull_fit_km_recovers_parameters(spark):
         assert row[0]["shape"] is None
 
 
-def test_distribution_distances_1d_vs_numpy(spark):
+def test_distribution_distances_1d_vs_numpy(spark, monkeypatch):
     """W1 and energy distance against a numpy pooled-ECDF replica
     (scipy.stats.wasserstein_distance's integral form) on both ECDF
     paths; identical samples give exactly 0."""
     import numpy as np
 
+    import padua_spark.operators.stats as st
     from padua_spark.operators.stats import distribution_distances_1d
 
     def ref(x, y):
@@ -6845,13 +6858,12 @@ def test_distribution_distances_1d_vs_numpy(spark):
     rows = [("a", float(v)) for v in x] + [("b", float(v)) for v in y]
     df = spark.createDataFrame(rows, ["g", "v"])
     w1, ed = ref(x, y)
-    for thresh in (None, 0):
-        kw = {} if thresh is None else {"small_domain_threshold": 0}
-        r = distribution_distances_1d(
-            df, "g", "v", "a", "b", **kw
-        ).collect()[0]
+    for thresh in (st.SMALL_ECDF_DOMAIN, 0):
+        monkeypatch.setattr(st, "SMALL_ECDF_DOMAIN", thresh)
+        r = distribution_distances_1d(df, "g", "v", "a", "b").collect()[0]
         assert r["wasserstein_1"] == pytest.approx(w1, abs=1e-6)
         assert r["energy_distance"] == pytest.approx(ed, abs=1e-6)
+    monkeypatch.undo()
     same = spark.createDataFrame(
         [("a", float(v)) for v in x] + [("b", float(v)) for v in x],
         ["g", "v"],
@@ -10433,6 +10445,31 @@ def test_lorenz_curve_replica(spark):
     assert rows[0]["gini"] == pytest.approx(gini_mad, abs=1e-6)
 
 
+def test_lorenz_curve_partition_independent(spark, monkeypatch):
+    """On the distributed stepped path lorenz_curve is bit-identical
+    whatever the input partitioning. The fixture puts the first 9dp
+    share exactly on a rounding midpoint: 100 copies of 0.1 carry mass
+    10 of a 2e10 total, share 5e-10. A float sum of the copies lands
+    an ulp above or below 10 depending on how partitions group them,
+    which flips the rounded share between 0 and 1e-9; exact
+    micro-unit sums and one division always give 1e-9."""
+    import padua_spark.operators.stats as st
+    from padua_spark.extensions.quality import lorenz_curve
+
+    monkeypatch.setattr(st, "SMALL_ECDF_DOMAIN", 0)
+    monkeypatch.setattr(st, "STEPPED_ROWS_PER_PARTITION", 1)
+    df = spark.createDataFrame(
+        [(0.1,)] * 100 + [(19_999_999_990.0,)], "v double"
+    )
+
+    def rows(frame):
+        return [tuple(r) for r in lorenz_curve(frame, "v").collect()]
+
+    base = rows(df)
+    assert rows(df.repartition(7)) == base
+    assert rows(df.coalesce(1)) == base
+    assert base[0][:4] == (0.1, 100, 0.99009901, 1e-9)
+
 def test_pinball_loss_replica(spark):
     """Pinball loss and coverage per quantile against the direct
     numpy formulas, NULL-forecast rows excluded per level."""
@@ -13054,8 +13091,8 @@ def test_dataframe_debugging_lever_pinned(spark):
     assert hasattr(eu, "_enable_debugging_cache"), (
         "pyspark.errors.utils._enable_debugging_cache renamed/removed - "
         "the construction fast path no longer lands on pre-built "
-        "sessions; port the override in padua_spark/session.py and "
-        "__spark_entry__.py to the new internals"
+        "sessions; port padua_spark.session.disable_dataframe_debugging "
+        "to the new internals"
     )
     assert eu._enable_debugging_cache is False
 

@@ -1,15 +1,16 @@
-"""Round-13 optimization-round measurement harness (guide §1).
+"""Optimization-round measurement harness (guide §1).
 
 For each named query: capture ``.explain("formatted")`` into
-``plans/r14/<query>_<tag>.txt`` and time the noop-sink execution
+``plans/<round>/<query>_<tag>.txt`` and time the noop-sink execution
 (guide §1.4) ``reps`` times with the job labelled
 (``setJobDescription``, guide §1.5).  Prints one JSON line per query:
 ``{"name":..., "times":[...], "median":..., "exchanges":N,
-"plan_file":...}`` so the before/after evidence in OPTIMIZATION_r14.md
-is reproducible.
+"plan_file":...}`` so the before/after evidence in the round's
+OPTIMIZATION_<round>.md is reproducible.
 
-Run: ``python tools/r14_measure.py <tag> <query1,query2,...> [reps]``
-(env ``SPARK_GRAFT_SF_DIR`` selects the scale, default sf0.1).
+Run: ``python tools/measure.py <round> <tag> <query1,query2,...> [reps]``
+(e.g. round ``r14``; env ``SPARK_GRAFT_SF_DIR`` selects the scale,
+default sf0.1).
 """
 
 from __future__ import annotations
@@ -30,16 +31,16 @@ from padua_spark.session import get_spark
 
 
 def main() -> None:
-    tag = sys.argv[1]
-    names = [n for n in sys.argv[2].split(",") if n]
-    reps = int(sys.argv[3]) if len(sys.argv) > 3 else 3
+    rnd, tag = sys.argv[1], sys.argv[2]
+    names = [n for n in sys.argv[3].split(",") if n]
+    reps = int(sys.argv[4]) if len(sys.argv) > 4 else 3
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     plans_dir = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "plans", "r14",
+        "plans", rnd,
     )
     os.makedirs(plans_dir, exist_ok=True)
-    spark = get_spark(app_name=f"r14_measure_{tag}")
+    spark = get_spark(app_name=f"{rnd}_measure_{tag}")
     spark.sparkContext.setLogLevel("ERROR")
     queries = entrymod.queries()
     # same warm-up as bench.py so rep medians are comparable
@@ -78,7 +79,7 @@ def main() -> None:
                 # sink — timing only the sink would miss most of an
                 # iterative query's wall.
                 spark.catalog.clearCache()
-                spark.sparkContext.setJobDescription(f"r14:{name}")
+                spark.sparkContext.setJobDescription(f"{rnd}:{name}")
                 t0 = time.perf_counter()
                 df = queries[name](spark, sf_dir)
                 df.write.format("noop").mode("overwrite").save()
