@@ -1909,9 +1909,10 @@ def lorenz_curve(
     roc_points` relationship to group_auc).
 
     ``p_v = F(v)`` (fraction of units with value ≤ v),
-    ``L_v = Σ_{x≤v} x·c_x / Σ x·c_x``; ``gini = 1 − Σ Δp·(L_hi +
-    L_lo)`` over the distinct-value steps (the exact Lorenz-trapezoid
-    identity; equals the textbook mean-difference Gini).
+    ``L_v = Σ_{x≤v} q_x·c_x / Σ q_x·c_x`` with ``q_x`` the grid-integer
+    mass of ``x`` below; ``gini = 1 − Σ Δp·(L_hi + L_lo)`` over the
+    distinct-value steps (the exact Lorenz-trapezoid identity; equals
+    the textbook mean-difference Gini).
 
     Scale shape: one per-distinct-value aggregation carrying counts
     AND value·count mass through the shared stepped cumsum, the Gini
@@ -1922,14 +1923,25 @@ def lorenz_curve(
     value ascending: ``(value, n_le, pop_share, value_share_cum,
     gini)``, 6dp (shares 9dp).
 
-    Mass is summed in exact integer micro-units (``floor(v·10⁶ +
-    0.5)`` as ``decimal(38,0)``) and ``Σ trap = Σ c·(2·M_run − m) /
-    (n·M_tot)``, so each share and the Gini is ONE division of exact
-    sums: float sums follow the partition count in their last ulp,
-    which flips 9dp shares that sit on a rounding boundary.
+    Mass is summed exactly on a binary grid scaled to the data. With
+    ``max v = f·2^e`` (``f ∈ [½, 1)``, one driver-side aggregate over
+    the cached per-value frame) each value becomes the integer
+    ``q = ⌊v·2^(K−e)⌋``, ``m = c·q`` as ``decimal(38,0)``, and
+    ``Σ trap = Σ c·(2·M_run − m) / (n·M_tot)``, so each share and the
+    Gini is ONE division of exact sums: float sums follow the
+    partition count in their last ulp, which flips 9dp shares that
+    sit on a rounding boundary. ``K = 60`` bits up to 2³² rows (fewer
+    above, so ``2·n·M_tot`` stays below 10³⁸). At ``K = 60`` values
+    within a factor 2⁷ of the maximum are on the grid exactly; any
+    other loses less than ``max·2^−(K−1)``, so a share moves by less
+    than ``n·2^−(K−1)``. Values must be finite (ValueError otherwise).
 
     Beyond the reference; standard per Lorenz 1905 / Gastwirth 1972.
     """
+    import math
+
+    from pyspark import StorageLevel
+
     from padua_spark.io_utils import track_cached
     from padua_spark.operators.stats import _stepped_running_counts
 
@@ -1937,14 +1949,26 @@ def lorenz_curve(
     per = (
         df.where(v.isNotNull() & (v >= 0))
         .groupBy(v.alias("_v"))
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("_c"),
-            F.sum(
-                F.floor(v * 1e6 + 0.5).cast("decimal(38,0)")
-            ).alias("_m"),
-        )
+        .agg(F.count(F.lit(1)).cast("bigint").alias("_c"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    stepped = _stepped_running_counts(per, "_v", ["_c", "_m"])
+    v_max, n = per.agg(F.max("_v"), F.sum("_c")).first()
+    if v_max is not None and not math.isfinite(v_max):
+        per.unpersist()
+        raise ValueError(f"lorenz_curve: non-finite value in {value_col}")
+    k_bits = min(60, 125 - 2 * (n or 0).bit_length())
+    shift = k_bits - math.frexp(v_max or 0.0)[1]
+    # 2**shift overflows a double past 1023 (a subnormal maximum)
+    scaled = F.col("_v") * F.lit(2.0 ** min(shift, 1000))
+    if shift > 1000:
+        scaled = scaled * F.lit(2.0 ** (shift - 1000))
+    dec = "decimal(20,0)"
+    per_m = per.select(
+        "_v", "_c",
+        (F.col("_c").cast(dec) * F.floor(scaled).cast(dec)).alias("_m"),
+    )
+    stepped = _stepped_running_counts(per_m, "_v", ["_c", "_m"])
+    per.unpersist()  # the stepped frame holds its own materialized copy
 
     def ratio(num, den):
         return F.col(num).cast("double") / F.col(den).cast("double")

@@ -2097,8 +2097,9 @@ def test_kruskal_wallis_matches_reference(spark, monkeypatch):
     tie = int((counts.astype(np.int64) ** 3 - counts).sum())
     hc_exp = h_exp / (1.0 - tie / float(n**3 - n))
 
+    default = st.SMALL_ECDF_DOMAIN
     for frame in (df, df.repartition(7)):
-        for thr in (st.SMALL_ECDF_DOMAIN, 0):
+        for thr in (default, 0):
             monkeypatch.setattr(st, "SMALL_ECDF_DOMAIN", thr)
             row = kruskal_wallis_stats(
                 frame, "g", "v", ["a", "b", "c"]
@@ -10448,11 +10449,11 @@ def test_lorenz_curve_replica(spark):
 def test_lorenz_curve_partition_independent(spark, monkeypatch):
     """On the distributed stepped path lorenz_curve is bit-identical
     whatever the input partitioning. The fixture puts the first 9dp
-    share exactly on a rounding midpoint: 100 copies of 0.1 carry mass
-    10 of a 2e10 total, share 5e-10. A float sum of the copies lands
-    an ulp above or below 10 depending on how partitions group them,
-    which flips the rounded share between 0 and 1e-9; exact
-    micro-unit sums and one division always give 1e-9."""
+    share on a rounding boundary: 100 copies of 0.1 carry mass 10 of a
+    2e10 total, share 5e-10. A float sum of the copies lands an ulp
+    above or below 10 depending on how partitions group them, which
+    flips the rounded share between 0 and 1e-9; exact integer sums and
+    one division always give the same side."""
     import padua_spark.operators.stats as st
     from padua_spark.extensions.quality import lorenz_curve
 
@@ -10468,7 +10469,49 @@ def test_lorenz_curve_partition_independent(spark, monkeypatch):
     base = rows(df)
     assert rows(df.repartition(7)) == base
     assert rows(df.coalesce(1)) == base
-    assert base[0][:4] == (0.1, 100, 0.99009901, 1e-9)
+    assert base[0][:3] == (0.1, 100, 0.99009901)
+    assert base[0][3] in (0.0, 1e-9)
+
+
+@pytest.mark.parametrize("scale", [1e-8, 1e13, 1e-315])
+def test_lorenz_curve_any_magnitude(spark, monkeypatch, scale):
+    """Shares and Gini match numpy on unrounded doubles at any
+    magnitude: tiny (1e-8), huge (1e13) and subnormal (1e-315, whose
+    grid scale 2**1097 is applied in two steps), each spread over
+    ~5 decades with ties, on both cumsum paths."""
+    import numpy as np
+
+    import padua_spark.operators.stats as st
+    from padua_spark.extensions.quality import lorenz_curve
+
+    rng = np.random.RandomState(11)
+    x = scale * rng.lognormal(0.0, 2.0, 200)
+    x = np.concatenate([x, x[:20], [0.0]])
+    df = spark.createDataFrame([(float(v),) for v in x], "v double")
+    u, c = np.unique(x, return_counts=True)
+    m = np.cumsum(u * c)
+    gini_mad = np.abs(x[:, None] - x[None, :]).mean() / (2 * x.mean())
+    default = st.SMALL_ECDF_DOMAIN
+    for thr in (default, 0):
+        monkeypatch.setattr(st, "SMALL_ECDF_DOMAIN", thr)
+        rows = sorted(
+            lorenz_curve(df, "v").collect(), key=lambda r: r["value"]
+        )
+        assert [r["value"] for r in rows] == list(u)
+        assert [r["n_le"] for r in rows] == list(np.cumsum(c))
+        got = np.array([r["value_share_cum"] for r in rows])
+        assert np.abs(got - m / m[-1]).max() <= 5.1e-10
+        assert rows[0]["gini"] == pytest.approx(gini_mad, abs=6e-7)
+
+
+def test_lorenz_curve_rejects_non_finite(spark):
+    from padua_spark.extensions.quality import lorenz_curve
+
+    for bad in (float("inf"), float("nan")):
+        df = spark.createDataFrame([(1.0,), (bad,)], "v double")
+        with pytest.raises(ValueError, match="non-finite"):
+            lorenz_curve(df, "v")
+
 
 def test_pinball_loss_replica(spark):
     """Pinball loss and coverage per quantile against the direct
