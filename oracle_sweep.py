@@ -92,6 +92,8 @@ def main() -> None:
         )
     queries = entrymod.queries()
     oracles = entrymod.oracle_sql()
+    # the pipeline oracles in oracle_sql() read the sf0.01 fixtures
+    oracles.update(entrymod._pipeline_oracles(sf_dir))
     only = {
         n for n in os.environ.get(
             "SPARK_GRAFT_SWEEP_ONLY", ""
