@@ -3737,7 +3737,8 @@ def arch_lm(
     :func:`dfa_hurst` ordering lesson), then ONE closed-form
     aggregation of the five pair moments. Output per group:
     ``(group_cols..., n, n_pairs, r2_aux, lm_stat, p_value,
-    arch_flag_5pct)``, 6dp.
+    arch_flag_5pct)``, 6dp; ``arch_flag_5pct`` is ``p_value < 0.05`` on
+    the rounded p.
 
     Beyond the reference; standard per Engle 1982.
     """
@@ -3791,13 +3792,13 @@ def arch_lm(
     )
     staged2 = agg.withColumn("_r2", r2)
     lm = m * F.col("_r2")
+    # the flag thresholds the reported (6dp) p, so the two always agree
+    p_value = F.round(_normal_sf_2sided(F.sqrt(lm)), 6)
     return staged2.select(
         *group_cols, "n", "n_pairs",
         F.round("_r2", 6).alias("r2_aux"),
         F.round(lm, 6).alias("lm_stat"),
-        F.round(_normal_sf_2sided(F.sqrt(lm)), 6).alias("p_value"),
-        F.when(
-            F.col("_r2").isNotNull(),
-            _normal_sf_2sided(F.sqrt(lm)) < 0.05,
-        ).alias("arch_flag_5pct"),
+        p_value.alias("p_value"),
+        F.when(F.col("_r2").isNotNull(), p_value < 0.05)
+        .alias("arch_flag_5pct"),
     )

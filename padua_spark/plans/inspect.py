@@ -4,13 +4,26 @@ from __future__ import annotations
 
 import re
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 
 def explain_str(df: DataFrame, mode: str = "formatted") -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(  # type: ignore[attr-defined]
         df._jdf.queryExecution(), mode
     )
+
+
+def generated_code(df: DataFrame) -> str:
+    """The Java source whole-stage codegen emits for ``df``'s plan."""
+    seq = df._jdf.queryExecution().debug().codegenToSeq()
+    return "\n".join(seq.apply(i)._2() for i in range(seq.size()))
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Generated classes Janino has compiled in this JVM so far
+    (``CodegenMetrics``); a hit in the generated-class cache adds none."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())
 
 
 def has_broadcast_join(df: DataFrame) -> bool:

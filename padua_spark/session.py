@@ -59,6 +59,22 @@ def get_spark(
         )
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        # Spark 4 routes lower()/upper() through ICU by default. The first
+        # call in a JVM runs CollationAwareUTF8String's static initializer
+        # (a title-case table over the code-point range) even when every
+        # string is ASCII, which both paths map with the same
+        # toLowerCaseAscii(). Measured on 4 vCPUs, JDK 17: the first
+        # lower() on 8 ASCII rows took 2.1-2.3 s wall / 4.7-5.0 s process
+        # CPU with ICU, 0.24-0.31 s / 0.75-0.81 s without. The JVM path
+        # (String.toLowerCase, Unicode 13 tables) also agrees with DuckDB
+        # on the Unicode 14-16 letters (README "Known divergences").
+        # Runtime conf; __spark_entry__._t sets it on foreign sessions.
+        .config("spark.sql.icu.caseMappings.enabled", "false")
+        # Generated-class cache (static conf, JVM-wide). protein_groups_ratio
+        # plus phospho_lfq compile ~130 classes; at Spark's default of 100
+        # entries a repeat of the two re-compiled 112 of them, at 1024 none
+        # (tests/test_session_levers.py).
+        .config("spark.sql.codegen.cache.maxEntries", "1024")
         # PySpark 4 wraps every Column/function call with DataFrame
         # debugging (call-site capture for error context). Each wrapped
         # call costs ~4 extra py4j round trips (conf.get + origin

@@ -1711,7 +1711,7 @@ def windowed_srm(
 
     Output one row per (window, group): ``(window_start, window_end,
     *group_cols, n, n_arm_0.., chi2, df, p_value, srm_flag_1pct)``,
-    6dp.
+    6dp; ``srm_flag_1pct`` is ``p_value < 0.01`` on the rounded p.
     """
     from padua_spark.operators.stats import _chi2_sf_closed
 
@@ -1760,8 +1760,10 @@ def windowed_srm(
     staged = staged.withColumn(
         "_chi2", F.when(F.col("_n") > 0, chi2)
     )
-    p = _chi2_sf_closed(
-        F.col("_chi2"), F.lit(k - 1), max_df=max(k - 1, 1)
+    # the flag thresholds the reported (6dp) p, so the two always agree
+    p_value = F.round(
+        _chi2_sf_closed(F.col("_chi2"), F.lit(k - 1), max_df=max(k - 1, 1)),
+        6,
     )
     return staged.select(
         F.col("_w.start").alias("window_start"),
@@ -1771,8 +1773,8 @@ def windowed_srm(
         *[F.col(f"n_arm_{i}") for i in range(k)],
         F.round("_chi2", 6).alias("chi2"),
         F.lit(k - 1).cast("bigint").alias("df"),
-        F.round(p, 6).alias("p_value"),
-        F.when(F.col("_chi2").isNotNull(), p < 0.01)
+        p_value.alias("p_value"),
+        F.when(F.col("_chi2").isNotNull(), p_value < 0.01)
         .alias("srm_flag_1pct"),
     )
 

@@ -173,3 +173,64 @@ def test_oracle_fragments_defined_once():
                             f"{helper} (lines {lo}-{hi})")
     assert not problems, "\n".join(problems)
 
+
+
+# query -> (flag column, threshold on the reported p_value)
+P_FLAGS = {
+    "srm_check": ("srm_flag_1pct", 0.01),
+    "windowed_srm": ("srm_flag_1pct", 0.01),
+    "arch_lm": ("arch_flag_5pct", 0.05),
+}
+
+
+@pytest.mark.parametrize("name", sorted(P_FLAGS))
+def test_flags_threshold_the_reported_p_value(spark, duck, name):
+    """The two engines' ``exp`` can differ by an ulp, so a flag computed
+    from the unrounded p could disagree with the 6dp ``p_value`` printed
+    next to it (and flip between the engine and its oracle). Both sides
+    threshold the reported p."""
+    from tests.conftest import SF_ORACLE
+
+    flag, threshold = P_FLAGS[name]
+    eng = em.queries()[name](spark, SF_ORACLE).collect()
+    rel = duck.sql(em.oracle_sql()[name])
+    cols = rel.columns
+    ora = [dict(zip(cols, r)) for r in rel.fetchall()]
+    assert eng and len(eng) == len(ora)
+    for side, rows in (("engine", eng), ("oracle", ora)):
+        for r in rows:
+            p = r["p_value"]
+            want = None if p is None else p < threshold
+            assert r[flag] == want, (side, name, p, r[flag])
+
+
+def test_srm_flags_follow_the_rounded_p_at_the_threshold(spark):
+    """60/40 arm counts against an allocation ratio solved so that p
+    lies in [0.0099995, 0.01): below 0.01 unrounded, reported as 0.01.
+    The flag must follow the reported p and stay off."""
+    from padua_spark.extensions.features import srm_check
+    from padua_spark.streaming import windowed_srm
+
+    def p_of(r):
+        chi2 = ((60 - 100 * r) ** 2 / (100 * r)
+                + (40 - 100 * (1 - r)) ** 2 / (100 * (1 - r)))
+        return math.erfc(math.sqrt(chi2 / 2))
+
+    lo, hi = 0.3, 0.5  # p rises from ~1e-10 to 0.05 over this range
+    for _ in range(100):
+        mid = (lo + hi) / 2
+        lo, hi = (mid, hi) if p_of(mid) < 0.00999975 else (lo, mid)
+    ratios = [lo, 1 - lo]
+    df = spark.range(100).select(
+        F.lit("g").alias("g"),
+        (F.col("id") >= 60).cast("int").alias("arm"),
+        F.timestamp_seconds(F.lit(0)).alias("ts"),
+    )
+    rows = [
+        srm_check(df, ["g"], "arm", [0, 1], ratios).collect()[0],
+        windowed_srm(df, F.col("ts"), F.col("arm"), [0, 1],
+                     ratios).collect()[0],
+    ]
+    for r in rows:
+        assert r["n_arm_0"] == 60 and r["p_value"] == 0.01
+        assert r["srm_flag_1pct"] is False

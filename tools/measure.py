@@ -4,9 +4,13 @@ For each named query: capture ``.explain("formatted")`` into
 ``plans/<round>/<query>_<tag>.txt`` and time the noop-sink execution
 (guide §1.4) ``reps`` times with the job labelled
 (``setJobDescription``, guide §1.5).  Prints one JSON line per query:
-``{"name":..., "times":[...], "median":..., "exchanges":N,
-"plan_file":...}`` so the before/after evidence in the round's
-OPTIMIZATION_<round>.md is reproducible.
+``{"name":..., "times":[...], "median":..., "cpu_s":[...],
+"compiles":[...], "shuffle_exchanges":N, ...}`` so the before/after
+evidence in the round's OPTIMIZATION_<round>.md is reproducible.
+``cpu_s`` is the per-rep CPU of the whole process tree (this Python
+process, the JVM, its Python workers) and ``compiles`` the generated classes Janino compiled
+in that rep: a first-use cost shows as rep 0 far above the rest, a
+thrashing generated-class cache as ``compiles > 0`` on later reps.
 
 Run: ``python tools/measure.py <round> <tag> <query1,query2,...> [reps]``
 (e.g. round ``r14``; env ``SPARK_GRAFT_SF_DIR`` selects the scale,
@@ -26,8 +30,9 @@ sys.path.insert(
 )
 
 import __spark_entry__ as entrymod
-from padua_spark.plans.inspect import explain_str
+from padua_spark.plans.inspect import codegen_compiles, explain_str
 from padua_spark.session import get_spark
+from perfbench import procstat
 
 
 def main() -> None:
@@ -40,7 +45,11 @@ def main() -> None:
         "plans", rnd,
     )
     os.makedirs(plans_dir, exist_ok=True)
-    spark = get_spark(app_name=f"{rnd}_measure_{tag}")
+    # no console progress bar: it would glue itself to the JSON lines
+    spark = get_spark(
+        app_name=f"{rnd}_measure_{tag}",
+        extra_conf={"spark.ui.showConsoleProgress": "false"},
+    )
     spark.sparkContext.setLogLevel("ERROR")
     queries = entrymod.queries()
     # same warm-up as bench.py so rep medians are comparable
@@ -71,7 +80,7 @@ def main() -> None:
                 re.findall(r"\bExchange\b", plan)
             )
             n_bcast = len(re.findall(r"BroadcastExchange", plan))
-            times = []
+            times, cpu_s, compiles = [], [], []
             for _ in range(reps):
                 # bench.py's timed region: construction (which for the
                 # iterative/persisting operators does real work via
@@ -80,10 +89,13 @@ def main() -> None:
                 # iterative query's wall.
                 spark.catalog.clearCache()
                 spark.sparkContext.setJobDescription(f"{rnd}:{name}")
+                c0, cpu0 = codegen_compiles(spark), procstat.cpu_seconds()
                 t0 = time.perf_counter()
                 df = queries[name](spark, sf_dir)
                 df.write.format("noop").mode("overwrite").save()
                 times.append(round(time.perf_counter() - t0, 3))
+                cpu_s.append(round(procstat.cpu_seconds() - cpu0, 2))
+                compiles.append(codegen_compiles(spark) - c0)
                 spark.sparkContext.setJobDescription(None)
                 spark.catalog.clearCache()
             s = sorted(times)
@@ -98,6 +110,8 @@ def main() -> None:
                         "name": name,
                         "times": times,
                         "median": round(med, 3),
+                        "cpu_s": cpu_s,
+                        "compiles": compiles,
                         "shuffle_exchanges": n_exch - n_bcast,
                         "broadcast_exchanges": n_bcast,
                         "plan_file": os.path.relpath(
