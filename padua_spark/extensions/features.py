@@ -883,6 +883,85 @@ def fairness_report(
     return track_cached(out)
 
 
+def _declared_counts(grouped, col, values, names, other=None):
+    """Per-key counts of the DECLARED ``values`` of column ``col``
+    under ``grouped``: one bigint conditional sum per value (named by
+    ``names``), an ``other`` count of the undeclared rows when
+    ``other`` is given, and the declared total as ``_n``. ONE
+    aggregation with compile-time bounded state, so the same core
+    serves a batch groupBy and a streaming window key
+    (:func:`srm_check`, ``streaming.windowed_srm`` and the
+    declared-key window monitors)."""
+    aggs = [
+        F.sum(F.when(F.col(col) == v, 1).otherwise(0))
+        .cast("bigint").alias(name)
+        for v, name in zip(values, names)
+    ]
+    if other:
+        aggs.append(
+            F.sum(
+                F.when(~F.col(col).isin(list(values)), 1).otherwise(0)
+            ).cast("bigint").alias(other)
+        )
+    n = None
+    for name in names:
+        c = F.col(name)
+        n = c if n is None else n + c
+    return grouped.agg(*aggs).withColumn("_n", n)
+
+
+def _srm_ratios(name, arms, expected_ratios) -> list[float]:
+    """The allocation ratios of an SRM check, normalized to sum 1
+    (equal allocation by default); errors name the public operator."""
+    k = len(arms)
+    if k < 2:
+        raise ValueError(f"{name}: need at least 2 arms")
+    if expected_ratios is None:
+        return [1.0 / k] * k
+    if len(expected_ratios) != k or any(r <= 0 for r in expected_ratios):
+        raise ValueError(
+            f"{name}: expected_ratios must be positive and match arms"
+        )
+    tot = float(sum(expected_ratios))
+    return [float(r) / tot for r in expected_ratios]
+
+
+def _srm_summary(staged, ratios, lead) -> DataFrame:
+    """The SRM finalizer over :func:`_declared_counts` arm counts
+    ``n_arm_{i}``: χ² against ``ratios``, the closed-form df = k−1
+    chi-square SF rounded to 6dp, and the 1% flag on that rounded p.
+    Output ``(*lead, n, n_arm_0.., chi2, df, p_value,
+    srm_flag_1pct)``."""
+    from padua_spark.operators.stats import _chi2_sf_closed
+
+    k = len(ratios)
+    nd = F.col("_n").cast("double")
+    chi2 = None
+    for i in range(k):
+        e = F.lit(ratios[i]) * nd
+        o = F.col(f"n_arm_{i}").cast("double")
+        term = (o - e) * (o - e) / e
+        chi2 = term if chi2 is None else chi2 + term
+    staged = staged.withColumn(
+        "_chi2", F.when(F.col("_n") > 0, chi2)
+    )
+    # the flag thresholds the reported (6dp) p, so the two always agree
+    p_value = F.round(
+        _chi2_sf_closed(F.col("_chi2"), F.lit(k - 1), max_df=max(k - 1, 1)),
+        6,
+    )
+    return staged.select(
+        *lead,
+        F.col("_n").alias("n"),
+        *[F.col(f"n_arm_{i}") for i in range(k)],
+        F.round("_chi2", 6).alias("chi2"),
+        F.lit(k - 1).cast("bigint").alias("df"),
+        p_value.alias("p_value"),
+        F.when(F.col("_chi2").isNotNull(), p_value < 0.01)
+        .alias("srm_flag_1pct"),
+    )
+
+
 def srm_check(
     df: DataFrame,
     group_cols: list[str],
@@ -906,64 +985,19 @@ def srm_check(
     ``expected_ratios`` defaults to equal allocation; they are
     normalized to sum 1. χ² = Σ (O_k − E_k)²/E_k with
     ``E_k = ratio_k·n``; p via the shared closed-form chi-square SF
-    (df = k−1, compile-time). Output per group: ``(groups..., n,
+    (df = k−1, compile-time). Counts and finalizer are
+    :func:`_declared_counts` and :func:`_srm_summary`, shared with
+    ``streaming.windowed_srm``. Output per group: ``(groups..., n,
     n_arm_0.., chi2, df, p_value, srm_flag_1pct)``, 6dp;
     ``srm_flag_1pct`` is ``p_value < 0.01`` on the rounded p.
     """
-    from padua_spark.operators.stats import _chi2_sf_closed
-
-    k = len(arms)
-    if k < 2:
-        raise ValueError("srm_check: need at least 2 arms")
-    if expected_ratios is None:
-        ratios = [1.0 / k] * k
-    else:
-        if len(expected_ratios) != k or any(
-            r <= 0 for r in expected_ratios
-        ):
-            raise ValueError(
-                "srm_check: expected_ratios must be positive and "
-                "match arms"
-            )
-        tot = float(sum(expected_ratios))
-        ratios = [float(r) / tot for r in expected_ratios]
     a = F.col(arm_col)
+    ratios = _srm_ratios("srm_check", arms, expected_ratios)
     base = df.where(a.isin(list(arms))).select(
         *group_cols, a.alias("_a")
     )
-    aggs = [
-        F.sum(F.when(F.col("_a") == arm, 1).otherwise(0))
-        .cast("bigint").alias(f"n_arm_{i}")
-        for i, arm in enumerate(arms)
-    ]
-    agg = base.groupBy(*group_cols).agg(*aggs)
-    n = None
-    for i in range(k):
-        c = F.col(f"n_arm_{i}")
-        n = c if n is None else n + c
-    staged = agg.withColumn("_n", n)
-    nd = F.col("_n").cast("double")
-    chi2 = None
-    for i in range(k):
-        e = F.lit(ratios[i]) * nd
-        o = F.col(f"n_arm_{i}").cast("double")
-        term = (o - e) * (o - e) / e
-        chi2 = term if chi2 is None else chi2 + term
-    staged = staged.withColumn(
-        "_chi2", F.when(F.col("_n") > 0, chi2)
+    staged = _declared_counts(
+        base.groupBy(*group_cols), "_a", arms,
+        [f"n_arm_{i}" for i in range(len(arms))],
     )
-    # the flag thresholds the reported (6dp) p, so the two always agree
-    p_value = F.round(
-        _chi2_sf_closed(F.col("_chi2"), F.lit(k - 1), max_df=max(k - 1, 1)),
-        6,
-    )
-    return staged.select(
-        *group_cols,
-        F.col("_n").alias("n"),
-        *[F.col(f"n_arm_{i}") for i in range(k)],
-        F.round("_chi2", 6).alias("chi2"),
-        F.lit(k - 1).cast("bigint").alias("df"),
-        p_value.alias("p_value"),
-        F.when(F.col("_chi2").isNotNull(), p_value < 0.01)
-        .alias("srm_flag_1pct"),
-    )
+    return _srm_summary(staged, ratios, group_cols)

@@ -39,6 +39,21 @@ from padua_spark.io_utils import local_frame
 BROADCAST_GRAPH_ROWS = 2_000_000
 
 
+def _undirected_edges(edges, src_col, dst_col, v="_v") -> DataFrame:
+    """The simple undirected edge set of ``edges``: every pair oriented
+    ``_u`` = least / ``v`` = greatest endpoint, self-loops dropped,
+    duplicates removed — the one symmetrisation behind the triangle,
+    clustering, assortativity and spatial-autocorrelation operators."""
+    return (
+        edges.select(
+            F.least(F.col(src_col), F.col(dst_col)).alias("_u"),
+            F.greatest(F.col(src_col), F.col(dst_col)).alias(v),
+        )
+        .where(F.col("_u") != F.col(v))
+        .distinct()
+    )
+
+
 def connected_components(
     edges: DataFrame,
     src: str = "src",
@@ -484,14 +499,7 @@ def triangle_count(
     pivot saves. With ``persist_oriented=False`` the threshold is
     inert and the canonical shuffle-join plan always runs.
     """
-    e = (
-        edges.select(
-            F.least(F.col(src_col), F.col(dst_col)).alias("_u"),
-            F.greatest(F.col(src_col), F.col(dst_col)).alias("_v"),
-        )
-        .where(F.col("_u") != F.col("_v"))
-        .distinct()
-    )
+    e = _undirected_edges(edges, src_col, dst_col)
     small = False
     if persist_oriented:
         # the cleaned edge frame feeds FOUR consumers (degree union x2,
@@ -976,14 +984,8 @@ def local_clustering(
 
     from padua_spark.io_utils import track_cached
 
-    e = (
-        edges.select(
-            F.least(F.col(src_col), F.col(dst_col)).alias("_u"),
-            F.greatest(F.col(src_col), F.col(dst_col)).alias("_v"),
-        )
-        .where(F.col("_u") != F.col("_v"))
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    e = _undirected_edges(edges, src_col, dst_col).persist(
+        StorageLevel.MEMORY_AND_DISK
     )
     small = e.count() <= BROADCAST_GRAPH_ROWS
     deg = (
@@ -1076,14 +1078,8 @@ def degree_assortativity(
 
     from padua_spark.io_utils import track_cached
 
-    e = (
-        edges.select(
-            F.least(F.col(src_col), F.col(dst_col)).alias("_u"),
-            F.greatest(F.col(src_col), F.col(dst_col)).alias("_v"),
-        )
-        .where(F.col("_u") != F.col("_v"))
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    e = _undirected_edges(edges, src_col, dst_col).persist(
+        StorageLevel.MEMORY_AND_DISK
     )
     deg = (
         e.select(F.col("_u").alias("_x"))

@@ -1868,6 +1868,41 @@ def harrells_c(
     )
 
 
+def _risk_table(df, group_cols, duration_col, event_col):
+    """The distinct-time risk table shared by :func:`kaplan_meier` and
+    :func:`nelson_aalen` (the engine twin of the oracles'
+    ``_KM_RISK_SQL``): one map-side-combining aggregation to
+    per-(group, time) ``n_events``/``n_censored``, then ``n_risk`` (the
+    subjects with duration >= t) from a per-group cumulative window
+    over the DISTINCT times, never the raw rows. Returns ``(table,
+    wcum)`` — ``wcum`` is the time-ascending running window the
+    estimators accumulate over."""
+    dur = F.col(duration_col).cast("double")
+    ev = F.col(event_col).cast("int")
+    base = df.where(dur.isNotNull() & ev.isNotNull())
+    counts = base.groupBy(*group_cols, dur.alias("t")).agg(
+        F.sum(ev).cast("bigint").alias("n_events"),
+        F.sum(1 - ev).cast("bigint").alias("n_censored"),
+    )
+    wcum = (
+        Window.partitionBy(*group_cols)
+        .orderBy("t")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    wtot = Window.partitionBy(*group_cols)
+    left_before = (
+        F.sum(F.col("n_events") + F.col("n_censored")).over(wcum)
+        - F.col("n_events")
+        - F.col("n_censored")
+    )
+    table = counts.withColumn(
+        "n_risk",
+        F.sum(F.col("n_events") + F.col("n_censored")).over(wtot)
+        - left_before,
+    )
+    return table, wcum
+
+
 def kaplan_meier(
     df: DataFrame,
     group_cols: list[str],
@@ -1898,31 +1933,7 @@ def kaplan_meier(
     d > 0): ``(groups..., t, n_risk, n_events, n_censored,
     survival)``.
     """
-    from pyspark.sql import Window
-
-    dur = F.col(duration_col).cast("double")
-    ev = F.col(event_col).cast("int")
-    base = df.where(dur.isNotNull() & ev.isNotNull())
-    counts = base.groupBy(*group_cols, dur.alias("t")).agg(
-        F.sum(ev).cast("bigint").alias("n_events"),
-        F.sum(1 - ev).cast("bigint").alias("n_censored"),
-    )
-    wcum = (
-        Window.partitionBy(*group_cols)
-        .orderBy("t")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    wtot = Window.partitionBy(*group_cols)
-    left_before = (
-        F.sum(F.col("n_events") + F.col("n_censored")).over(wcum)
-        - F.col("n_events")
-        - F.col("n_censored")
-    )
-    staged = counts.withColumn(
-        "n_risk",
-        F.sum(F.col("n_events") + F.col("n_censored")).over(wtot)
-        - left_before,
-    )
+    staged, wcum = _risk_table(df, group_cols, duration_col, event_col)
     factor = (
         F.col("n_risk") - F.col("n_events")
     ).cast("double") / F.col("n_risk").cast("double")
@@ -1961,47 +1972,24 @@ def nelson_aalen(
     event_col: str,
 ) -> DataFrame:
     """Nelson-Aalen cumulative-hazard estimator per group — the
-    additive companion to :func:`kaplan_meier` on the SAME risk-table
-    aggregation (KM multiplies survival factors, NA sums hazard
-    increments; ``S(t) ≈ exp(−H(t))`` links them):
+    additive companion to :func:`kaplan_meier` on the same risk table,
+    :func:`_risk_table` (KM multiplies survival factors, NA sums
+    hazard increments; ``S(t) ≈ exp(−H(t))`` links them):
 
     ``H(t) = Σ_{t' <= t, d > 0} d_{t'} / n_{t'}`` with the standard
     (Poisson/Klein) variance estimate ``Σ d_{t'} / n_{t'}²``.
 
-    Plan shape is identical to :func:`kaplan_meier`: one map-side-
-    combining aggregation to distinct-time counts, cumulative windows
-    over the distinct-time frame only (never the raw rows). Returns
+    Plan shape is that of :func:`kaplan_meier`: :func:`_risk_table`'s
+    one map-side-combining aggregation to distinct-time counts, then
+    cumulative windows over the distinct-time frame only (never the
+    raw rows). Returns
     one row per (group, event time with d > 0): ``(groups..., t,
     n_risk, n_events, n_censored, cum_hazard, var_hazard)``.
 
     Beyond the reference (padua has no survival analysis); standard
     construction per Klein & Moeschberger §4.2.
     """
-    from pyspark.sql import Window
-
-    dur = F.col(duration_col).cast("double")
-    ev = F.col(event_col).cast("int")
-    base = df.where(dur.isNotNull() & ev.isNotNull())
-    counts = base.groupBy(*group_cols, dur.alias("t")).agg(
-        F.sum(ev).cast("bigint").alias("n_events"),
-        F.sum(1 - ev).cast("bigint").alias("n_censored"),
-    )
-    wcum = (
-        Window.partitionBy(*group_cols)
-        .orderBy("t")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    wtot = Window.partitionBy(*group_cols)
-    left_before = (
-        F.sum(F.col("n_events") + F.col("n_censored")).over(wcum)
-        - F.col("n_events")
-        - F.col("n_censored")
-    )
-    staged = counts.withColumn(
-        "n_risk",
-        F.sum(F.col("n_events") + F.col("n_censored")).over(wtot)
-        - left_before,
-    )
+    staged, wcum = _risk_table(df, group_cols, duration_col, event_col)
     nr = F.col("n_risk").cast("double")
     d = F.col("n_events").cast("double")
     inc = F.when(F.col("n_events") > 0, d / nr).otherwise(F.lit(0.0))
@@ -8023,6 +8011,81 @@ def bowker_symmetry(
     return track_cached(out, cells)
 
 
+def _spatial_edge_stats(
+    values, edges, id_col, value_col, src_col, dst_col, moments,
+    cross_aggs, positive=False,
+):
+    """The edge preparation and global sums shared by
+    :func:`morans_i`, :func:`geary_c` and :func:`getis_ord_g`.
+
+    Values: non-NULL (and ``> 0`` when ``positive``) node values.
+    Edges: ``graph._undirected_edges`` (symmetrised, self-loops
+    dropped, deduped), kept only when BOTH endpoints carry a value,
+    persisted
+    (three consumers). Returns ``(j, e)``: ``j`` is ONE row of
+    ``n_nodes`` plus the value power sums named by ``moments``
+    (``moments[p-1]`` = Σ xᵖ), the cross aggregate ``n_edges`` plus
+    ``cross_aggs`` over the valued edges (endpoint values ``_va``,
+    ``_vb``) and ``_sdeg2`` = Σ deg²; ``e`` is the persisted edge
+    frame for the caller to track."""
+    from pyspark import StorageLevel
+
+    from padua_spark.extensions.graph import _undirected_edges
+
+    v = F.col(value_col).cast("double")
+    keep = F.col(id_col).isNotNull() & v.isNotNull()
+    if positive:
+        keep = keep & (v > 0)
+    vals = values.where(keep).select(
+        F.col(id_col).alias("_x"), v.alias("_v")
+    )
+    # keep only edges whose BOTH endpoints carry a value
+    known = vals.select(F.col("_x"))
+    e = (
+        _undirected_edges(edges, src_col, dst_col, "_v2")
+        .join(known.withColumnRenamed("_x", "_u"), on="_u")
+        .join(known.withColumnRenamed("_x", "_v2"), on="_v2")
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
+    powers = []
+    for name in moments:
+        term = F.col("_v") if not powers else powers[-1][0] * F.col("_v")
+        powers.append((term, name))
+    vstats = vals.agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_nodes"),
+        *[F.sum(term).alias(name) for term, name in powers],
+    ).withColumn("_one", F.lit(1))
+    va = vals.select(F.col("_x").alias("_u"), F.col("_v").alias("_va"))
+    vb = vals.select(
+        F.col("_x").alias("_v2"), F.col("_v").alias("_vb")
+    )
+    cross = (
+        e.join(va, on="_u")
+        .join(vb, on="_v2")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_edges"),
+            *cross_aggs,
+        )
+        .withColumn("_one", F.lit(1))
+    )
+    deg = (
+        e.select(F.col("_u").alias("_x"))
+        .unionAll(e.select(F.col("_v2").alias("_x")))
+        .groupBy("_x")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("_deg"))
+        .agg(
+            F.sum(
+                F.col("_deg") * F.col("_deg")
+            ).cast("bigint").alias("_sdeg2")
+        )
+        .withColumn("_one", F.lit(1))
+    )
+    j = vstats.join(F.broadcast(cross), on="_one").join(
+        F.broadcast(deg), on="_one"
+    )
+    return j, e
+
+
 def morans_i(
     values: DataFrame,
     edges: DataFrame,
@@ -8043,70 +8106,26 @@ def morans_i(
     directions), ``E[I] = −1/(n−1)``, and the normality-assumption
     variance (S₁ = 4m, S₂ = 4·Σ deg²) giving a two-sided z/p.
 
-    ONE degree/edge aggregation + one values join — the z products
-    ride the edge list; nothing is pairwise beyond the given edges.
-    Output 1 row: ``(n_nodes, n_edges, morans_i, expected_i, z,
-    p_value)``, 6dp; NULL when variance degenerates. Nodes absent
+    ONE degree/edge aggregation + one values join
+    (:func:`_spatial_edge_stats`, shared with :func:`geary_c` and
+    :func:`getis_ord_g`) — the z products ride the edge list; nothing
+    is pairwise beyond the given edges. Output 1 row: ``(n_nodes,
+    n_edges, morans_i, expected_i, z, p_value)``, 6dp; NULL when
+    variance degenerates, and expected_i NULL below two valued
+    nodes. Nodes absent
     from ``values`` are dropped with their edges.
 
     Beyond the reference; standard per Moran 1950 / Cliff & Ord.
     """
-    from pyspark import StorageLevel
-
     from padua_spark.io_utils import track_cached
 
-    v = F.col(value_col).cast("double")
-    vals = values.where(
-        F.col(id_col).isNotNull() & v.isNotNull()
-    ).select(F.col(id_col).alias("_x"), v.alias("_v"))
-    e = (
-        edges.select(
-            F.least(F.col(src_col), F.col(dst_col)).alias("_u"),
-            F.greatest(F.col(src_col), F.col(dst_col)).alias("_v2"),
-        )
-        .where(F.col("_u") != F.col("_v2"))
-        .distinct()
-    )
-    # keep only edges whose BOTH endpoints carry a value
-    known = vals.select(F.col("_x"))
-    e = (
-        e.join(known.withColumnRenamed("_x", "_u"), on="_u")
-        .join(known.withColumnRenamed("_x", "_v2"), on="_v2")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    vstats = vals.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_nodes"),
-        F.sum("_v").alias("_s1"),
-        F.sum(F.col("_v") * F.col("_v")).alias("_s2"),
-    ).withColumn("_one", F.lit(1))
-    va = vals.select(F.col("_x").alias("_u"), F.col("_v").alias("_va"))
-    vb = vals.select(
-        F.col("_x").alias("_v2"), F.col("_v").alias("_vb")
-    )
-    cross = (
-        e.join(va, on="_u")
-        .join(vb, on="_v2")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_edges"),
+    j, e = _spatial_edge_stats(
+        values, edges, id_col, value_col, src_col, dst_col,
+        ["_s1", "_s2"],
+        [
             F.sum(F.col("_va") * F.col("_vb")).alias("_svv"),
             F.sum(F.col("_va") + F.col("_vb")).alias("_sends"),
-        )
-        .withColumn("_one", F.lit(1))
-    )
-    deg = (
-        e.select(F.col("_u").alias("_x"))
-        .unionAll(e.select(F.col("_v2").alias("_x")))
-        .groupBy("_x")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("_deg"))
-        .agg(
-            F.sum(
-                F.col("_deg") * F.col("_deg")
-            ).cast("bigint").alias("_sdeg2")
-        )
-        .withColumn("_one", F.lit(1))
-    )
-    j = vstats.join(F.broadcast(cross), on="_one").join(
-        F.broadcast(deg), on="_one"
+        ],
     )
     n = F.col("n_nodes").cast("double")
     m = F.col("n_edges").cast("double")
@@ -8119,7 +8138,8 @@ def morans_i(
     den = F.col("_s2") - n * mean * mean
     s0 = 2.0 * m
     i_stat = F.when((den > 0) & (m > 0), n / s0 * num / den)
-    e_i = -1.0 / (n - 1.0)
+    # −1/(n−1) is undefined below two valued nodes (n = 0 would read 1)
+    e_i = F.when(n >= 2.0, -1.0 / (n - 1.0))
     s1 = 4.0 * m
     s2 = 4.0 * F.col("_sdeg2").cast("double")
     var = (
@@ -13613,71 +13633,26 @@ def geary_c(
     ``Var(C) = [(2S₁ + S₂)(n−1) − 4S₀²] / (2(n+1)S₀²)``
     (S₁ = 4m, S₂ = 4·Σ deg²) and a two-sided z/p.
 
-    Same one-pass plan as :func:`morans_i` (edge joins + one degree
-    aggregation; nothing pairwise beyond the given edges). Output 1
+    Same one-pass plan as :func:`morans_i`, :func:`_spatial_edge_stats`
+    (edge joins + one degree aggregation; nothing pairwise beyond the
+    given edges). Output 1
     row: ``(n_nodes, n_edges, geary_c, z, p_value)``, 6dp; NULL when
     the value variance or edge count degenerates. Nodes absent from
     ``values`` are dropped with their edges.
 
     Beyond the reference; standard per Geary 1954 / Cliff & Ord 1981.
     """
-    from pyspark import StorageLevel
-
     from padua_spark.io_utils import track_cached
 
-    v = F.col(value_col).cast("double")
-    vals = values.where(
-        F.col(id_col).isNotNull() & v.isNotNull()
-    ).select(F.col(id_col).alias("_x"), v.alias("_v"))
-    e = (
-        edges.select(
-            F.least(F.col(src_col), F.col(dst_col)).alias("_u"),
-            F.greatest(F.col(src_col), F.col(dst_col)).alias("_v2"),
-        )
-        .where(F.col("_u") != F.col("_v2"))
-        .distinct()
-    )
-    known = vals.select(F.col("_x"))
-    e = (
-        e.join(known.withColumnRenamed("_x", "_u"), on="_u")
-        .join(known.withColumnRenamed("_x", "_v2"), on="_v2")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    vstats = vals.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_nodes"),
-        F.sum("_v").alias("_s1"),
-        F.sum(F.col("_v") * F.col("_v")).alias("_s2"),
-    ).withColumn("_one", F.lit(1))
-    va = vals.select(F.col("_x").alias("_u"), F.col("_v").alias("_va"))
-    vb = vals.select(
-        F.col("_x").alias("_v2"), F.col("_v").alias("_vb")
-    )
-    cross = (
-        e.join(va, on="_u")
-        .join(vb, on="_v2")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_edges"),
+    j, e = _spatial_edge_stats(
+        values, edges, id_col, value_col, src_col, dst_col,
+        ["_s1", "_s2"],
+        [
             F.sum(
                 (F.col("_va") - F.col("_vb"))
                 * (F.col("_va") - F.col("_vb"))
             ).alias("_sdd"),
-        )
-        .withColumn("_one", F.lit(1))
-    )
-    deg = (
-        e.select(F.col("_u").alias("_x"))
-        .unionAll(e.select(F.col("_v2").alias("_x")))
-        .groupBy("_x")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("_deg"))
-        .agg(
-            F.sum(
-                F.col("_deg") * F.col("_deg")
-            ).cast("bigint").alias("_sdeg2")
-        )
-        .withColumn("_one", F.lit(1))
-    )
-    j = vstats.join(F.broadcast(cross), on="_one").join(
-        F.broadcast(deg), on="_one"
+        ],
     )
     n = F.col("n_nodes").cast("double")
     m = F.col("n_edges").cast("double")
@@ -13746,71 +13721,18 @@ def getis_ord_g(
 
     Rows with ``x ≤ 0`` are DROPPED (documented — G is defined for
     positive attributes), along with their edges. Same one-pass plan
-    as :func:`morans_i`. Output 1 row: ``(n_nodes, n_edges, g_stat,
-    expected_g, z, p_value)``, 6dp.
+    as :func:`morans_i`, :func:`_spatial_edge_stats`. Output 1 row:
+    ``(n_nodes, n_edges, g_stat, expected_g, z, p_value)``, 6dp.
 
     Beyond the reference; standard per Getis & Ord 1992.
     """
-    from pyspark import StorageLevel
-
     from padua_spark.io_utils import track_cached
 
-    v = F.col(value_col).cast("double")
-    vals = values.where(
-        F.col(id_col).isNotNull() & v.isNotNull() & (v > 0)
-    ).select(F.col(id_col).alias("_x"), v.alias("_v"))
-    e = (
-        edges.select(
-            F.least(F.col(src_col), F.col(dst_col)).alias("_u"),
-            F.greatest(F.col(src_col), F.col(dst_col)).alias("_v2"),
-        )
-        .where(F.col("_u") != F.col("_v2"))
-        .distinct()
-    )
-    known = vals.select(F.col("_x"))
-    e = (
-        e.join(known.withColumnRenamed("_x", "_u"), on="_u")
-        .join(known.withColumnRenamed("_x", "_v2"), on="_v2")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    vstats = vals.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_nodes"),
-        F.sum("_v").alias("_m1"),
-        F.sum(F.col("_v") * F.col("_v")).alias("_m2"),
-        F.sum(
-            F.col("_v") * F.col("_v") * F.col("_v")
-        ).alias("_m3"),
-        F.sum(
-            F.col("_v") * F.col("_v") * F.col("_v") * F.col("_v")
-        ).alias("_m4"),
-    ).withColumn("_one", F.lit(1))
-    va = vals.select(F.col("_x").alias("_u"), F.col("_v").alias("_va"))
-    vb = vals.select(
-        F.col("_x").alias("_v2"), F.col("_v").alias("_vb")
-    )
-    cross = (
-        e.join(va, on="_u")
-        .join(vb, on="_v2")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_edges"),
-            F.sum(F.col("_va") * F.col("_vb")).alias("_svv"),
-        )
-        .withColumn("_one", F.lit(1))
-    )
-    deg = (
-        e.select(F.col("_u").alias("_x"))
-        .unionAll(e.select(F.col("_v2").alias("_x")))
-        .groupBy("_x")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("_deg"))
-        .agg(
-            F.sum(
-                F.col("_deg") * F.col("_deg")
-            ).cast("bigint").alias("_sdeg2")
-        )
-        .withColumn("_one", F.lit(1))
-    )
-    j = vstats.join(F.broadcast(cross), on="_one").join(
-        F.broadcast(deg), on="_one"
+    j, e = _spatial_edge_stats(
+        values, edges, id_col, value_col, src_col, dst_col,
+        ["_m1", "_m2", "_m3", "_m4"],
+        [F.sum(F.col("_va") * F.col("_vb")).alias("_svv")],
+        positive=True,
     )
     n = F.col("n_nodes").cast("double")
     m = F.col("n_edges").cast("double")

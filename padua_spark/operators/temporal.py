@@ -1840,6 +1840,57 @@ def log_log_elasticity(
     )
 
 
+def _rayleigh_sums(theta) -> list:
+    """The three additive circular sums ``(n, Σcosθ, Σsinθ)`` as
+    ``n``/``_c``/``_s`` — one aggregation, mergeable by adding, shared
+    by :func:`rayleigh_uniformity` and its windowed monitor."""
+    return [
+        F.count(F.lit(1)).cast("bigint").alias("n"),
+        F.sum(F.cos(theta)).alias("_c"),
+        F.sum(F.sin(theta)).alias("_s"),
+    ]
+
+
+def _rayleigh_summary() -> list:
+    """Zar's closed-form finalizer over :func:`_rayleigh_sums`:
+    ``(n, mean_direction, r_bar, circ_variance, rayleigh_z,
+    p_value)``, 6dp, NULLs when n = 0."""
+    nd = F.col("n").cast("double")
+    rbar = F.when(
+        F.col("n") > 0,
+        F.sqrt(F.col("_c") * F.col("_c") + F.col("_s") * F.col("_s"))
+        / nd,
+    )
+    z = nd * rbar * rbar
+    p = F.exp(-z) * (
+        1.0
+        + (2.0 * z - z * z) / (4.0 * nd)
+        - (
+            24.0 * z
+            - 132.0 * z * z
+            + 76.0 * z * z * z
+            - 9.0 * z * z * z * z
+        ) / (288.0 * nd * nd)
+    )
+    return [
+        "n",
+        F.round(
+            F.when(F.col("n") > 0, F.atan2(F.col("_s"), F.col("_c"))),
+            6,
+        ).alias("mean_direction"),
+        F.round(rbar, 6).alias("r_bar"),
+        F.round(1.0 - rbar, 6).alias("circ_variance"),
+        F.round(z, 6).alias("rayleigh_z"),
+        F.round(
+            F.when(
+                F.col("n") > 0,
+                F.greatest(F.lit(0.0), F.least(p, F.lit(1.0))),
+            ),
+            6,
+        ).alias("p_value"),
+    ]
+
+
 def rayleigh_uniformity(
     df: DataFrame,
     angle_col: str,
@@ -1863,45 +1914,8 @@ def rayleigh_uniformity(
     *Biostatistical Analysis* §27.
     """
     a = F.col(angle_col).cast("double")
-    agg = df.where(a.isNotNull()).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum(F.cos(a)).alias("_c"),
-        F.sum(F.sin(a)).alias("_s"),
-    )
-    nd = F.col("n").cast("double")
-    rbar = F.when(
-        F.col("n") > 0,
-        F.sqrt(F.col("_c") * F.col("_c") + F.col("_s") * F.col("_s"))
-        / nd,
-    )
-    z = nd * rbar * rbar
-    p = F.exp(-z) * (
-        1.0
-        + (2.0 * z - z * z) / (4.0 * nd)
-        - (
-            24.0 * z
-            - 132.0 * z * z
-            + 76.0 * z * z * z
-            - 9.0 * z * z * z * z
-        ) / (288.0 * nd * nd)
-    )
-    return agg.select(
-        "n",
-        F.round(
-            F.when(F.col("n") > 0, F.atan2(F.col("_s"), F.col("_c"))),
-            6,
-        ).alias("mean_direction"),
-        F.round(rbar, 6).alias("r_bar"),
-        F.round(1.0 - rbar, 6).alias("circ_variance"),
-        F.round(z, 6).alias("rayleigh_z"),
-        F.round(
-            F.when(
-                F.col("n") > 0,
-                F.greatest(F.lit(0.0), F.least(p, F.lit(1.0))),
-            ),
-            6,
-        ).alias("p_value"),
-    )
+    agg = df.where(a.isNotNull()).agg(*_rayleigh_sums(a))
+    return agg.select(*_rayleigh_summary())
 
 
 def burstiness(
@@ -2099,6 +2113,67 @@ def pettitt_test(
     return track_cached(out, base)
 
 
+def _pinball_aggs(a, forecasts) -> list:
+    """Per-level pinball partials for ``forecasts`` = [(q, forecast
+    Column)] against the actual ``a``: row count ``_n{i}``, loss sum
+    ``_s{i}`` and coverage count ``_c{i}``, each over the rows where
+    both sides are non-NULL. Shared by :func:`pinball_loss` and its
+    windowed monitor."""
+    aggs = []
+    for i, (q, fc) in enumerate(forecasts):
+        ok = a.isNotNull() & fc.isNotNull()
+        loss = F.when(
+            ok,
+            F.when(a >= fc, float(q) * (a - fc)).otherwise(
+                (1.0 - float(q)) * (fc - a)
+            ),
+        )
+        aggs += [
+            F.count(F.when(ok, 1)).cast("bigint").alias(f"_n{i}"),
+            F.sum(loss).alias(f"_s{i}"),
+            F.sum(F.when(ok & (a <= fc), 1).otherwise(0))
+            .cast("bigint").alias(f"_c{i}"),
+        ]
+    return aggs
+
+
+def _pinball_rows(agg, lead, levels) -> DataFrame:
+    """One row per declared level out of the :func:`_pinball_aggs`
+    frame — a compile-time k-branch union of ``(*lead, quantile, n,
+    pinball, coverage)``."""
+    from functools import reduce
+
+    branches = []
+    for i, (q, _col) in enumerate(levels):
+        nd = F.col(f"_n{i}").cast("double")
+        branches.append(
+            agg.select(
+                *lead,
+                F.lit(float(q)).alias("quantile"),
+                F.col(f"_n{i}").alias("n"),
+                # portable HALF_UP (dyadic group sizes and hourly
+                # windows make exact 6dp midpoints structural with
+                # decimal-valued data)
+                (
+                    F.floor(
+                        F.when(
+                            F.col(f"_n{i}") > 0, F.col(f"_s{i}") / nd
+                        ) * 1e6 + F.lit(0.5)
+                    ).cast("double") / 1e6
+                ).alias("pinball"),
+                (
+                    F.floor(
+                        F.when(
+                            F.col(f"_n{i}") > 0,
+                            F.col(f"_c{i}").cast("double") / nd,
+                        ) * 1e6 + F.lit(0.5)
+                    ).cast("double") / 1e6
+                ).alias("coverage"),
+            )
+        )
+    return reduce(lambda x, y: x.unionAll(y), branches)
+
+
 def pinball_loss(
     df: DataFrame,
     group_cols: list[str],
@@ -2127,62 +2202,18 @@ def pinball_loss(
     Beyond the reference; standard per Koenker & Bassett 1978 /
     Gneiting 2011.
     """
-    from functools import reduce
-
     from pyspark import StorageLevel
 
     from padua_spark.io_utils import track_cached
 
-    a = F.col(actual_col).cast("double")
     levels = sorted(forecast_cols.items())
-    aggs = []
-    for i, (q, col) in enumerate(levels):
-        fc = F.col(col).cast("double")
-        ok = a.isNotNull() & fc.isNotNull()
-        loss = F.when(
-            ok,
-            F.when(a >= fc, float(q) * (a - fc)).otherwise(
-                (1.0 - float(q)) * (fc - a)
-            ),
+    agg = df.groupBy(*group_cols).agg(
+        *_pinball_aggs(
+            F.col(actual_col).cast("double"),
+            [(q, F.col(col).cast("double")) for q, col in levels],
         )
-        aggs += [
-            F.count(F.when(ok, 1)).cast("bigint").alias(f"_n{i}"),
-            F.sum(loss).alias(f"_s{i}"),
-            F.sum(F.when(ok & (a <= fc), 1).otherwise(0))
-            .cast("bigint").alias(f"_c{i}"),
-        ]
-    agg = df.groupBy(*group_cols).agg(*aggs).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    branches = []
-    for i, (q, _col) in enumerate(levels):
-        nd = F.col(f"_n{i}").cast("double")
-        branches.append(
-            agg.select(
-                *group_cols,
-                F.lit(float(q)).alias("quantile"),
-                F.col(f"_n{i}").alias("n"),
-                # portable HALF_UP (dyadic group sizes make exact
-                # 6dp midpoints structural with decimal-valued data)
-                (
-                    F.floor(
-                        F.when(
-                            F.col(f"_n{i}") > 0, F.col(f"_s{i}") / nd
-                        ) * 1e6 + F.lit(0.5)
-                    ).cast("double") / 1e6
-                ).alias("pinball"),
-                (
-                    F.floor(
-                        F.when(
-                            F.col(f"_n{i}") > 0,
-                            F.col(f"_c{i}").cast("double") / nd,
-                        ) * 1e6 + F.lit(0.5)
-                    ).cast("double") / 1e6
-                ).alias("coverage"),
-            )
-        )
-    out = reduce(lambda x, y: x.unionAll(y), branches)
-    return track_cached(out, agg)
+    ).persist(StorageLevel.MEMORY_AND_DISK)
+    return track_cached(_pinball_rows(agg, group_cols, levels), agg)
 
 
 def dickey_fuller(
@@ -2513,6 +2544,57 @@ def binary_segmentation(
     return track_cached(out, key_tot)
 
 
+def _prefix_deviations(df, group_cols, order_cols, value_col):
+    """The changepoint core of :func:`snht_test` and
+    :func:`buishand_range`: ONE group-partitioned ordered window pass
+    (running sum ``_c`` = C_k, row index ``_t`` = k) joined to the
+    per-group moments (``_n``, ``_sx``, ``_sxx``). Returns
+    ``(joined, base, s_k, var0)``: the prefix deviation
+    ``S_k = C_k − k·x̄`` and the population variance σ̂², as Columns
+    over ``joined``. ``base`` (non-NULL values) feeds both the window
+    pass and the moments, so it is persisted; track it on the
+    result."""
+    from pyspark import StorageLevel
+
+    v = F.col(value_col).cast("double")
+    base = df.where(v.isNotNull()).select(
+        *group_cols, *order_cols, v.alias("_v")
+    ).persist(StorageLevel.MEMORY_AND_DISK)
+    w = (
+        Window.partitionBy(*group_cols)
+        .orderBy(*[F.col(c).asc() for c in order_cols])
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    wo = Window.partitionBy(*group_cols).orderBy(
+        *[F.col(c).asc() for c in order_cols]
+    )
+    stepped = base.select(
+        *group_cols,
+        F.sum("_v").over(w).alias("_c"),
+        F.row_number().over(wo).cast("double").alias("_t"),
+    )
+    mom = base.groupBy(*group_cols).agg(
+        F.count(F.lit(1)).cast("bigint").alias("_n"),
+        F.sum("_v").alias("_sx"),
+        F.sum(F.col("_v") * F.col("_v")).alias("_sxx"),
+    )
+    nd = F.col("_n").cast("double")
+    mean = F.col("_sx") / nd
+    var0 = (F.col("_sxx") - nd * mean * mean) / nd
+    s_k = F.col("_c") - F.col("_t") * mean
+    return stepped.join(mom, on=group_cols), base, s_k, var0
+
+
+def _earliest_argmax(score):
+    """``change_index``: the earliest ``_k`` maximising ``score``;
+    NULL when ``score`` is NULL on every row of the group (a
+    degenerate series: n < 2 or σ̂ = 0)."""
+    return F.min_by(
+        F.col("_k"),
+        F.when(score.isNotNull(), F.struct(-score, F.col("_k"))),
+    ).cast("bigint").alias("change_index")
+
+
 def snht_test(
     df: DataFrame,
     group_cols: list[str],
@@ -2537,45 +2619,19 @@ def snht_test(
     and ``T(k) = (S_k²/σ̂²)·(1/k + 1/(n−k))`` — ONE group-partitioned
     ordered window pass (running sum + row index, the
     :func:`kpss_level` family contract), one per-group moment
-    aggregation joined back, one argmax roll-up. Output per group:
-    ``(groups..., n, t0_stat, change_index)``, 6dp; NULL stat when
+    aggregation joined back (both in :func:`_prefix_deviations`), one
+    argmax roll-up. Output one row per group: ``(groups..., n,
+    t0_stat, change_index)``, 6dp; NULL stat and change_index when
     n < 2 or σ̂ = 0. Asymptotic critical values are tabulated
     (Khaliq & Ouarda 2007) and n-dependent; reported raw.
     """
-    v = F.col(value_col).cast("double")
-    from pyspark import StorageLevel
-
     from padua_spark.io_utils import track_cached
 
-    # base feeds TWO consumers (the ordered window pass and the moment
-    # aggregation) — persist or the upstream scan runs twice
-    base = df.where(v.isNotNull()).select(
-        *group_cols, *order_cols, v.alias("_v")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    w = (
-        Window.partitionBy(*group_cols)
-        .orderBy(*[F.col(c).asc() for c in order_cols])
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    wo = Window.partitionBy(*group_cols).orderBy(
-        *[F.col(c).asc() for c in order_cols]
-    )
-    stepped = base.select(
-        *group_cols,
-        F.sum("_v").over(w).alias("_c"),
-        F.row_number().over(wo).cast("double").alias("_t"),
-    )
-    mom = base.groupBy(*group_cols).agg(
-        F.count(F.lit(1)).cast("bigint").alias("_n"),
-        F.sum("_v").alias("_sx"),
-        F.sum(F.col("_v") * F.col("_v")).alias("_sxx"),
+    joined, base, s_k, var0 = _prefix_deviations(
+        df, group_cols, order_cols, value_col
     )
     nd = F.col("_n").cast("double")
-    mean = F.col("_sx") / nd
-    var0 = (F.col("_sxx") - nd * mean * mean) / nd
-    joined = stepped.join(mom, on=group_cols)
     k = F.col("_t")
-    s_k = F.col("_c") - k * mean
     t_k = F.when(
         (k < nd) & (var0 > 0),
         (s_k * s_k / var0) * (1.0 / k + 1.0 / (nd - k)),
@@ -2583,13 +2639,11 @@ def snht_test(
     staged = joined.select(
         *group_cols, F.col("_n"), k.alias("_k"),
         t_k.alias("_tk"),
-    ).where(F.col("_tk").isNotNull())
+    )
     agg = staged.groupBy(*group_cols).agg(
         F.max("_n").alias("n"),
         F.max("_tk").alias("_t0"),
-        F.min_by(
-            F.col("_k"), F.struct(-F.col("_tk"), F.col("_k"))
-        ).cast("bigint").alias("change_index"),
+        _earliest_argmax(F.col("_tk")),
     )
     out = agg.select(
         *group_cols, "n",
@@ -2613,44 +2667,17 @@ def buishand_range(
     ``R = (max_k S_k − min_k S_k)/σ̂`` (population σ̂, k = 0..n with
     S_0 = S_n = 0, so max ≥ 0 ≥ min), rescaled ``R/√n`` for the
     tabulated critical values (1.55 at 5% asymptotic); break index =
-    argmax |S_k| (earliest on ties). Same one-window-pass + moment
-    join shape as :func:`snht_test` (``S_k = C_k − k·x̄``). Output
-    per group: ``(groups..., n, range_stat, rescaled_range,
-    change_index)``, 6dp; NULLs when n < 2 or σ̂ = 0.
+    argmax |S_k| (earliest on ties). The window pass, moment join and
+    ``S_k = C_k − k·x̄`` are :func:`_prefix_deviations`, shared with
+    :func:`snht_test`. Output one row per group: ``(groups..., n,
+    range_stat, rescaled_range, change_index)``, 6dp; NULL stats and
+    change_index when n < 2 or σ̂ = 0.
     """
-    v = F.col(value_col).cast("double")
-    from pyspark import StorageLevel
-
     from padua_spark.io_utils import track_cached
 
-    # base feeds TWO consumers (the ordered window pass and the moment
-    # aggregation) — persist or the upstream scan runs twice
-    base = df.where(v.isNotNull()).select(
-        *group_cols, *order_cols, v.alias("_v")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    w = (
-        Window.partitionBy(*group_cols)
-        .orderBy(*[F.col(c).asc() for c in order_cols])
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    joined, base, s_k, var0 = _prefix_deviations(
+        df, group_cols, order_cols, value_col
     )
-    wo = Window.partitionBy(*group_cols).orderBy(
-        *[F.col(c).asc() for c in order_cols]
-    )
-    stepped = base.select(
-        *group_cols,
-        F.sum("_v").over(w).alias("_c"),
-        F.row_number().over(wo).cast("double").alias("_t"),
-    )
-    mom = base.groupBy(*group_cols).agg(
-        F.count(F.lit(1)).cast("bigint").alias("_n"),
-        F.sum("_v").alias("_sx"),
-        F.sum(F.col("_v") * F.col("_v")).alias("_sxx"),
-    )
-    nd = F.col("_n").cast("double")
-    mean = F.col("_sx") / nd
-    var0 = (F.col("_sxx") - nd * mean * mean) / nd
-    joined = stepped.join(mom, on=group_cols)
-    s_k = F.col("_c") - F.col("_t") * mean
     staged = joined.select(
         *group_cols, F.col("_n"),
         F.col("_t").alias("_k"),
@@ -2662,9 +2689,9 @@ def buishand_range(
         # S_0 = 0 participates in the range bounds by definition
         F.greatest(F.max("_sk"), F.lit(0.0)).alias("_smax"),
         F.least(F.min("_sk"), F.lit(0.0)).alias("_smin"),
-        F.min_by(
-            F.col("_k"), F.struct(-F.abs(F.col("_sk")), F.col("_k"))
-        ).cast("bigint").alias("change_index"),
+        _earliest_argmax(
+            F.when(F.col("_sd").isNotNull(), F.abs(F.col("_sk")))
+        ),
         F.max("_sd").alias("_sd"),
     )
     nd2 = F.col("n").cast("double")

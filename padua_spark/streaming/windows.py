@@ -4,7 +4,7 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, GroupedData, SparkSession, Window
 from pyspark.sql import functions as F
 
 NANOS_PER_SEC = 1_000_000_000
@@ -32,6 +32,96 @@ def _expr_bin_col(src: str, k: int) -> Column:
     ``("*", _expr_bin_col(...))`` over the grouped frame)."""
     return F.expr(
         f"CAST(least({k - 1}, floor({src} * {k})) AS INT) AS __padua_bin"
+    )
+
+
+def _bin_count(alias: str, cond: str = "") -> str:
+    """Per-bin row count template (``{i}`` = bin) for
+    :func:`_binned_window_agg`, optionally under an extra ``cond``."""
+    return (
+        f"CAST(sum(CASE WHEN __padua_bin = {{i}}{cond} THEN 1 ELSE 0 END) "
+        f"AS BIGINT) AS {alias}{{i}}"
+    )
+
+
+def _bin_sum(alias: str, value: str) -> str:
+    """Per-bin sum-of-``value`` template for :func:`_binned_window_agg`."""
+    return (
+        f"sum(CASE WHEN __padua_bin = {{i}} THEN {value} ELSE 0.0D END) "
+        f"AS {alias}{{i}}"
+    )
+
+
+# positives ``_p{i}`` / negatives ``_g{i}`` per score bin
+_POS_NEG_BINS = (
+    _bin_count("_p", " AND _y = 1"), _bin_count("_g", " AND _y = 0")
+)
+
+
+def _binned_window_agg(
+    withts, src, k, window_duration, watermark, group_cols, *cells
+) -> DataFrame:
+    """The per-bin counting shared by the k-binned monitors: ``src``
+    in [0, 1] quantized into ``k`` equal-width bins (projected once,
+    :func:`_expr_bin_col`), then ONE stateful aggregation per (window,
+    group) of every ``cells`` template for every bin, bin-major. Each
+    aggregate is one parsed SQL expression (one py4j call, the same
+    AST as the Column form — :func:`_expr_sum_chain` rationale)."""
+    withb = withts.select("*", _expr_bin_col(src, k))
+    aggs = [F.expr(c.format(i=i)) for i in range(k) for c in cells]
+    return _window_keyed(
+        withb, window_duration, watermark, *group_cols
+    ).agg(*aggs)
+
+
+def _scored_bin_counts(
+    df, ts_col, score_col, label_col, group_cols, window_duration,
+    watermark, k,
+) -> DataFrame:
+    """Per-bin positive/negative counts ``_p{i}``/``_g{i}`` of binary
+    labelled scores in [0, 1] (NULL or out-of-range rows dropped) per
+    (window, group) — the front half of every binned ranking monitor
+    (AUC, average precision, gains)."""
+    s = score_col.cast("double")
+    y = label_col.cast("int")
+    withts = df.where(
+        s.isNotNull() & y.isNotNull() & (s >= 0) & (s <= 1)
+    ).select(
+        ts_col.alias("_event_time"),
+        *group_cols,
+        s.alias("_s"),
+        y.alias("_y"),
+    )
+    return _binned_window_agg(
+        withts, "_s", k, window_duration, watermark, group_cols,
+        *_POS_NEG_BINS,
+    )
+
+
+def _pos_neg_cells(bins) -> Column:
+    """The per-bin ``(p, g)`` counts as one array, in ``bins`` order —
+    the input of the per-ROW folds (O(k) per window·group, not per
+    event)."""
+    return F.expr(
+        "array("
+        + ",".join(f"struct(_p{i} AS p, _g{i} AS g)" for i in bins)
+        + ")"
+    )
+
+
+def _pos_neg_summary(agg, folded, k, group_cols, stat) -> DataFrame:
+    """``(window_start, window_end, *group_cols, n_pos, n_neg, stat)``
+    from the binned counts, the fold result staged as ``_acc`` and the
+    class totals as ``_np``/``_ng`` (which ``stat`` reads)."""
+    staged = agg.withColumn("_acc", folded).withColumn(
+        "_np", _expr_sum_chain("_p{i}", k)
+    ).withColumn("_ng", _expr_sum_chain("_g{i}", k))
+    return staged.select(
+        *_window_bounds(),
+        *group_cols,
+        F.col("_np").alias("n_pos"),
+        F.col("_ng").alias("n_neg"),
+        stat,
     )
 
 
@@ -81,6 +171,57 @@ def read_event_stream(
     return reader.parquet(path)
 
 
+def _window_keyed(
+    frame: DataFrame,
+    window_duration: str | None,
+    watermark: str | None,
+    *keys,
+    slide_duration: str | None = None,
+    session_gap: str | None = None,
+    name: str = "_w",
+) -> GroupedData:
+    """The window key every operator here aggregates under: an
+    ``_event_time`` frame grouped by its event-time window (tumbling
+    ``window_duration``, sliding with ``slide_duration``, gap-based
+    sessions with ``session_gap``) aliased ``name``, plus ``keys``.
+    A windowed monitor is its batch statistic's aggregation under this
+    key. The watermark is attached on streaming frames only, right
+    before the stateful aggregation whose state eviction it drives (a
+    batch frame would just carry a node the optimizer drops)."""
+    if watermark and frame.isStreaming:
+        frame = frame.withWatermark("_event_time", watermark)
+    win = (
+        F.session_window("_event_time", session_gap)
+        if session_gap
+        else F.window("_event_time", window_duration, slide_duration)
+    )
+    return frame.groupBy(win.alias(name), *keys)
+
+
+def _window_bounds(name: str = "_w", prefix: str = "window") -> list:
+    """``({prefix}_start, {prefix}_end)`` out of the window struct
+    ``name`` — the leading columns of every windowed output."""
+    return [
+        F.col(f"{name}.start").alias(f"{prefix}_start"),
+        F.col(f"{name}.end").alias(f"{prefix}_end"),
+    ]
+
+
+def _generic_window_agg(
+    df, ts_col, key_cols, aggs, watermark, name, window_duration=None,
+    **window,
+) -> DataFrame:
+    """``aggs`` per (window, ``key_cols``), flattened to
+    ``({name}_start, {name}_end, *key_cols, *agg columns)`` — the
+    body of the three generic window aggregations below."""
+    out = _window_keyed(
+        df.withColumn("_event_time", ts_col), window_duration, watermark,
+        *key_cols, name=name, **window,
+    ).agg(*aggs)
+    agg_cols = [c for c in out.columns if c != name and c not in key_cols]
+    return out.select(*_window_bounds(name, name), *key_cols, *agg_cols)
+
+
 def tumbling_window_agg(
     df: DataFrame,
     ts_col: Column,
@@ -92,18 +233,8 @@ def tumbling_window_agg(
     """Tumbling event-time window aggregation. On a stream, pass a
     ``watermark`` (e.g. ``'2 hours'``) to bound state for late data; on
     batch the same plan just runs as a groupBy."""
-    withts = df.withColumn("_event_time", ts_col)
-    if watermark and withts.isStreaming:
-        withts = withts.withWatermark("_event_time", watermark)
-    out = withts.groupBy(
-        F.window("_event_time", window_duration).alias("window"), *key_cols
-    ).agg(*aggs)
-    agg_cols = [c for c in out.columns if c != "window" and c not in key_cols]
-    return out.select(
-        F.col("window.start").alias("window_start"),
-        F.col("window.end").alias("window_end"),
-        *key_cols,
-        *agg_cols,
+    return _generic_window_agg(
+        df, ts_col, key_cols, aggs, watermark, "window", window_duration
     )
 
 
@@ -121,21 +252,9 @@ def sliding_window_agg(
     so the shuffle carries (window, key) rows, never a per-event
     cross join against a window table. Same batch/streaming polymorphism
     as :func:`tumbling_window_agg`."""
-    withts = df.withColumn("_event_time", ts_col)
-    if watermark and withts.isStreaming:
-        withts = withts.withWatermark("_event_time", watermark)
-    out = withts.groupBy(
-        F.window("_event_time", window_duration, slide_duration).alias(
-            "window"
-        ),
-        *key_cols,
-    ).agg(*aggs)
-    agg_cols = [c for c in out.columns if c != "window" and c not in key_cols]
-    return out.select(
-        F.col("window.start").alias("window_start"),
-        F.col("window.end").alias("window_end"),
-        *key_cols,
-        *agg_cols,
+    return _generic_window_agg(
+        df, ts_col, key_cols, aggs, watermark, "window", window_duration,
+        slide_duration=slide_duration,
     )
 
 
@@ -149,20 +268,8 @@ def session_window_agg(
 ) -> DataFrame:
     """Gap-based session windows (``F.session_window``) — the streaming
     path for sessionization; state is bounded by the watermark."""
-    withts = df.withColumn("_event_time", ts_col)
-    if watermark and withts.isStreaming:
-        withts = withts.withWatermark("_event_time", watermark)
-    out = withts.groupBy(
-        F.session_window("_event_time", gap).alias("session"), *key_cols
-    ).agg(*aggs)
-    agg_cols = [
-        c for c in out.columns if c != "session" and c not in key_cols
-    ]
-    return out.select(
-        F.col("session.start").alias("session_start"),
-        F.col("session.end").alias("session_end"),
-        *key_cols,
-        *agg_cols,
+    return _generic_window_agg(
+        df, ts_col, key_cols, aggs, watermark, "session", session_gap=gap
     )
 
 
@@ -341,15 +448,12 @@ def windowed_value_histogram(
         ),
     )
     withts = df.where(v.isNotNull()).withColumn("_event_time", ts_col)
-    if watermark and withts.isStreaming:
-        withts = withts.withWatermark("_event_time", watermark)
-    out = withts.groupBy(
-        F.window("_event_time", window_duration).alias("window"),
-        bin_idx.alias("bin"),
+    out = _window_keyed(
+        withts, window_duration, watermark, bin_idx.alias("bin"),
+        name="window",
     ).agg(F.count(F.lit(1)).alias("n"))
     return out.select(
-        F.col("window.start").alias("window_start"),
-        F.col("window.end").alias("window_end"),
+        *_window_bounds("window"),
         "bin",
         "n",
     )
@@ -389,8 +493,6 @@ def windowed_cms_sketch(
     withts = df.where(key_col.isNotNull()).withColumn(
         "_event_time", ts_col
     )
-    if watermark:
-        withts = withts.withWatermark("_event_time", watermark)
     # stage the char hash once; fan out to the depth affine lines
     hashed = withts.select(
         "_event_time", _char_poly(key_col).alias("_kh")
@@ -414,12 +516,11 @@ def windowed_cms_sketch(
         F.col("_l.j").alias("j"),
         F.col("_l.bucket").alias("bucket"),
     )
-    agg = fanned.groupBy(
-        F.window("_event_time", window_duration).alias("_w"), "j", "bucket"
+    agg = _window_keyed(
+        fanned, window_duration, watermark, "j", "bucket"
     ).agg(F.count(F.lit(1)).alias("cnt"))
     return agg.select(
-        F.col("_w.start").alias("window_start"),
-        F.col("_w.end").alias("window_end"),
+        *_window_bounds(),
         "j",
         "bucket",
         "cnt",
@@ -460,21 +561,17 @@ def windowed_ddsketch(
     withts = df.where(v.isNotNull()).select(
         ts_col.alias("_event_time"), v.alias("_v")
     )
-    if watermark:
-        withts = withts.withWatermark("_event_time", watermark)
     bucket = F.when(
         F.col("_v") > 0,
         F.ceil(
             F.log(F.col("_v")) / F.lit(math.log(gamma))
         ).cast("bigint"),
     )
-    agg = withts.groupBy(
-        F.window("_event_time", window_duration).alias("_w"),
-        bucket.alias("bucket"),
+    agg = _window_keyed(
+        withts, window_duration, watermark, bucket.alias("bucket")
     ).agg(F.count(F.lit(1)).cast("bigint").alias("n"))
     return agg.select(
-        F.col("_w.start").alias("window_start"),
-        F.col("_w.end").alias("window_end"),
+        *_window_bounds(),
         "bucket",
         "n",
     )
@@ -513,22 +610,14 @@ def windowed_token_counts(
     withts = df.where(t.isNotNull()).select(
         ts_col.alias("_event_time"), toks.alias("_toks")
     )
-    if watermark and withts.isStreaming:
-        withts = withts.withWatermark("_event_time", watermark)
-    out = (
-        withts.select(
-            "_event_time", F.explode("_toks").alias("token")
-        )
-        .where(F.col("token") != "")
-        .groupBy(
-            F.window("_event_time", window_duration).alias("_w"),
-            "token",
-        )
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
+    exploded = withts.select(
+        "_event_time", F.explode("_toks").alias("token")
+    ).where(F.col("token") != "")
+    out = _window_keyed(exploded, window_duration, watermark, "token").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n")
     )
     return out.select(
-        F.col("_w.start").alias("window_start"),
-        F.col("_w.end").alias("window_end"),
+        *_window_bounds(),
         "token",
         "n",
     )
@@ -654,15 +743,11 @@ def windowed_confusion(
         p.alias("_p"),
         y.alias("_y"),
     )
-    if watermark and withts.isStreaming:
-        withts = withts.withWatermark("_event_time", watermark)
-    agg = withts.groupBy(
-        F.window("_event_time", window_duration).alias("_w"),
-        *group_cols,
+    agg = _window_keyed(
+        withts, window_duration, watermark, *group_cols
     ).agg(*confusion_count_aggs(F.col("_p"), F.col("_y")))
     flat = agg.select(
-        F.col("_w.start").alias("window_start"),
-        F.col("_w.end").alias("window_end"),
+        *_window_bounds(),
         *group_cols,
         "tp", "fp", "fn", "tn",
     )
@@ -720,32 +805,10 @@ def windowed_ece(
         p.alias("_p"),
         y.alias("_y"),
     )
-    if watermark and withts.isStreaming:
-        withts = withts.withWatermark("_event_time", watermark)
-    # parsed-SQL builders (one py4j call each, identical ASTs — see
-    # _expr_sum_chain): the former per-bin Column loops dominated the
-    # BUILD wall of every k-binned monitor
-    withb = withts.select("*", _expr_bin_col("_p", k))
-    aggs = []
-    for i in range(k):
-        aggs += [
-            F.expr(
-                f"CAST(sum(CASE WHEN __padua_bin = {i} THEN 1 ELSE 0 END) "
-                f"AS BIGINT) AS _n{i}"
-            ),
-            F.expr(
-                f"sum(CASE WHEN __padua_bin = {i} THEN _p ELSE 0.0D END) "
-                f"AS _sp{i}"
-            ),
-            F.expr(
-                f"sum(CASE WHEN __padua_bin = {i} THEN _y ELSE 0.0D END) "
-                f"AS _sy{i}"
-            ),
-        ]
-    agg = withb.groupBy(
-        F.window("_event_time", window_duration).alias("_w"),
-        *group_cols,
-    ).agg(*aggs)
+    agg = _binned_window_agg(
+        withts, "_p", k, window_duration, watermark, group_cols,
+        _bin_count("_n"), _bin_sum("_sp", "_p"), _bin_sum("_sy", "_y"),
+    )
     n_tot = _expr_sum_chain("_n{i}", k)
     gap_sql = [
         f"CASE WHEN _n{i} > 0 THEN abs(_sp{i} - _sy{i}) "
@@ -767,8 +830,7 @@ def windowed_ece(
         )
 
     return agg.select(
-        F.col("_w.start").alias("window_start"),
-        F.col("_w.end").alias("window_end"),
+        *_window_bounds(),
         *group_cols,
         n_tot.alias("n"),
         _r6(ece).alias("ece"),
@@ -798,7 +860,8 @@ def windowed_binned_auc(
     distinct scores don't straddle bin edges. The exact batch
     counterpart is ``extensions.features.group_auc``; this is the
     bounded-state face: one stateful aggregation to 2·n_bins count
-    partials per (window, group) key (no rank/sort — unstreamable),
+    partials per (window, group) key (:func:`_scored_bin_counts`; no
+    rank/sort — unstreamable),
     the cumulative-negatives fold over the n_bins-element array is a
     per-ROW expression. Late shards merge by adding counts.
 
@@ -807,51 +870,17 @@ def windowed_binned_auc(
     """
     group_cols = group_cols or []
     k = int(n_bins)
-    s = score_col.cast("double")
-    y = label_col.cast("int")
-    withts = df.where(
-        s.isNotNull() & y.isNotNull() & (s >= 0) & (s <= 1)
-    ).select(
-        ts_col.alias("_event_time"),
-        *group_cols,
-        s.alias("_s"),
-        y.alias("_y"),
+    agg = _scored_bin_counts(
+        df, ts_col, score_col, label_col, group_cols, window_duration,
+        watermark, k,
     )
-    if watermark and withts.isStreaming:
-        withts = withts.withWatermark("_event_time", watermark)
-    # parsed-SQL builders (identical ASTs, one py4j call per
-    # aggregate — _expr_sum_chain rationale)
-    withb = withts.select("*", _expr_bin_col("_s", k))
-    aggs = []
-    for i in range(k):
-        aggs += [
-            F.expr(
-                f"CAST(sum(CASE WHEN __padua_bin = {i} AND _y = 1 THEN 1 "
-                f"ELSE 0 END) AS BIGINT) AS _p{i}"
-            ),
-            F.expr(
-                f"CAST(sum(CASE WHEN __padua_bin = {i} AND _y = 0 THEN 1 "
-                f"ELSE 0 END) AS BIGINT) AS _g{i}"
-            ),
-        ]
-    agg = withb.groupBy(
-        F.window("_event_time", window_duration).alias("_w"),
-        *group_cols,
-    ).agg(*aggs)
     # fold the per-bin counts low→high carrying (neg_below, num):
     # num += pos_k·(neg_below + neg_k/2); neg_below += neg_k.
-    # The array is n_bins structs per ROW — interpreted HOF cost is
-    # O(n_bins) per (window, group), not per event.
-    cells = F.expr(
-        "array("
-        + ",".join(f"struct(_p{i} AS p, _g{i} AS g)" for i in range(k))
-        + ")"
-    )
     acc0 = F.struct(
         F.lit(0.0).alias("nb"), F.lit(0.0).alias("num")
     )
     folded = F.aggregate(
-        cells,
+        _pos_neg_cells(range(k)),
         acc0,
         lambda a, c: F.struct(
             (a["nb"] + c["g"].cast("double")).alias("nb"),
@@ -862,11 +891,6 @@ def windowed_binned_auc(
             ).alias("num"),
         ),
     )
-    n_pos = _expr_sum_chain("_p{i}", k)
-    n_neg = _expr_sum_chain("_g{i}", k)
-    staged = agg.withColumn("_acc", folded).withColumn(
-        "_np", n_pos
-    ).withColumn("_ng", n_neg)
     auc = F.when(
         (F.col("_np") > 0) & (F.col("_ng") > 0),
         F.col("_acc.num")
@@ -874,13 +898,8 @@ def windowed_binned_auc(
             F.col("_np").cast("double") * F.col("_ng").cast("double")
         ),
     )
-    return staged.select(
-        F.col("_w.start").alias("window_start"),
-        F.col("_w.end").alias("window_end"),
-        *group_cols,
-        F.col("_np").alias("n_pos"),
-        F.col("_ng").alias("n_neg"),
-        F.round(auc, 6).alias("auc"),
+    return _pos_neg_summary(
+        agg, folded, k, group_cols, F.round(auc, 6).alias("auc")
     )
 
 
@@ -910,7 +929,8 @@ def windowed_average_precision(
     The exact batch counterpart is
     ``extensions.features.average_precision`` (stepped, rank-exact);
     this is the bounded-state face: one stateful aggregation to
-    2·n_bins count partials per (window, group) key — no rank/sort,
+    2·n_bins count partials per (window, group) key
+    (:func:`_scored_bin_counts`) — no rank/sort,
     so it runs unchanged on a stream; late shards merge by adding
     counts. The high→low fold over the n_bins-element array is a
     per-ROW expression (O(n_bins) per window·group, not per event).
@@ -920,54 +940,19 @@ def windowed_average_precision(
     """
     group_cols = group_cols or []
     k = int(n_bins)
-    s = score_col.cast("double")
-    y = label_col.cast("int")
-    withts = df.where(
-        s.isNotNull() & y.isNotNull() & (s >= 0) & (s <= 1)
-    ).select(
-        ts_col.alias("_event_time"),
-        *group_cols,
-        s.alias("_s"),
-        y.alias("_y"),
+    agg = _scored_bin_counts(
+        df, ts_col, score_col, label_col, group_cols, window_duration,
+        watermark, k,
     )
-    if watermark and withts.isStreaming:
-        withts = withts.withWatermark("_event_time", watermark)
-    # parsed-SQL builders (identical ASTs, one py4j call per
-    # aggregate — _expr_sum_chain rationale)
-    withb = withts.select("*", _expr_bin_col("_s", k))
-    aggs = []
-    for i in range(k):
-        aggs += [
-            F.expr(
-                f"CAST(sum(CASE WHEN __padua_bin = {i} AND _y = 1 THEN 1 "
-                f"ELSE 0 END) AS BIGINT) AS _p{i}"
-            ),
-            F.expr(
-                f"CAST(sum(CASE WHEN __padua_bin = {i} AND _y = 0 THEN 1 "
-                f"ELSE 0 END) AS BIGINT) AS _g{i}"
-            ),
-        ]
-    agg = withb.groupBy(
-        F.window("_event_time", window_duration).alias("_w"),
-        *group_cols,
-    ).agg(*aggs)
     # fold the per-bin counts HIGH→LOW carrying (tp, fp, num):
     # tp += pos_k; fp += neg_k; num += pos_k·tp/(tp+fp)
-    cells = F.expr(
-        "array("
-        + ",".join(
-            f"struct(_p{i} AS p, _g{i} AS g)"
-            for i in range(k - 1, -1, -1)
-        )
-        + ")"
-    )
     acc0 = F.struct(
         F.lit(0.0).alias("tp"),
         F.lit(0.0).alias("fp"),
         F.lit(0.0).alias("num"),
     )
     folded = F.aggregate(
-        cells,
+        _pos_neg_cells(range(k - 1, -1, -1)),
         acc0,
         lambda a, c: F.struct(
             (a["tp"] + c["p"].cast("double")).alias("tp"),
@@ -986,21 +971,12 @@ def windowed_average_precision(
             ).alias("num"),
         ),
     )
-    n_pos = _expr_sum_chain("_p{i}", k)
-    n_neg = _expr_sum_chain("_g{i}", k)
-    staged = agg.withColumn("_acc", folded).withColumn(
-        "_np", n_pos
-    ).withColumn("_ng", n_neg)
     ap = F.when(
         F.col("_np") > 0,
         F.col("_acc.num") / F.col("_np").cast("double"),
     )
-    return staged.select(
-        F.col("_w.start").alias("window_start"),
-        F.col("_w.end").alias("window_end"),
-        *group_cols,
-        F.col("_np").alias("n_pos"),
-        F.col("_ng").alias("n_neg"),
+    return _pos_neg_summary(
+        agg, folded, k, group_cols,
         F.round(ap, 6).alias("average_precision"),
     )
 
@@ -1037,8 +1013,6 @@ def windowed_quality_screen(
     withts = df.where(F.col(text_col).isNotNull()).select(
         ts_col.alias("_event_time"), text_col
     )
-    if watermark and withts.isStreaming:
-        withts = withts.withWatermark("_event_time", watermark)
     flagged = gopher_rules(withts, text_col, **rule_kwargs)
     rule_names = [
         "rule_word_count", "rule_mean_word_len", "rule_symbol_ratio",
@@ -1051,17 +1025,14 @@ def windowed_quality_screen(
         ).cast("bigint").alias(r.replace("rule_", "fail_"))
         for r in rule_names
     ]
-    agg = flagged.groupBy(
-        F.window("_event_time", window_duration).alias("_w")
-    ).agg(
+    agg = _window_keyed(flagged, window_duration, watermark).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
         F.sum(F.col("quality_pass").cast("int")).cast("bigint")
         .alias("n_pass"),
         *fail_aggs,
     )
     return agg.select(
-        F.col("_w.start").alias("window_start"),
-        F.col("_w.end").alias("window_end"),
+        *_window_bounds(),
         "n_docs", "n_pass",
         F.round(
             F.col("n_pass").cast("double")
@@ -1114,8 +1085,6 @@ def windowed_novelty(
             _shingles_from_token_hashes(F.col("_th"), n_tokens)
         ).alias("_grams"),
     )
-    if watermark and withts.isStreaming:
-        withts = withts.withWatermark("_event_time", watermark)
     exploded = withts.select(
         "_event_time", F.explode("_grams").alias("_sh")
     )
@@ -1138,16 +1107,13 @@ def windowed_novelty(
     if broadcast_ref:
         ref = F.broadcast(ref)
     joined = exploded.join(ref, on="_sh", how="left")
-    agg = joined.groupBy(
-        F.window("_event_time", window_duration).alias("_w")
-    ).agg(
+    agg = _window_keyed(joined, window_duration, watermark).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_ngrams"),
         F.sum(F.col("_hit").isNull().cast("int")).cast("bigint")
         .alias("n_novel"),
     )
     return agg.select(
-        F.col("_w.start").alias("window_start"),
-        F.col("_w.end").alias("window_end"),
+        *_window_bounds(),
         "n_ngrams", "n_novel",
         F.round(
             F.col("n_novel").cast("double")
@@ -1169,65 +1135,28 @@ def windowed_circular_stats(
     rayleigh_uniformity` ("did today's traffic lose its usual peak
     hour?"): ONE stateful aggregation to three exact quantities per
     window (n, Σcosθ, Σsinθ) — O(1) state, late shards merge by
-    adding sums — then the shared closed-form finalizer (mean
-    direction, resultant length, circular variance, Rayleigh z, Zar's
-    finite-n p).
+    adding sums — then Zar's closed-form finalizer (mean direction,
+    resultant length, circular variance, Rayleigh z, finite-n p):
+    the batch operator's own ``temporal._rayleigh_sums`` and
+    ``temporal._rayleigh_summary`` under the window key.
 
     Output per window: ``(window_start, window_end, n,
     mean_direction, r_bar, circ_variance, rayleigh_z, p_value)``,
     6dp.
     """
+    from padua_spark.operators.temporal import (
+        _rayleigh_sums,
+        _rayleigh_summary,
+    )
+
     withts = df.select(
         ts_col.alias("_event_time"),
         angle_col.cast("double").alias("_th"),
     ).where(F.col("_th").isNotNull())
-    if watermark and withts.isStreaming:
-        withts = withts.withWatermark("_event_time", watermark)
-    agg = withts.groupBy(
-        F.window("_event_time", window_duration).alias("_w")
-    ).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum(F.cos(F.col("_th"))).alias("_c"),
-        F.sum(F.sin(F.col("_th"))).alias("_s"),
+    agg = _window_keyed(withts, window_duration, watermark).agg(
+        *_rayleigh_sums(F.col("_th"))
     )
-    nd = F.col("n").cast("double")
-    rbar = F.when(
-        F.col("n") > 0,
-        F.sqrt(F.col("_c") * F.col("_c") + F.col("_s") * F.col("_s"))
-        / nd,
-    )
-    z = nd * rbar * rbar
-    p = F.exp(-z) * (
-        1.0
-        + (2.0 * z - z * z) / (4.0 * nd)
-        - (
-            24.0 * z
-            - 132.0 * z * z
-            + 76.0 * z * z * z
-            - 9.0 * z * z * z * z
-        ) / (288.0 * nd * nd)
-    )
-    return agg.select(
-        F.col("_w.start").alias("window_start"),
-        F.col("_w.end").alias("window_end"),
-        "n",
-        F.round(
-            F.when(
-                F.col("n") > 0, F.atan2(F.col("_s"), F.col("_c"))
-            ),
-            6,
-        ).alias("mean_direction"),
-        F.round(rbar, 6).alias("r_bar"),
-        F.round(1.0 - rbar, 6).alias("circ_variance"),
-        F.round(z, 6).alias("rayleigh_z"),
-        F.round(
-            F.when(
-                F.col("n") > 0,
-                F.greatest(F.lit(0.0), F.least(p, F.lit(1.0))),
-            ),
-            6,
-        ).alias("p_value"),
-    )
+    return agg.select(*_window_bounds(), *_rayleigh_summary())
 
 
 def windowed_pinball_loss(
@@ -1250,13 +1179,15 @@ def windowed_pinball_loss(
     coverage counts and per-level row counts per (window, group) key
     — 3·k bounded partials, late shards merge by adding. The
     per-level output rows come from a compile-time k-branch union
-    over the aggregated frame (bounded: windows × groups rows).
+    over the aggregated frame (bounded: windows × groups rows). Both
+    halves are the batch operator's ``temporal._pinball_aggs`` and
+    ``temporal._pinball_rows`` under the window key.
     Rows where the actual or that level's forecast is NULL are
     excluded per level. Output per (window, group, level):
     ``(window_start, window_end, groups..., quantile, n, pinball,
     coverage)``, 6dp.
     """
-    from functools import reduce
+    from padua_spark.operators.temporal import _pinball_aggs, _pinball_rows
 
     group_cols = group_cols or []
     a = actual_col.cast("double")
@@ -1265,61 +1196,15 @@ def windowed_pinball_loss(
     for i, (_q, col) in enumerate(levels):
         sel.append(col.cast("double").alias(f"_f{i}"))
     withts = df.select(*sel)
-    if watermark and withts.isStreaming:
-        withts = withts.withWatermark("_event_time", watermark)
-    aggs = []
-    for i, (q, _col) in enumerate(levels):
-        fc = F.col(f"_f{i}")
-        av = F.col("_a")
-        ok = av.isNotNull() & fc.isNotNull()
-        loss = F.when(
-            ok,
-            F.when(av >= fc, float(q) * (av - fc)).otherwise(
-                (1.0 - float(q)) * (fc - av)
-            ),
+    agg = _window_keyed(
+        withts, window_duration, watermark, *group_cols
+    ).agg(
+        *_pinball_aggs(
+            F.col("_a"),
+            [(q, F.col(f"_f{i}")) for i, (q, _col) in enumerate(levels)],
         )
-        aggs += [
-            F.count(F.when(ok, 1)).cast("bigint").alias(f"_n{i}"),
-            F.sum(loss).alias(f"_s{i}"),
-            F.sum(F.when(ok & (av <= fc), 1).otherwise(0))
-            .cast("bigint").alias(f"_c{i}"),
-        ]
-    agg = withts.groupBy(
-        F.window("_event_time", window_duration).alias("_w"),
-        *group_cols,
-    ).agg(*aggs)
-    branches = []
-    for i, (q, _col) in enumerate(levels):
-        nd = F.col(f"_n{i}").cast("double")
-        branches.append(
-            agg.select(
-                F.col("_w.start").alias("window_start"),
-                F.col("_w.end").alias("window_end"),
-                *group_cols,
-                F.lit(float(q)).alias("quantile"),
-                F.col(f"_n{i}").alias("n"),
-                # portable HALF_UP: hourly windows have dyadic row
-                # counts, so the loss mean lands EXACTLY on 6dp
-                # midpoints where engine round() modes disagree
-                (
-                    F.floor(
-                        F.when(
-                            F.col(f"_n{i}") > 0,
-                            F.col(f"_s{i}") / nd,
-                        ) * 1e6 + F.lit(0.5)
-                    ).cast("double") / 1e6
-                ).alias("pinball"),
-                (
-                    F.floor(
-                        F.when(
-                            F.col(f"_n{i}") > 0,
-                            F.col(f"_c{i}").cast("double") / nd,
-                        ) * 1e6 + F.lit(0.5)
-                    ).cast("double") / 1e6
-                ).alias("coverage"),
-            )
-        )
-    return reduce(lambda x, y: x.unionAll(y), branches)
+    )
+    return _pinball_rows(agg, [*_window_bounds(), *group_cols], levels)
 
 
 def windowed_control_check(
@@ -1356,11 +1241,8 @@ def windowed_control_check(
     withts = df.where(v.isNotNull()).select(
         ts_col.alias("_event_time"), *group_cols, v.alias("_v")
     )
-    if watermark and withts.isStreaming:
-        withts = withts.withWatermark("_event_time", watermark)
-    agg = withts.groupBy(
-        F.window("_event_time", window_duration).alias("_w"),
-        *group_cols,
+    agg = _window_keyed(
+        withts, window_duration, watermark, *group_cols
     ).agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum("_v").alias("_s"),
@@ -1373,8 +1255,7 @@ def windowed_control_check(
     )
     mean = F.col("_s") / F.col("n").cast("double")
     return agg.select(
-        F.col("_w.start").alias("window_start"),
-        F.col("_w.end").alias("window_end"),
+        *_window_bounds(),
         *group_cols,
         "n",
         F.round(mean, 6).alias("mean"),
@@ -1437,8 +1318,6 @@ def windowed_fairness_check(
         y.alias("_y"),
         p.alias("_p"),
     )
-    if watermark and withts.isStreaming:
-        withts = withts.withWatermark("_event_time", watermark)
     aggs = []
     for i, gv in enumerate(groups):
         hit = F.col("_g") == F.lit(gv)
@@ -1455,9 +1334,7 @@ def windowed_fairness_check(
                 .otherwise(0)
             ).cast("bigint").alias(f"_fp{i}"),
         ]
-    agg = withts.groupBy(
-        F.window("_event_time", window_duration).alias("_w")
-    ).agg(*aggs)
+    agg = _window_keyed(withts, window_duration, watermark).agg(*aggs)
     ri = list(groups).index(reference_group)
 
     def _rates(i):
@@ -1475,8 +1352,7 @@ def windowed_fairness_check(
         ppr, tpr, fpr = _rates(i)
         branches.append(
             agg.select(
-                F.col("_w.start").alias("window_start"),
-                F.col("_w.end").alias("window_end"),
+                *_window_bounds(),
                 F.lit(gv).alias("group"),
                 F.col(f"_n{i}").alias("n"),
                 F.round(ppr, 6).alias("ppr"),
@@ -1509,10 +1385,11 @@ def windowed_gains_table(
     ``group_auc`` stays documented as binned-only-in-streaming).
 
     Exact quantile buckets need a rank/sort — unstreamable — so this
-    is the fixed-quantization contract of :func:`windowed_binned_auc`:
-    scores in [0, 1] quantize into ``n_bins`` equal-width bins held as
-    2·n_bins bounded count partials per (window, group) key in ONE
-    stateful aggregation (late shards merge by adding counts), and the
+    is the fixed-quantization contract of :func:`_scored_bin_counts`
+    (shared with :func:`windowed_binned_auc`): scores in [0, 1]
+    quantize into ``n_bins`` equal-width bins held as 2·n_bins bounded
+    count partials per (window, group) key in ONE stateful
+    aggregation (late shards merge by adding counts), and the
     gains table is the EXACT gains table of the QUANTIZED scores under
     the batch boundary law (ascending buckets split at
     ``min{v : F(v) ≥ ⌈q·n⌉}``, boundary values take the lower bucket,
@@ -1538,37 +1415,10 @@ def windowed_gains_table(
     group_cols = group_cols or []
     k = int(n_bins)
     nb = int(n_buckets)
-    s = score_col.cast("double")
-    y = label_col.cast("int")
-    withts = df.where(
-        s.isNotNull() & y.isNotNull() & (s >= 0) & (s <= 1)
-    ).select(
-        ts_col.alias("_event_time"),
-        *group_cols,
-        s.alias("_s"),
-        y.alias("_y"),
+    agg = _scored_bin_counts(
+        df, ts_col, score_col, label_col, group_cols, window_duration,
+        watermark, k,
     )
-    if watermark and withts.isStreaming:
-        withts = withts.withWatermark("_event_time", watermark)
-    # parsed-SQL builders (identical ASTs, one py4j call per
-    # aggregate — _expr_sum_chain rationale)
-    withb = withts.select("*", _expr_bin_col("_s", k))
-    aggs = []
-    for i in range(k):
-        aggs += [
-            F.expr(
-                f"CAST(sum(CASE WHEN __padua_bin = {i} AND _y = 1 THEN 1 "
-                f"ELSE 0 END) AS BIGINT) AS _p{i}"
-            ),
-            F.expr(
-                f"CAST(sum(CASE WHEN __padua_bin = {i} AND _y = 0 THEN 1 "
-                f"ELSE 0 END) AS BIGINT) AS _g{i}"
-            ),
-        ]
-    agg = withb.groupBy(
-        F.window("_event_time", window_duration).alias("_w"),
-        *group_cols,
-    ).agg(*aggs)
     n_tot = _expr_sum_chain("(_p{i} + _g{i})", k)
     p_tot = _expr_sum_chain("_p{i}", k)
     # low→high fold: carry (F_prev, bucket partials); each bin's
@@ -1654,8 +1504,7 @@ def windowed_gains_table(
         ),
     )["out"]
     exploded = staged.select(
-        F.col("_w.start").alias("window_start"),
-        F.col("_w.end").alias("window_end"),
+        *_window_bounds(),
         *group_cols,
         "_nt",
         "_pt",
@@ -1704,79 +1553,32 @@ def windowed_srm(
     bugs usually start at a deploy, so the per-window view localizes
     them where the all-time chi-square dilutes). Declared ``arms``
     become conditional-sum columns in ONE stateful aggregation per
-    (window, group) key (the :func:`windowed_fairness_check`
-    contract); χ² against the declared ratios and the closed-form
-    bounded-df chi-square SF are per-ROW expressions on the window
-    row. Late shards merge by adding counts.
+    (window, group) key; χ² against the declared ratios and the
+    closed-form bounded-df chi-square SF are per-ROW expressions on
+    the window row. Counts and finalizer are the batch operator's own
+    ``features._declared_counts`` and ``features._srm_summary`` under
+    the window key. Late shards merge by adding counts.
 
     Output one row per (window, group): ``(window_start, window_end,
     *group_cols, n, n_arm_0.., chi2, df, p_value, srm_flag_1pct)``,
     6dp; ``srm_flag_1pct`` is ``p_value < 0.01`` on the rounded p.
     """
-    from padua_spark.operators.stats import _chi2_sf_closed
+    from padua_spark.extensions.features import (
+        _declared_counts,
+        _srm_ratios,
+        _srm_summary,
+    )
 
     group_cols = group_cols or []
-    k = len(arms)
-    if k < 2:
-        raise ValueError("windowed_srm: need at least 2 arms")
-    if expected_ratios is None:
-        ratios = [1.0 / k] * k
-    else:
-        if len(expected_ratios) != k or any(
-            r <= 0 for r in expected_ratios
-        ):
-            raise ValueError(
-                "windowed_srm: expected_ratios must be positive and "
-                "match arms"
-            )
-        tot = float(sum(expected_ratios))
-        ratios = [float(r) / tot for r in expected_ratios]
+    ratios = _srm_ratios("windowed_srm", arms, expected_ratios)
     withts = df.where(arm_col.isin(list(arms))).select(
         ts_col.alias("_event_time"), *group_cols, arm_col.alias("_a")
     )
-    if watermark and withts.isStreaming:
-        withts = withts.withWatermark("_event_time", watermark)
-    aggs = [
-        F.sum(F.when(F.col("_a") == arm, 1).otherwise(0))
-        .cast("bigint").alias(f"n_arm_{i}")
-        for i, arm in enumerate(arms)
-    ]
-    agg = withts.groupBy(
-        F.window("_event_time", window_duration).alias("_w"),
-        *group_cols,
-    ).agg(*aggs)
-    n = None
-    for i in range(k):
-        c = F.col(f"n_arm_{i}")
-        n = c if n is None else n + c
-    staged = agg.withColumn("_n", n)
-    nd = F.col("_n").cast("double")
-    chi2 = None
-    for i in range(k):
-        e = F.lit(ratios[i]) * nd
-        o = F.col(f"n_arm_{i}").cast("double")
-        term = (o - e) * (o - e) / e
-        chi2 = term if chi2 is None else chi2 + term
-    staged = staged.withColumn(
-        "_chi2", F.when(F.col("_n") > 0, chi2)
+    staged = _declared_counts(
+        _window_keyed(withts, window_duration, watermark, *group_cols),
+        "_a", arms, [f"n_arm_{i}" for i in range(len(arms))],
     )
-    # the flag thresholds the reported (6dp) p, so the two always agree
-    p_value = F.round(
-        _chi2_sf_closed(F.col("_chi2"), F.lit(k - 1), max_df=max(k - 1, 1)),
-        6,
-    )
-    return staged.select(
-        F.col("_w.start").alias("window_start"),
-        F.col("_w.end").alias("window_end"),
-        *group_cols,
-        F.col("_n").alias("n"),
-        *[F.col(f"n_arm_{i}") for i in range(k)],
-        F.round("_chi2", 6).alias("chi2"),
-        F.lit(k - 1).cast("bigint").alias("df"),
-        p_value.alias("p_value"),
-        F.when(F.col("_chi2").isNotNull(), p_value < 0.01)
-        .alias("srm_flag_1pct"),
-    )
+    return _srm_summary(staged, ratios, [*_window_bounds(), *group_cols])
 
 
 def windowed_binned_gini(
@@ -1793,10 +1595,10 @@ def windowed_binned_gini(
     few whales?"), the bounded-state face of the exact batch Gini
     (exact Gini needs a per-window value sort — unstreamable):
 
-    non-negative values scaled into [0, 1] by the CALLER (the
-    :func:`windowed_binned_auc` contract) quantize into ``n_bins``
-    equal-width bins whose per-bin counts AND sums are the 2·n_bins
-    state per (window, group) key; the statistic is the exact
+    non-negative values scaled into [0, 1] by the CALLER quantize
+    into ``n_bins`` equal-width bins whose per-bin counts AND sums
+    (:func:`_binned_window_agg`) are the 2·n_bins state per (window,
+    group) key; the statistic is the exact
     grouped-data (Lorenz-trapezoid) Gini of the quantized
     distribution:
 
@@ -1814,27 +1616,10 @@ def windowed_binned_gini(
     withts = df.where(v.isNotNull() & (v >= 0) & (v <= 1)).select(
         ts_col.alias("_event_time"), *group_cols, v.alias("_v")
     )
-    if watermark and withts.isStreaming:
-        withts = withts.withWatermark("_event_time", watermark)
-    # parsed-SQL builders (identical ASTs, one py4j call per
-    # aggregate — _expr_sum_chain rationale)
-    withb = withts.select("*", _expr_bin_col("_v", k))
-    aggs = []
-    for i in range(k):
-        aggs += [
-            F.expr(
-                f"CAST(sum(CASE WHEN __padua_bin = {i} THEN 1 ELSE 0 END) "
-                f"AS BIGINT) AS _c{i}"
-            ),
-            F.expr(
-                f"sum(CASE WHEN __padua_bin = {i} THEN _v ELSE 0.0D END) "
-                f"AS _s{i}"
-            ),
-        ]
-    agg = withb.groupBy(
-        F.window("_event_time", window_duration).alias("_w"),
-        *group_cols,
-    ).agg(*aggs)
+    agg = _binned_window_agg(
+        withts, "_v", k, window_duration, watermark, group_cols,
+        _bin_count("_c"), _bin_sum("_s", "_v"),
+    )
     n_tot = _expr_sum_chain("_c{i}", k)
     s_tot = _expr_sum_chain("_s{i}", k)
     cells = F.expr(
@@ -1876,8 +1661,7 @@ def windowed_binned_gini(
         (F.col("_n") > 0) & (st > 0), 1.0 - folded["acc"]
     )
     return staged.select(
-        F.col("_w.start").alias("window_start"),
-        F.col("_w.end").alias("window_end"),
+        *_window_bounds(),
         *group_cols,
         F.col("_n").alias("n"),
         F.round(st, 6).alias("total"),
@@ -1929,8 +1713,6 @@ def windowed_embedding_drift(
     ).select(
         ts_col.alias("_event_time"), *group_cols, vec_col.alias("_v")
     )
-    if watermark and withts.isStreaming:
-        withts = withts.withWatermark("_event_time", watermark)
     # parsed-SQL builders (identical ASTs, one py4j call per
     # aggregate / per reduction — _expr_sum_chain rationale); the
     # reference components are embedded as CAST(<repr> AS DOUBLE) —
@@ -1939,11 +1721,9 @@ def windowed_embedding_drift(
         F.expr(f"sum(CAST(_v[{i}] AS DOUBLE)) AS _s{i}")
         for i in range(d)
     ]
-    agg = withts.groupBy(
-        F.window("_event_time", window_duration).alias("_w"),
-        *group_cols,
+    agg = _window_keyed(
+        withts, window_duration, watermark, *group_cols
     ).agg(*aggs)
-    nd = F.col("_n").cast("double")
     refnorm2 = sum(x * x for x in ref)
 
     def _mu(i):
@@ -1967,8 +1747,7 @@ def windowed_embedding_drift(
         dot / (F.sqrt(norm2) * F.lit(refnorm2 ** 0.5)),
     )
     return agg.select(
-        F.col("_w.start").alias("window_start"),
-        F.col("_w.end").alias("window_end"),
+        *_window_bounds(),
         *group_cols,
         F.col("_n").alias("n"),
         F.round(F.sqrt(l2), 6).alias("l2_distance"),
@@ -2015,6 +1794,7 @@ def windowed_benford(
     *group_cols, n, n_d1..n_d9, chi2, p_value, mad,
     nonconforming_mad)``, 6dp.
     """
+    from padua_spark.extensions.features import _declared_counts
     from padua_spark.operators.stats import _chi2_sf_closed
 
     group_cols = group_cols or []
@@ -2026,22 +1806,10 @@ def windowed_benford(
         ts_col.alias("_event_time"), *group_cols,
         first.alias("_d"),
     )
-    if watermark and withts.isStreaming:
-        withts = withts.withWatermark("_event_time", watermark)
-    aggs = [
-        F.sum(F.when(F.col("_d") == d, 1).otherwise(0))
-        .cast("bigint").alias(f"n_d{d}")
-        for d in range(1, 10)
-    ]
-    agg = withts.groupBy(
-        F.window("_event_time", window_duration).alias("_w"),
-        *group_cols,
-    ).agg(*aggs)
-    n = None
-    for d in range(1, 10):
-        c = F.col(f"n_d{d}")
-        n = c if n is None else n + c
-    staged = agg.withColumn("_n", n)
+    staged = _declared_counts(
+        _window_keyed(withts, window_duration, watermark, *group_cols),
+        "_d", range(1, 10), [f"n_d{d}" for d in range(1, 10)],
+    )
     nd = F.col("_n").cast("double")
     chi2, mad = None, None
     for d in range(1, 10):
@@ -2058,8 +1826,7 @@ def windowed_benford(
     )
     p = _chi2_sf_closed(F.col("_chi2"), F.lit(8), max_df=8)
     return staged.select(
-        F.col("_w.start").alias("window_start"),
-        F.col("_w.end").alias("window_end"),
+        *_window_bounds(),
         *group_cols,
         F.col("_n").alias("n"),
         *[F.col(f"n_d{d}") for d in range(1, 10)],
@@ -2069,6 +1836,30 @@ def windowed_benford(
         F.when(
             F.col("_mad").isNotNull(), F.col("_mad") > 0.015
         ).alias("nonconforming_mad"),
+    )
+
+
+def _declared_key_counts(
+    name, df, ts_col, key_col, keys, group_cols, window_duration,
+    watermark,
+) -> DataFrame:
+    """Counts of the DECLARED ``keys`` per (window, group) —
+    ``n_key_{i}``, the undeclared ``n_other`` and the declared total
+    ``_n`` (:func:`~padua_spark.extensions.features._declared_counts`
+    under the window key) — shared by the declared-key monitors;
+    errors name the public operator ``name``."""
+    from padua_spark.extensions.features import _declared_counts
+
+    if len(keys) < 2:
+        raise ValueError(f"{name}: need >= 2 keys")
+    withts = df.select(
+        ts_col.alias("_event_time"), *group_cols,
+        key_col.alias("_k"),
+    )
+    return _declared_counts(
+        _window_keyed(withts, window_duration, watermark, *group_cols),
+        "_k", keys, [f"n_key_{i}" for i in range(len(keys))],
+        other="n_other",
     )
 
 
@@ -2088,8 +1879,8 @@ def windowed_concentration(
     deploy-localized, and the all-time HHI hides them.
 
     Declared ``keys`` become conditional sums in ONE stateful
-    aggregation per (window, group) (the :func:`windowed_srm`
-    contract — a data-dependent key set would need a second stateful
+    aggregation per (window, group) (:func:`_declared_key_counts`
+    — a data-dependent key set would need a second stateful
     aggregation, which append-mode streaming forbids; undeclared
     keys fall into an ``n_other`` column EXCLUDED from the shares,
     documented). ``HHI = Σ s_i²``, ``effective_n = 1/HHI``,
@@ -2099,32 +1890,10 @@ def windowed_concentration(
     *group_cols, n, n_other, hhi, effective_n, top_share)``, 6dp.
     """
     group_cols = group_cols or []
-    if len(keys) < 2:
-        raise ValueError("windowed_concentration: need >= 2 keys")
-    withts = df.select(
-        ts_col.alias("_event_time"), *group_cols,
-        key_col.alias("_k"),
+    staged = _declared_key_counts(
+        "windowed_concentration", df, ts_col, key_col, keys, group_cols,
+        window_duration, watermark,
     )
-    if watermark and withts.isStreaming:
-        withts = withts.withWatermark("_event_time", watermark)
-    aggs = [
-        F.sum(F.when(F.col("_k") == k, 1).otherwise(0))
-        .cast("bigint").alias(f"n_key_{i}")
-        for i, k in enumerate(keys)
-    ] + [
-        F.sum(
-            F.when(~F.col("_k").isin(list(keys)), 1).otherwise(0)
-        ).cast("bigint").alias("n_other")
-    ]
-    agg = withts.groupBy(
-        F.window("_event_time", window_duration).alias("_w"),
-        *group_cols,
-    ).agg(*aggs)
-    n = None
-    for i in range(len(keys)):
-        c = F.col(f"n_key_{i}")
-        n = c if n is None else n + c
-    staged = agg.withColumn("_n", n)
     nd = F.col("_n").cast("double")
     hhi, top = None, None
     for i in range(len(keys)):
@@ -2135,8 +1904,7 @@ def windowed_concentration(
         "_hhi", F.when(F.col("_n") > 0, hhi)
     ).withColumn("_top", F.when(F.col("_n") > 0, top))
     return staged.select(
-        F.col("_w.start").alias("window_start"),
-        F.col("_w.end").alias("window_end"),
+        *_window_bounds(),
         *group_cols,
         F.col("_n").alias("n"),
         "n_other",
@@ -2187,16 +1955,13 @@ def windowed_binned_ks(
     withts = df.where(v.isNotNull()).select(
         ts_col.alias("_event_time"), *group_cols, v.alias("_v")
     )
-    if watermark and withts.isStreaming:
-        withts = withts.withWatermark("_event_time", watermark)
     aggs = [
         F.sum((F.col("_v") <= e).cast("int"))
         .cast("bigint").alias(f"n_le_{i}")
         for i, e in enumerate(bin_edges)
     ] + [F.count(F.lit(1)).cast("bigint").alias("_n")]
-    agg = withts.groupBy(
-        F.window("_event_time", window_duration).alias("_w"),
-        *group_cols,
+    agg = _window_keyed(
+        withts, window_duration, watermark, *group_cols
     ).agg(*aggs)
     nd = F.col("_n").cast("double")
     gap = None
@@ -2212,8 +1977,7 @@ def windowed_binned_ks(
         F.when(F.col("_n") > 0, F.lit(1.36) / F.sqrt(nd)),
     )
     return staged.select(
-        F.col("_w.start").alias("window_start"),
-        F.col("_w.end").alias("window_end"),
+        *_window_bounds(),
         *group_cols,
         F.col("_n").alias("n"),
         F.round("_ks", 6).alias("ks_stat"),
@@ -2252,12 +2016,9 @@ def windowed_extremes(
     withts = df.where(v.isNotNull()).select(
         ts_col.alias("_event_time"), *group_cols, v.alias("_v")
     )
-    if watermark and withts.isStreaming:
-        withts = withts.withWatermark("_event_time", watermark)
     exc = F.when(F.col("_v") > u, F.col("_v") - u)
-    agg = withts.groupBy(
-        F.window("_event_time", window_duration).alias("_w"),
-        *group_cols,
+    agg = _window_keyed(
+        withts, window_duration, watermark, *group_cols
     ).agg(
         F.count(F.lit(1)).cast("bigint").alias("_n"),
         F.max("_v").alias("_vmax"),
@@ -2267,8 +2028,7 @@ def windowed_extremes(
         F.max(exc).alias("_mexc"),
     )
     return agg.select(
-        F.col("_w.start").alias("window_start"),
-        F.col("_w.end").alias("window_end"),
+        *_window_bounds(),
         *group_cols,
         F.col("_n").alias("n"),
         F.round("_vmax", 6).alias("v_max"),
@@ -2302,7 +2062,7 @@ def windowed_entropy(
     and the effective alphabet ``e^H``.
 
     Declared keys become conditional sums in ONE stateful aggregation
-    per (window, group) (the :func:`windowed_srm` contract);
+    per (window, group) (:func:`_declared_key_counts`);
     undeclared keys count into ``n_other``, EXCLUDED from the shares
     (documented). Zero-count keys contribute 0 (the 0·ln 0 limit).
     Late shards merge by adding counts. Output one row per (window,
@@ -2310,34 +2070,10 @@ def windowed_entropy(
     entropy_nats, entropy_norm, effective_alphabet)``, 6dp.
     """
     group_cols = group_cols or []
-    if len(keys) < 2:
-        raise ValueError("windowed_entropy: need >= 2 keys")
-    import math
-
-    withts = df.select(
-        ts_col.alias("_event_time"), *group_cols,
-        key_col.alias("_k"),
+    staged = _declared_key_counts(
+        "windowed_entropy", df, ts_col, key_col, keys, group_cols,
+        window_duration, watermark,
     )
-    if watermark and withts.isStreaming:
-        withts = withts.withWatermark("_event_time", watermark)
-    aggs = [
-        F.sum(F.when(F.col("_k") == k, 1).otherwise(0))
-        .cast("bigint").alias(f"n_key_{i}")
-        for i, k in enumerate(keys)
-    ] + [
-        F.sum(
-            F.when(~F.col("_k").isin(list(keys)), 1).otherwise(0)
-        ).cast("bigint").alias("n_other")
-    ]
-    agg = withts.groupBy(
-        F.window("_event_time", window_duration).alias("_w"),
-        *group_cols,
-    ).agg(*aggs)
-    n = None
-    for i in range(len(keys)):
-        c = F.col(f"n_key_{i}")
-        n = c if n is None else n + c
-    staged = agg.withColumn("_n", n)
     nd = F.col("_n").cast("double")
     ent = None
     for i in range(len(keys)):
@@ -2350,8 +2086,7 @@ def windowed_entropy(
         "_h", F.when(F.col("_n") > 0, ent)
     )
     return staged.select(
-        F.col("_w.start").alias("window_start"),
-        F.col("_w.end").alias("window_end"),
+        *_window_bounds(),
         *group_cols,
         F.col("_n").alias("n"),
         "n_other",
