@@ -302,11 +302,10 @@ def test_declared_counts_undeclared_only(spark, name):
         [("a", "z", datetime.datetime(2024, 1, 1, 0, m)) for m in (1, 2, 3)],
         "g string, k string, ts timestamp",
     )
-    out = _declared_call(name, df, F.col("ts"))
-    got = [
-        {c: r[c] for c in _DECLARED_EXPECT[name][0]} for r in out.collect()
-    ] if _DECLARED_EXPECT[name] else out.collect()
-    assert got == _DECLARED_EXPECT[name]
+    want = _DECLARED_EXPECT[name]
+    cols = want[0] if want else {}
+    out = _declared_call(name, df, F.col("ts")).collect()
+    assert [{c: r[c] for c in cols} for r in out] == want
 
 
 # --- append mode: the window key's watermark closes windows -----------------
