@@ -556,7 +556,10 @@ def gini_concentration(
     the sum has a fractional part that a long cast would hide.
     """
     from padua_spark.io_utils import track_cached
-    from padua_spark.operators.stats import _stepped_running_counts
+    from padua_spark.operators.stats import (
+        _doubled_midrank,
+        _stepped_running_counts,
+    )
 
     v = F.col(value_col)
     if exact:
@@ -585,7 +588,7 @@ def gini_concentration(
         .agg(F.count(F.lit(1)).alias("_c"))
     )
     stepped = _stepped_running_counts(per, "_v", ["_c"])
-    two_rbar = 2 * (F.col("_c_run") - F.col("_c")) + F.col("_c") + 1
+    two_rbar = _doubled_midrank("_c")
     dec = "decimal(38,0)" if exact else "double"
     agg = stepped.agg(
         F.sum(F.col("_c").cast("decimal(38,0)")).alias("_n"),

@@ -673,10 +673,10 @@ def _stepped_running_counts(
     ``{c}_run`` (running sum over ascending ``value_col``, inclusive)
     and ``{c}_tot`` (grand total), preserving all input columns. The
     two-pass plan and small-domain shortcut are exactly
-    :func:`_ecdf_stepped_counts`'s (which now delegates here); this
-    form also serves the g-group rank statistics (Kruskal–Wallis) and
-    Spearman midranks, which need running sums of one-or-many count
-    columns rather than the fixed a/b pair.
+    :func:`_ecdf_stepped_counts`'s; this form also serves the g-group
+    rank statistics (:func:`_pooled_group_counts`) and Spearman
+    midranks, which need running sums of one-or-many count columns
+    rather than the fixed a/b pair.
 
     Persisted intermediates are recorded via ``track_cached`` on the
     returned frame — callers must re-attach them to their final frame.
@@ -771,6 +771,87 @@ def _stepped_running_counts(
         *[F.col(f"{c}_tot") for c in count_cols],
     )
     return track_cached(out, ranged)
+
+
+def _doubled_midrank(count_col: str) -> Column:
+    """Twice the midrank of a distinct value over a
+    :func:`_stepped_running_counts` frame: with ``c`` its count and
+    ``run`` the inclusive running count, ``2·(run − c) + c + 1`` — an
+    exact integer under any ties."""
+    return (
+        2 * (F.col(f"{count_col}_run") - F.col(count_col))
+        + F.col(count_col) + 1
+    )
+
+
+def _pooled_group_counts(
+    df: DataFrame,
+    group_col: str,
+    value_col: str,
+    groups: list,
+    per_group_runs: bool,
+    keys: list | None = None,
+):
+    """The k-group rank scaffold: rows of ``groups`` with a non-NULL
+    value, counted per distinct value ``_v`` into one column ``_c{i}``
+    per entry of ``keys`` (default ``groups``, in that order) plus
+    their pooled count ``_ct``, then :func:`_stepped_running_counts`
+    over ``_ct`` — and over every ``_c{i}`` too when
+    ``per_group_runs``. Returns ``(cols, stepped)``; re-attach
+    ``stepped``'s cached frames to the result."""
+    v = F.col(value_col)
+    keys = groups if keys is None else keys
+    cols = [f"_c{i}" for i in range(len(keys))]
+    per = (
+        df.where(F.col(group_col).isin(list(groups)) & v.isNotNull())
+        .groupBy(v.alias("_v"))
+        .agg(
+            *[
+                F.count(F.when(F.col(group_col) == g, 1)).alias(c)
+                for g, c in zip(keys, cols)
+            ]
+        )
+    )
+    pooled = per.select(
+        "_v", *cols,
+        sum([F.col(c) for c in cols[1:]], F.col(cols[0])).alias("_ct"),
+    )
+    runs = [*cols, "_ct"] if per_group_runs else ["_ct"]
+    return cols, _stepped_running_counts(pooled, "_v", runs)
+
+
+def _pooled_rank_sums(
+    df: DataFrame,
+    group_col: str,
+    value_col: str,
+    groups: list,
+    tie_alias: str,
+    keys: list | None = None,
+):
+    """Per-group doubled rank sums over the pooled midranks of
+    :func:`_pooled_group_counts` (Kruskal–Wallis, Dunn, Cuzick): ONE
+    row of exact integers ``_2r{i}`` (Σ 2·midrank), ``_n{i}`` (group
+    size) and the tie term ``Σ(t³ − t)`` named ``tie_alias``. Returns
+    ``(agg, n_total, cached)`` with ``n_total`` the Column ``Σ _n{i}``
+    and ``cached`` the frames to track on the result."""
+    cols, stepped = _pooled_group_counts(
+        df, group_col, value_col, groups, False, keys
+    )
+    two_rbar = _doubled_midrank("_ct")
+    agg = stepped.agg(
+        *[
+            F.sum(F.col(c) * two_rbar).alias(f"_2r{i}")
+            for i, c in enumerate(cols)
+        ],
+        *[F.sum(c).alias(f"_n{i}") for i, c in enumerate(cols)],
+        F.sum(
+            F.col("_ct") * F.col("_ct") * F.col("_ct") - F.col("_ct")
+        ).alias(tie_alias),
+    )
+    n_total = sum(
+        [F.col(f"_n{i}") for i in range(1, len(cols))], F.col("_n0")
+    )
+    return agg, n_total, getattr(stepped, "_padua_cached", ())
 
 
 def ks_2samp_stat(
@@ -1139,50 +1220,20 @@ def kruskal_wallis_stats(
     an incomplete-gamma); for EVEN df = g−1 the caller can use the
     finite closed form ``exp(−H/2)·Σ_{k<df/2}(H/2)^k/k!`` (df=2 →
     ``exp(−H/2)``), which both engines share — see the
-    ``kruskal_wallis`` entry. Output 1 row:
+    ``kruskal_wallis`` entry. A listed group with no rows adds no
+    term (H is that of the other groups; ``k_groups`` still counts
+    it). Output 1 row:
     ``(h_stat, h_stat_corrected, n_total, k_groups, tie_term)``.
     """
     from padua_spark.io_utils import track_cached
 
-    v = F.col(value_col)
-    cols = [f"_c{i}" for i in range(len(groups))]
-    per = (
-        df.where(F.col(group_col).isin(list(groups)) & v.isNotNull())
-        .groupBy(v.alias("_v"))
-        .agg(
-            *[
-                F.count(
-                    F.when(F.col(group_col) == g, 1)
-                ).alias(c)
-                for g, c in zip(groups, cols)
-            ]
-        )
-    )
-    pooled = per.select(
-        "_v", *cols,
-        sum([F.col(c) for c in cols[1:]], F.col(cols[0])).alias("_ct"),
-    )
-    stepped = _stepped_running_counts(pooled, "_v", ["_ct"])
-    two_rbar = (
-        2 * (F.col("_ct_run") - F.col("_ct")) + F.col("_ct") + 1
-    )
-    agg = stepped.agg(
-        *[
-            F.sum(F.col(c) * two_rbar).alias(f"_2r{i}")
-            for i, c in enumerate(cols)
-        ],
-        *[F.sum(c).alias(f"_n{i}") for i, c in enumerate(cols)],
-        F.sum(
-            F.col("_ct") * F.col("_ct") * F.col("_ct") - F.col("_ct")
-        ).alias("tie_term"),
-    )
-    n_total = sum(
-        [F.col(f"_n{i}") for i in range(1, len(cols))], F.col("_n0")
+    agg, n_total, cached = _pooled_rank_sums(
+        df, group_col, value_col, groups, "tie_term"
     )
     nd = n_total.cast("double")
     # Σ_g R_g²/n_g with R_g = 2R_g/2 — one division per group, doubles
     rsq = None
-    for i in range(len(cols)):
+    for i in range(len(groups)):
         term = (
             (F.col(f"_2r{i}").cast("double") / F.lit(2.0))
             * (F.col(f"_2r{i}").cast("double") / F.lit(2.0))
@@ -1210,7 +1261,7 @@ def kruskal_wallis_stats(
         "k_groups",
         "tie_term",
     )
-    return track_cached(out, *getattr(stepped, "_padua_cached", ()))
+    return track_cached(out, *cached)
 
 
 def spearman_rho(
@@ -1263,8 +1314,8 @@ def spearman_rho(
         F.sum(1 - F.col("_ax")).cast("bigint").alias("_cy"),
     )
     stepped = _stepped_running_counts(per, "_v", ["_cx", "_cy"])
-    two_rx = 2 * (F.col("_cx_run") - F.col("_cx")) + F.col("_cx") + 1
-    two_ry = 2 * (F.col("_cy_run") - F.col("_cy")) + F.col("_cy") + 1
+    two_rx = _doubled_midrank("_cx")
+    two_ry = _doubled_midrank("_cy")
     dec = "decimal(38,0)"
     # Per-axis moments need no join-back at all: each is a weighted
     # sum over the VALUE DOMAIN (Σ c·2r, Σ c·(2r)², n = Σ c) — one
@@ -1404,24 +1455,10 @@ def anderson_darling_ksamp(
     """
     from padua_spark.io_utils import track_cached
 
-    v = F.col(value_col)
     g = len(groups)
-    cols = [f"_c{i}" for i in range(g)]
-    per = (
-        df.where(F.col(group_col).isin(list(groups)) & v.isNotNull())
-        .groupBy(v.alias("_v"))
-        .agg(
-            *[
-                F.count(F.when(F.col(group_col) == grp, 1)).alias(c)
-                for grp, c in zip(groups, cols)
-            ]
-        )
+    cols, stepped = _pooled_group_counts(
+        df, group_col, value_col, groups, True
     )
-    pooled = per.select(
-        "_v", *cols,
-        sum([F.col(c) for c in cols[1:]], F.col(cols[0])).alias("_ct"),
-    )
-    stepped = _stepped_running_counts(pooled, "_v", [*cols, "_ct"])
     dec = "decimal(38,0)"
     h = F.col("_ct")
     d_j = 2 * F.col("_ct_run") - h  # doubled mid cumulative, pooled
@@ -2202,13 +2239,12 @@ def dunn_posthoc(
     on the POOLED midranks, with Benjamini-Hochberg adjustment across
     the k(k-1)/2 pairs.
 
-    Scale shape: identical scaffolding to
-    :func:`kruskal_wallis_stats` — per-distinct-value per-group
-    counts, the distributed two-pass running sum for integer doubled
-    midranks — reduced to ONE row of per-group sums; every pair
-    statistic, the A&S-erfc p, and the BH pass run on the C(k,2)-row
-    frame (the partitionless BH window is over that constant-size
-    frame, never data). Unlike :func:`theil_sen_by_group` /
+    Scale shape: :func:`_pooled_rank_sums` — per-distinct-value
+    per-group counts, the distributed two-pass running sum for
+    integer doubled midranks — reduced to ONE row of per-group sums;
+    every pair statistic, the A&S-erfc p, and the BH pass run on the
+    C(k,2)-row frame (the partitionless BH window is over that
+    constant-size frame, never data). Unlike :func:`theil_sen_by_group` /
     :func:`mann_kendall` this is NOT subject to the bounded-group-size
     contract: no row-level pair join exists — cost scales with the
     number of DISTINCT values (stepped cumsum) and C(k,2) group pairs,
@@ -2227,38 +2263,9 @@ def dunn_posthoc(
     # implicit string cast nor get lexicographic 1 < 10 < 2 ordering
     # applied to the filter semantics
     gs = sorted(((str(g), g) for g in groups), key=lambda t: t[0])
-    v = F.col(value_col)
-    cols = [f"_c{i}" for i in range(len(gs))]
-    per = (
-        df.where(F.col(group_col).isin(list(groups)) & v.isNotNull())
-        .groupBy(v.alias("_v"))
-        .agg(
-            *[
-                F.count(F.when(F.col(group_col) == F.lit(raw), 1)).alias(c)
-                for (_, raw), c in zip(gs, cols)
-            ]
-        )
-    )
-    pooled = per.select(
-        "_v", *cols,
-        sum([F.col(c) for c in cols[1:]], F.col(cols[0])).alias("_ct"),
-    )
-    stepped = _stepped_running_counts(pooled, "_v", ["_ct"])
-    two_rbar = (
-        2 * (F.col("_ct_run") - F.col("_ct")) + F.col("_ct") + 1
-    )
-    agg = stepped.agg(
-        *[
-            F.sum(F.col(c) * two_rbar).alias(f"_2r{i}")
-            for i, c in enumerate(cols)
-        ],
-        *[F.sum(c).cast("bigint").alias(f"_n{i}") for i, c in enumerate(cols)],
-        F.sum(
-            F.col("_ct") * F.col("_ct") * F.col("_ct") - F.col("_ct")
-        ).alias("_tie"),
-    )
-    n_total = sum(
-        [F.col(f"_n{i}") for i in range(1, len(cols))], F.col("_n0")
+    agg, n_total, cached = _pooled_rank_sums(
+        df, group_col, value_col, groups, "_tie",
+        keys=[raw for _, raw in gs],
     )
     agg = agg.withColumn("_nt", n_total)
     # one explode of a literal struct array — a union of per-pair
@@ -2317,7 +2324,7 @@ def dunn_posthoc(
             ).over(w_desc),
         ),
     ).drop("_rk")
-    return track_cached(out, *getattr(stepped, "_padua_cached", ()))
+    return track_cached(out, *cached)
 
 
 def mann_kendall(
@@ -2588,6 +2595,63 @@ def cochran_armitage_trend(
     )
 
 
+def _complete_blocks(
+    df: DataFrame,
+    block_col: str,
+    treatment_col: str,
+    value_col: str,
+    treatments: list | None = None,
+):
+    """The complete-block scaffold of the repeated-measures tests:
+    rows with a non-NULL block, value and treatment (one of
+    ``treatments`` when given) as ``(_b, _t, _v)`` with ``_v`` a
+    double; ``k`` = ``len(treatments)``, else the number of distinct
+    treatments (one eager count); and the blocks carrying ``k``
+    distinct treatments in exactly ``k`` rows. Returns
+    ``(kept, complete, k)``: the rows of the complete blocks (a
+    left-semi join) and the ``_b`` frame of those blocks."""
+    v = F.col(value_col).cast("double")
+    t = F.col(treatment_col)
+    base = df.where(
+        v.isNotNull()
+        & F.col(block_col).isNotNull()
+        & (t.isNotNull() if treatments is None else t.isin(treatments))
+    ).select(F.col(block_col).alias("_b"), t.alias("_t"), v.alias("_v"))
+    k = (
+        base.select("_t").distinct().count()
+        if treatments is None else len(treatments)
+    )
+    complete = (
+        base.groupBy("_b")
+        .agg(
+            F.count_distinct("_t").alias("_kt"),
+            F.count(F.lit(1)).alias("_ct"),
+        )
+        .where((F.col("_kt") == k) & (F.col("_ct") == k))
+        .select("_b")
+    )
+    return base.join(complete, on="_b", how="left_semi"), complete, k
+
+
+def _within_block_midranks(kept: DataFrame) -> DataFrame:
+    """``(_b, _t, _rk, _tn)`` over :func:`_complete_blocks` rows: the
+    midrank ``_rk`` of ``_v`` within its block (``rank()`` plus half
+    the extra ties, from the per-(block, value) tie count) and the
+    size ``_tn`` of its tie group — one bounded window pass, k rows
+    per block."""
+    wb = Window.partitionBy("_b").orderBy("_v")
+    tie_n = F.count(F.lit(1)).over(Window.partitionBy("_b", "_v"))
+    return kept.select(
+        "_b",
+        "_t",
+        (
+            F.rank().over(wb).cast("double")
+            + (tie_n.cast("double") - 1.0) / 2.0
+        ).alias("_rk"),
+        tie_n.alias("_tn"),
+    )
+
+
 def friedman_test(
     df: DataFrame,
     block_col: str,
@@ -2612,40 +2676,10 @@ def friedman_test(
     combine. Output 1 row: ``(n_blocks, k_treatments, friedman_stat,
     dfree)``.
     """
-    from pyspark.sql import Window
-
-    v = F.col(value_col).cast("double")
-    base = df.where(
-        v.isNotNull()
-        & F.col(block_col).isNotNull()
-        & F.col(treatment_col).isNotNull()
-    ).select(
-        F.col(block_col).alias("_b"),
-        F.col(treatment_col).alias("_t"),
-        v.alias("_v"),
+    kept, _, k_total = _complete_blocks(
+        df, block_col, treatment_col, value_col
     )
-    k_total = base.select("_t").distinct().count()
-    complete = (
-        base.groupBy("_b")
-        .agg(F.count_distinct("_t").alias("_kt"), F.count(F.lit(1)).alias("_ct"))
-        .where((F.col("_kt") == k_total) & (F.col("_ct") == k_total))
-        .select("_b")
-    )
-    kept = base.join(complete, on="_b", how="left_semi")
-    wb = Window.partitionBy("_b").orderBy("_v")
-    # midrank = min-rank + (ties_in_group − 1)/2, via rank() and the
-    # per-(block, value) tie count in one pass
-    wt = Window.partitionBy("_b", "_v")
-    tie_n = F.count(F.lit(1)).over(wt)
-    ranked = kept.select(
-        "_b",
-        "_t",
-        (
-            F.rank().over(wb).cast("double")
-            + (tie_n.cast("double") - 1.0) / 2.0
-        ).alias("_rk"),
-        tie_n.alias("_tn"),
-    )
+    ranked = _within_block_midranks(kept)
     rsums = ranked.groupBy("_t").agg(F.sum("_rk").alias("_rj"))
     ssbn = rsums.agg(
         F.sum(F.col("_rj") * F.col("_rj")).alias("_ssbn"),
@@ -3075,6 +3109,33 @@ def proportion_wilson_ci(
     )
 
 
+def _two_by_two_cells(
+    df: DataFrame,
+    exposure_col: str,
+    outcome_col: str,
+    strata_cols: list[str] | None = None,
+) -> DataFrame:
+    """The 2×2 exposure/outcome cell counts over rows with both
+    columns non-NULL (cast to int): exposed with/without the outcome,
+    then unexposed with/without. Unstratified: ONE row of exact
+    bigint cells ``a, b, c, d``; with ``strata_cols``, one row per
+    stratum of double cells ``_a, _b, _c, _d`` for the float
+    cross-strata sums."""
+    ex = F.col(exposure_col).cast("int")
+    out = F.col(outcome_col).cast("int")
+    dtype, prefix = ("bigint", "") if strata_cols is None else ("double", "_")
+    cells = [
+        F.sum(((ex == i) & (out == j)).cast("int"))
+        .cast(dtype).alias(prefix + name)
+        for (i, j), name in zip(((1, 1), (1, 0), (0, 1), (0, 0)), "abcd")
+    ]
+    return (
+        df.where(ex.isNotNull() & out.isNotNull())
+        .groupBy(*(strata_cols or []))
+        .agg(*cells)
+    )
+
+
 def odds_ratio_ci(
     df: DataFrame,
     exposure_col: str,
@@ -3100,18 +3161,7 @@ def odds_ratio_ci(
     One aggregation to four exact integers; everything after is
     closed-form scalar arithmetic on the 1-row frame.
     """
-    ex = F.col(exposure_col).cast("int")
-    out = F.col(outcome_col).cast("int")
-    agg = df.where(ex.isNotNull() & out.isNotNull()).agg(
-        F.sum(((ex == 1) & (out == 1)).cast("int"))
-        .cast("bigint").alias("a"),
-        F.sum(((ex == 1) & (out == 0)).cast("int"))
-        .cast("bigint").alias("b"),
-        F.sum(((ex == 0) & (out == 1)).cast("int"))
-        .cast("bigint").alias("c"),
-        F.sum(((ex == 0) & (out == 0)).cast("int"))
-        .cast("bigint").alias("d"),
-    )
+    agg = _two_by_two_cells(df, exposure_col, outcome_col)
     any_zero = (
         (F.col("a") == 0) | (F.col("b") == 0)
         | (F.col("c") == 0) | (F.col("d") == 0)
@@ -3244,22 +3294,7 @@ def mantel_haenszel_or(
     over the k-strata frame; round-6 output absorbs summation-order
     ulps in the cross-strata float sums.
     """
-    ex = F.col(exposure_col).cast("int")
-    out = F.col(outcome_col).cast("int")
-    per = (
-        df.where(ex.isNotNull() & out.isNotNull())
-        .groupBy(*strata_cols)
-        .agg(
-            F.sum(((ex == 1) & (out == 1)).cast("int"))
-            .cast("double").alias("_a"),
-            F.sum(((ex == 1) & (out == 0)).cast("int"))
-            .cast("double").alias("_b"),
-            F.sum(((ex == 0) & (out == 1)).cast("int"))
-            .cast("double").alias("_c"),
-            F.sum(((ex == 0) & (out == 0)).cast("int"))
-            .cast("double").alias("_d"),
-        )
-    )
+    per = _two_by_two_cells(df, exposure_col, outcome_col, strata_cols)
     a, b, c, d = F.col("_a"), F.col("_b"), F.col("_c"), F.col("_d")
     n = a + b + c + d
     r_ = a * d / n
@@ -4114,18 +4149,7 @@ def fisher_exact(
     """
     from padua_spark.operators.external import _log_choose
 
-    ex = F.col(exposure_col).cast("int")
-    out = F.col(outcome_col).cast("int")
-    agg = df.where(ex.isNotNull() & out.isNotNull()).agg(
-        F.sum(((ex == 1) & (out == 1)).cast("int"))
-        .cast("bigint").alias("a"),
-        F.sum(((ex == 1) & (out == 0)).cast("int"))
-        .cast("bigint").alias("b"),
-        F.sum(((ex == 0) & (out == 1)).cast("int"))
-        .cast("bigint").alias("c"),
-        F.sum(((ex == 0) & (out == 0)).cast("int"))
-        .cast("bigint").alias("d"),
-    )
+    agg = _two_by_two_cells(df, exposure_col, outcome_col)
     r1 = F.col("a") + F.col("b")
     r2 = F.col("c") + F.col("d")
     c1 = F.col("a") + F.col("c")
@@ -4236,6 +4260,28 @@ def fisher_exact(
     )
 
 
+def _contingency_margins(df, col_a: str, col_b: str, *extra) -> DataFrame:
+    """The bounded contingency scaffold: cell counts ``_n`` of the
+    non-NULL ``(_a, _b)`` pairs (one hash aggregation), each with its
+    row margin ``_ra``, column margin ``_cb`` and total ``_nt`` (three
+    windows over the cell frame), plus the caller's ``extra`` columns
+    over the same cells."""
+    a = F.col(col_a)
+    b = F.col(col_b)
+    cells = (
+        df.where(a.isNotNull() & b.isNotNull())
+        .groupBy(a.alias("_a"), b.alias("_b"))
+        .agg(F.count(F.lit(1)).alias("_n"))
+    )
+    return cells.select(
+        "_n",
+        F.sum("_n").over(Window.partitionBy("_a")).alias("_ra"),
+        F.sum("_n").over(Window.partitionBy("_b")).alias("_cb"),
+        F.sum("_n").over(Window.partitionBy()).alias("_nt"),
+        *extra,
+    )
+
+
 def cramers_v(
     df: DataFrame,
     col_a: str,
@@ -4261,21 +4307,9 @@ def cramers_v(
     cramers_v)``, floats rounded to 6dp. V is NULL for degenerate
     1×k tables (min(r,c) = 1 carries no association to measure).
     """
-    a = F.col(col_a)
-    b = F.col(col_b)
-    cells = (
-        df.where(a.isNotNull() & b.isNotNull())
-        .groupBy(a.alias("_a"), b.alias("_b"))
-        .agg(F.count(F.lit(1)).alias("_n"))
-    )
-    wa = Window.partitionBy("_a")
-    wb = Window.partitionBy("_b")
     wall = Window.partitionBy()
-    staged = cells.select(
-        "_n",
-        F.sum("_n").over(wa).alias("_ra"),
-        F.sum("_n").over(wb).alias("_cb"),
-        F.sum("_n").over(wall).alias("_nt"),
+    staged = _contingency_margins(
+        df, col_a, col_b,
         F.size(F.collect_set("_a").over(wall)).alias("_r"),
         F.size(F.collect_set("_b").over(wall)).alias("_c"),
     )
@@ -4666,29 +4700,14 @@ def theils_u(
     ``U(A|B) = I(A;B) / H(A)``, ``U(B|A) = I(A;B) / H(B)``,
     ``U_sym = 2·I(A;B) / (H(A) + H(B))``
 
-    (natural-log entropies). Plan is :func:`cramers_v`'s: one hash
-    aggregation to the bounded contingency cells, margin windows over
-    the cell frame, entropies as exact-count plug-in sums. Output 1
+    (natural-log entropies). Plan is :func:`_contingency_margins`: one
+    hash aggregation to the bounded contingency cells, margin windows
+    over the cell frame; entropies as exact-count plug-in sums. Output 1
     row: ``(n_total, h_a, h_b, mi, u_a_given_b, u_b_given_a,
     u_symmetric)``, floats 6dp; U NULL when the conditioned entropy
     is 0 (a constant column carries no uncertainty to explain).
     """
-    a = F.col(col_a)
-    b = F.col(col_b)
-    cells = (
-        df.where(a.isNotNull() & b.isNotNull())
-        .groupBy(a.alias("_a"), b.alias("_b"))
-        .agg(F.count(F.lit(1)).alias("_n"))
-    )
-    wa = Window.partitionBy("_a")
-    wb = Window.partitionBy("_b")
-    wall = Window.partitionBy()
-    staged = cells.select(
-        "_n",
-        F.sum("_n").over(wa).alias("_ra"),
-        F.sum("_n").over(wb).alias("_cb"),
-        F.sum("_n").over(wall).alias("_nt"),
-    )
+    staged = _contingency_margins(df, col_a, col_b)
     nd = F.col("_nt").cast("double")
     p = F.col("_n").cast("double") / nd
     pa = F.col("_ra").cast("double") / nd
@@ -4772,8 +4791,9 @@ def page_trend_test(
     one-sided p (increasing trend) from ``z = (L−E)/√Var`` via the
     shared A&S-erfc polynomial. The variance is the standard no-tie
     form (midranks still used under ties — the universal practice;
-    heavy ties make the test conservative). Complete blocks enforced
-    exactly as :func:`friedman_test`. Output 1 row: ``(n_blocks,
+    heavy ties make the test conservative). Complete blocks and
+    within-block midranks are :func:`_complete_blocks` and
+    :func:`_within_block_midranks`. Output 1 row: ``(n_blocks,
     k_treatments, page_l, z, p_value)``, floats 6dp; raises for
     k < 3 (the test is defined for ordered k >= 3), z NULL with no
     complete blocks.
@@ -4784,37 +4804,10 @@ def page_trend_test(
             "page_trend_test: needs at least 3 ordered treatments "
             f"(got {k}); use a two-sample rank test for k=2"
         )
-    v = F.col(value_col).cast("double")
-    base = df.where(
-        v.isNotNull()
-        & F.col(block_col).isNotNull()
-        & F.col(treatment_col).isin(list(ordered_treatments))
-    ).select(
-        F.col(block_col).alias("_b"),
-        F.col(treatment_col).alias("_t"),
-        v.alias("_v"),
+    kept, _, _ = _complete_blocks(
+        df, block_col, treatment_col, value_col, list(ordered_treatments)
     )
-    complete = (
-        base.groupBy("_b")
-        .agg(
-            F.count_distinct("_t").alias("_kt"),
-            F.count(F.lit(1)).alias("_ct"),
-        )
-        .where((F.col("_kt") == k) & (F.col("_ct") == k))
-        .select("_b")
-    )
-    kept = base.join(complete, on="_b", how="left_semi")
-    wb = Window.partitionBy("_b").orderBy("_v")
-    wt = Window.partitionBy("_b", "_v")
-    tie_n = F.count(F.lit(1)).over(wt)
-    ranked = kept.select(
-        "_b",
-        "_t",
-        (
-            F.rank().over(wb).cast("double")
-            + (tie_n.cast("double") - 1.0) / 2.0
-        ).alias("_rk"),
-    )
+    ranked = _within_block_midranks(kept)
     order_expr = None
     for j, t in enumerate(ordered_treatments, start=1):
         cond = F.when(F.col("_t") == F.lit(t), F.lit(float(j)))
@@ -4965,8 +4958,9 @@ def quade_test(
     (scipy-free but textbook Conover 1999; A = B degenerate case
     yields NULL).
 
-    Scale shape: complete blocks enforced as in friedman; within-
-    block ranks are one bounded window; the BLOCK-RANGE ranking is
+    Scale shape: complete blocks via :func:`_complete_blocks`;
+    within-block ranks are one bounded window
+    (:func:`_within_block_midranks`); the BLOCK-RANGE ranking is
     over the n-row per-block aggregate frame and uses the shared
     DISTRIBUTED midrank machinery (:func:`_stepped_running_counts`)
     — no partitionless window over a data-sized frame. The F p-value
@@ -4976,31 +4970,12 @@ def quade_test(
     from padua_spark.functions.distributions import f_sf_udf
     from padua_spark.io_utils import track_cached
 
-    v = F.col(value_col).cast("double")
-    base = df.where(
-        v.isNotNull()
-        & F.col(block_col).isNotNull()
-        & F.col(treatment_col).isNotNull()
-    ).select(
-        F.col(block_col).alias("_b"),
-        F.col(treatment_col).alias("_t"),
-        v.alias("_v"),
-    )
-    k_total = base.select("_t").distinct().count()
-    complete = (
-        base.groupBy("_b")
-        .agg(
-            F.count_distinct("_t").alias("_kt"),
-            F.count(F.lit(1)).alias("_ct"),
-        )
-        .where((F.col("_kt") == k_total) & (F.col("_ct") == k_total))
-        .select("_b")
-    )
     from pyspark import StorageLevel
 
-    kept = base.join(complete, on="_b", how="left_semi").persist(
-        StorageLevel.MEMORY_AND_DISK
+    kept, complete, k_total = _complete_blocks(
+        df, block_col, treatment_col, value_col
     )
+    kept = kept.persist(StorageLevel.MEMORY_AND_DISK)
     # block weights: midranks of the within-block ranges, via the
     # distributed stepped counts over the per-block aggregate frame
     ranges = kept.groupBy("_b").agg(
@@ -5012,23 +4987,10 @@ def quade_test(
     stepped = _stepped_running_counts(per, "_v", ["_c"])
     qmap = stepped.select(
         F.col("_v").alias("_rng"),
-        (
-            (2 * (F.col("_c_run") - F.col("_c")) + F.col("_c") + 1)
-            .cast("double") / 2.0
-        ).alias("_q"),
+        (_doubled_midrank("_c").cast("double") / 2.0).alias("_q"),
     )
     weighted = ranges.join(qmap, on="_rng").select("_b", "_q")
-    wb = Window.partitionBy("_b").orderBy("_v")
-    wt = Window.partitionBy("_b", "_v")
-    tie_n = F.count(F.lit(1)).over(wt)
-    ranked = kept.select(
-        "_b",
-        "_t",
-        (
-            F.rank().over(wb).cast("double")
-            + (tie_n.cast("double") - 1.0) / 2.0
-        ).alias("_rk"),
-    )
+    ranked = _within_block_midranks(kept)
     kd = float(k_total)
     sij = ranked.join(weighted, on="_b").select(
         "_t",
@@ -5295,22 +5257,7 @@ def breslow_day(
     """
     from padua_spark.functions.distributions import chi2_sf_udf
 
-    ex = F.col(exposure_col).cast("int")
-    out = F.col(outcome_col).cast("int")
-    per = (
-        df.where(ex.isNotNull() & out.isNotNull())
-        .groupBy(*strata_cols)
-        .agg(
-            F.sum(((ex == 1) & (out == 1)).cast("int"))
-            .cast("double").alias("_a"),
-            F.sum(((ex == 1) & (out == 0)).cast("int"))
-            .cast("double").alias("_b"),
-            F.sum(((ex == 0) & (out == 1)).cast("int"))
-            .cast("double").alias("_c"),
-            F.sum(((ex == 0) & (out == 0)).cast("int"))
-            .cast("double").alias("_d"),
-        )
-    )
+    per = _two_by_two_cells(df, exposure_col, outcome_col, strata_cols)
     from pyspark import StorageLevel
 
     from padua_spark.io_utils import track_cached
@@ -5769,30 +5716,17 @@ def g_test_independence(
     ``q = 1 + (n·Σ1/r_i − 1)(n·Σ1/c_j − 1) / (6n(r−1)(c−1))``,
     ``G_adj = G/q``  (χ², (r−1)(c−1) df).
 
-    Same bounded-cell plan as :func:`cramers_v` / :func:`theils_u`:
-    one hash aggregation to the contingency cells, margin windows
-    over that frame, exact-integer counts into the closed form; χ² p
+    Bounded-cell plan of :func:`_contingency_margins`: one hash
+    aggregation to the contingency cells, margin windows over that
+    frame, exact-integer counts into the closed form; χ² p
     via the shared vectorized UDF. Output 1 row: ``(n_total,
     r_levels, c_levels, g_stat, g_adjusted, dfree, p_value)``, 6dp
     (p from the ADJUSTED statistic when ``williams=True``).
     """
     from padua_spark.functions.distributions import chi2_sf_udf
 
-    a = F.col(col_a)
-    b = F.col(col_b)
-    cells = (
-        df.where(a.isNotNull() & b.isNotNull())
-        .groupBy(a.alias("_a"), b.alias("_b"))
-        .agg(F.count(F.lit(1)).alias("_n"))
-    )
-    wa = Window.partitionBy("_a")
-    wb = Window.partitionBy("_b")
-    wall = Window.partitionBy()
-    staged = cells.select(
-        "_n",
-        F.sum("_n").over(wa).alias("_ra"),
-        F.sum("_n").over(wb).alias("_cb"),
-        F.sum("_n").over(wall).alias("_nt"),
+    staged = _contingency_margins(
+        df, col_a, col_b,
         (F.row_number().over(
             Window.partitionBy("_a").orderBy("_b")
         ) == 1).cast("int").alias("_first_a"),
@@ -6198,29 +6132,12 @@ def _group_score_test(
     from padua_spark.functions.distributions import chi2_sf_udf
     from padua_spark.io_utils import track_cached
 
-    v = F.col(value_col)
     g = len(groups)
-    cols = [f"_c{i}" for i in range(g)]
-    per = (
-        df.where(F.col(group_col).isin(list(groups)) & v.isNotNull())
-        .groupBy(v.alias("_v"))
-        .agg(
-            *[
-                F.count(F.when(F.col(group_col) == grp, 1)).alias(c)
-                for grp, c in zip(groups, cols)
-            ]
-        )
+    cols, stepped = _pooled_group_counts(
+        df, group_col, value_col, groups, True
     )
-    pooled = per.select(
-        "_v", *cols,
-        sum([F.col(c) for c in cols[1:]], F.col(cols[0])).alias("_ct"),
-    )
-    stepped = _stepped_running_counts(pooled, "_v", [*cols, "_ct"])
-    h = F.col("_ct")
     n_tot = F.col("_ct_tot").cast("double")
-    midrank = (
-        (2 * (F.col("_ct_run") - h) + h + 1).cast("double") / 2.0
-    )
+    midrank = _doubled_midrank("_ct").cast("double") / 2.0
     score = score_from_midrank(midrank, n_tot)
     staged = stepped.withColumn("_a", score)
     agg = staged.agg(
@@ -6369,10 +6286,7 @@ def normality_ppcc(
     )
     stepped = _stepped_running_counts(per, "_v", ["_c"])
     n = F.col("_c_tot").cast("double")
-    midrank = (
-        (2 * (F.col("_c_run") - F.col("_c")) + F.col("_c") + 1)
-        .cast("double") / 2.0
-    )
+    midrank = _doubled_midrank("_c").cast("double") / 2.0
     m = norm_ppf_col((midrank - 0.3175) / (n + 0.365))
     c = F.col("_c").cast("double")
     x = F.col("_v")
@@ -6928,8 +6842,9 @@ def cuzick_trend(
     with the Kruskal tie factor ``c_tie = 1 − Σ(t³−t)/(N³−N)``;
     two-sided normal p on ``(L − E)/√Var``.
 
-    Same scale-safe scaffolding as KW: ONE per-value aggregation with
-    per-group counts, ONE stepped-cumsum pass; doubled midranks make
+    Scaffolding is :func:`_pooled_rank_sums`: ONE per-value
+    aggregation with per-group counts, ONE stepped-cumsum pass;
+    doubled midranks make
     ``2L`` and ``2E(L)`` exact integers for integer scores. Output 1
     row: ``(n_total, k_groups, l_stat, z, p_value)``, 6dp.
     """
@@ -6939,61 +6854,21 @@ def cuzick_trend(
         scores = list(range(1, len(groups) + 1))
     if len(scores) != len(groups):
         raise ValueError("cuzick_trend: scores must match groups")
-    v = F.col(value_col)
-    cols = [f"_c{i}" for i in range(len(groups))]
-    per = (
-        df.where(F.col(group_col).isin(list(groups)) & v.isNotNull())
-        .groupBy(v.alias("_v"))
-        .agg(
-            *[
-                F.count(F.when(F.col(group_col) == g, 1)).alias(c)
-                for g, c in zip(groups, cols)
-            ]
-        )
-    )
-    pooled = per.select(
-        "_v", *cols,
-        sum([F.col(c) for c in cols[1:]], F.col(cols[0])).alias("_ct"),
-    )
-    stepped = _stepped_running_counts(pooled, "_v", ["_ct"])
-    two_rbar = (
-        2 * (F.col("_ct_run") - F.col("_ct")) + F.col("_ct") + 1
-    )
-    agg = stepped.agg(
-        *[
-            F.sum(F.col(c) * two_rbar).alias(f"_2r{i}")
-            for i, c in enumerate(cols)
-        ],
-        *[F.sum(c).alias(f"_n{i}") for i, c in enumerate(cols)],
-        F.sum(
-            F.col("_ct") * F.col("_ct") * F.col("_ct") - F.col("_ct")
-        ).alias("_tie"),
-    )
-    n_total = sum(
-        [F.col(f"_n{i}") for i in range(1, len(cols))], F.col("_n0")
+    agg, n_total, cached = _pooled_rank_sums(
+        df, group_col, value_col, groups, "_tie"
     )
     nd = n_total.cast("double")
-    two_l = sum(
-        [
-            F.lit(int(scores[i])) * F.col(f"_2r{i}")
-            for i in range(1, len(cols))
-        ],
-        F.lit(int(scores[0])) * F.col("_2r0"),
-    )
-    szn = sum(
-        [
-            F.lit(int(scores[i])) * F.col(f"_n{i}")
-            for i in range(1, len(cols))
-        ],
-        F.lit(int(scores[0])) * F.col("_n0"),
-    )
-    szzn = sum(
-        [
-            F.lit(int(scores[i]) * int(scores[i])) * F.col(f"_n{i}")
-            for i in range(1, len(cols))
-        ],
-        F.lit(int(scores[0]) * int(scores[0])) * F.col("_n0"),
-    )
+
+    def dot(weights, prefix):
+        terms = [
+            F.lit(w) * F.col(f"{prefix}{i}") for i, w in enumerate(weights)
+        ]
+        return sum(terms[1:], terms[0])
+
+    ints = [int(sc) for sc in scores]
+    two_l = dot(ints, "_2r")
+    szn = dot(ints, "_n")
+    szzn = dot([sc * sc for sc in ints], "_n")
     two_e = (nd + 1.0) * szn.cast("double")
     c_tie = F.lit(1.0) - F.col("_tie").cast("double") / (
         nd * nd * nd - nd
@@ -7026,7 +6901,7 @@ def cuzick_trend(
             6,
         ).alias("p_value"),
     )
-    return track_cached(out, *getattr(stepped, "_padua_cached", ()))
+    return track_cached(out, *cached)
 
 
 def tost_equivalence(
@@ -12064,8 +11939,8 @@ def rm_anova_1way(
     ``F = (SS_treat/(k−1)) / (SS_err/((k−1)(n−1)))``, p via the
     shared Arrow-batched F SF.
 
-    Scale shape: one completeness semi-join (the friedman plan), one
-    aggregation to per-treatment sums (k rows), one to per-block sums
+    Scale shape: one completeness semi-join (:func:`_complete_blocks`),
+    one aggregation to per-treatment sums (k rows), one to per-block sums
     (n rows — block-domain sized), one to the grand sums; the SSs
     assemble algebraically (no centered columns). Output 1 row:
     ``(n_blocks, k_treatments, ss_treat, ss_block, ss_error,
@@ -12077,25 +11952,8 @@ def rm_anova_1way(
     from padua_spark.functions.distributions import f_sf_udf
     from padua_spark.io_utils import track_cached
 
-    b = F.col(block_col)
-    t = F.col(treatment_col)
-    v = F.col(value_col).cast("double")
-    base = df.where(
-        b.isNotNull() & t.isNotNull() & v.isNotNull()
-    ).select(b.alias("_b"), t.alias("_t"), v.alias("_v"))
-    k_total = base.select("_t").distinct().count()
-    complete = (
-        base.groupBy("_b")
-        .agg(
-            F.count_distinct("_t").alias("_kt"),
-            F.count(F.lit(1)).alias("_ct"),
-        )
-        .where((F.col("_kt") == k_total) & (F.col("_ct") == k_total))
-        .select("_b")
-    )
-    kept = base.join(complete, on="_b", how="left_semi").persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    kept, _, _ = _complete_blocks(df, block_col, treatment_col, value_col)
+    kept = kept.persist(StorageLevel.MEMORY_AND_DISK)
     per_t = kept.groupBy("_t").agg(F.sum("_v").alias("_st"))
     per_b = kept.groupBy("_b").agg(F.sum("_v").alias("_sb"))
     grand = kept.agg(
@@ -13081,9 +12939,7 @@ def conover_squared_ranks(
         sum([F.col(c) for c in cols[1:]], F.col(cols[0])).alias("_ct"),
     )
     stepped = _stepped_running_counts(pooled, "_v", ["_ct"])
-    dmid = (
-        2 * (F.col("_ct_run") - F.col("_ct")) + F.col("_ct") + 1
-    )
+    dmid = _doubled_midrank("_ct")
     dec = "decimal(38,0)"
     d2 = dmid.cast(dec) * dmid.cast(dec)
     agg = stepped.agg(
@@ -14261,6 +14117,45 @@ def mood_scale_test(
     return track_cached(out, *getattr(ecdf, "_padua_cached", ()))
 
 
+def _ols_fit_joined(
+    df: DataFrame,
+    group_cols: list[str],
+    x_col: str,
+    y_col: str,
+    y_scale: float,
+    min_n: int,
+) -> DataFrame:
+    """Stage one of the per-group OLS screens (:func:`white_test`,
+    :func:`ramsey_reset`): rows with both columns non-NULL as ``_x``
+    and ``_y`` (y times ``y_scale``), one moment aggregation per
+    group, the closed-form slope ``_beta`` (NULL below ``min_n`` rows
+    or with no x spread) with the means ``_mx``/``_my``, joined back
+    to every row (broadcast: one row per group)."""
+    x = F.col(x_col).cast("double")
+    y = F.col(y_col).cast("double") * F.lit(float(y_scale))
+    base = df.where(x.isNotNull() & y.isNotNull()).select(
+        *group_cols, x.alias("_x"), y.alias("_y")
+    )
+    mom = base.groupBy(*group_cols).agg(
+        F.count(F.lit(1)).cast("bigint").alias("_n"),
+        F.sum("_x").alias("_sx"),
+        F.sum("_y").alias("_sy"),
+        F.sum(F.col("_x") * F.col("_x")).alias("_sxx"),
+        F.sum(F.col("_x") * F.col("_y")).alias("_sxy"),
+    )
+    nd = F.col("_n").cast("double")
+    sxx_c = F.col("_sxx") - F.col("_sx") * F.col("_sx") / nd
+    sxy_c = F.col("_sxy") - F.col("_sx") * F.col("_sy") / nd
+    beta = F.when((F.col("_n") >= min_n) & (sxx_c > 0), sxy_c / sxx_c)
+    fit = mom.select(
+        *group_cols, "_n",
+        beta.alias("_beta"),
+        (F.col("_sy") / nd).alias("_my"),
+        (F.col("_sx") / nd).alias("_mx"),
+    )
+    return base.join(F.broadcast(fit), on=group_cols, how="inner")
+
+
 def white_test(
     df: DataFrame,
     group_cols: list[str],
@@ -14279,7 +14174,8 @@ def white_test(
 
     Plan: the :func:`engle_granger` two-stage shape — one closed-form
     OLS aggregation per group, coefficients joined back (broadcast —
-    k-row frame), then ONE auxiliary aggregation of the centered
+    k-row frame; :func:`_ols_fit_joined`), then ONE auxiliary
+    aggregation of the centered
     second-stage moments; the 2-regressor R² is a closed 2×2 normal-
     equations solve (determinant form). ``y_scale`` rescales y before
     anything (LM and R² are scale-invariant; callers pass e.g. 1e-4
@@ -14289,30 +14185,7 @@ def white_test(
 
     Beyond the reference; standard per White 1980.
     """
-    g = [F.col(c) for c in group_cols]
-    x = F.col(x_col).cast("double")
-    y = F.col(y_col).cast("double") * F.lit(float(y_scale))
-    base = df.where(x.isNotNull() & y.isNotNull()).select(
-        *group_cols, x.alias("_x"), y.alias("_y")
-    )
-    mom = base.groupBy(*group_cols).agg(
-        F.count(F.lit(1)).cast("bigint").alias("_n"),
-        F.sum("_x").alias("_sx"),
-        F.sum("_y").alias("_sy"),
-        F.sum(F.col("_x") * F.col("_x")).alias("_sxx"),
-        F.sum(F.col("_x") * F.col("_y")).alias("_sxy"),
-    )
-    nd = F.col("_n").cast("double")
-    sxx_c = F.col("_sxx") - F.col("_sx") * F.col("_sx") / nd
-    sxy_c = F.col("_sxy") - F.col("_sx") * F.col("_sy") / nd
-    beta = F.when((F.col("_n") >= 4) & (sxx_c > 0), sxy_c / sxx_c)
-    fit = mom.select(
-        *group_cols, "_n",
-        beta.alias("_beta"),
-        (F.col("_sy") / nd).alias("_my"),
-        (F.col("_sx") / nd).alias("_mx"),
-    )
-    joined = base.join(F.broadcast(fit), on=group_cols, how="inner")
+    joined = _ols_fit_joined(df, group_cols, x_col, y_col, y_scale, 4)
     e = (
         F.col("_y") - F.col("_my")
         - F.col("_beta") * (F.col("_x") - F.col("_mx"))
@@ -14382,8 +14255,9 @@ def ramsey_reset(
     F(1, n−3)``. The "is a straight line even the right model?"
     companion to the heteroskedasticity screens.
 
-    Plan: the same two-stage closed-form shape as :func:`white_test`
-    — stage-1 OLS joined back (broadcast), ŷ² built per row, ONE
+    Plan: the two-stage closed-form shape of :func:`white_test` —
+    stage-1 OLS joined back (:func:`_ols_fit_joined`), ŷ² built per
+    row, ONE
     auxiliary aggregation, and the two-regressor RSS from the closed
     2×2 solve: ``RSS₂ = Syy − (b₁S1y + b₂S2y)``. p via the exact
     F survival (:mod:`padua_spark.functions.distributions`
@@ -14395,29 +14269,7 @@ def ramsey_reset(
     """
     from padua_spark.functions.distributions import f_sf_udf
 
-    x = F.col(x_col).cast("double")
-    y = F.col(y_col).cast("double") * F.lit(float(y_scale))
-    base = df.where(x.isNotNull() & y.isNotNull()).select(
-        *group_cols, x.alias("_x"), y.alias("_y")
-    )
-    mom = base.groupBy(*group_cols).agg(
-        F.count(F.lit(1)).cast("bigint").alias("_n"),
-        F.sum("_x").alias("_sx"),
-        F.sum("_y").alias("_sy"),
-        F.sum(F.col("_x") * F.col("_x")).alias("_sxx"),
-        F.sum(F.col("_x") * F.col("_y")).alias("_sxy"),
-    )
-    nd = F.col("_n").cast("double")
-    sxx_c = F.col("_sxx") - F.col("_sx") * F.col("_sx") / nd
-    sxy_c = F.col("_sxy") - F.col("_sx") * F.col("_sy") / nd
-    beta = F.when((F.col("_n") >= 5) & (sxx_c > 0), sxy_c / sxx_c)
-    fit = mom.select(
-        *group_cols, "_n",
-        beta.alias("_beta"),
-        (F.col("_sy") / nd).alias("_my"),
-        (F.col("_sx") / nd).alias("_mx"),
-    )
-    joined = base.join(F.broadcast(fit), on=group_cols, how="inner")
+    joined = _ols_fit_joined(df, group_cols, x_col, y_col, y_scale, 5)
     yhat = (
         F.col("_my")
         + F.col("_beta") * (F.col("_x") - F.col("_mx"))

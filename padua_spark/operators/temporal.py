@@ -658,6 +658,65 @@ def markov_attribution(
     )
 
 
+def _sorted_series(
+    df: DataFrame,
+    key_cols: list[str],
+    order_cols: list[str],
+    value_col: str,
+    max_series_length: int | None,
+    op: str,
+) -> DataFrame:
+    """The bounded-series scaffold of the per-key recursive
+    forecasters (:func:`holt_forecast`, :func:`holt_winters_forecast`,
+    :func:`croston_forecast`): rows with a non-NULL value and order
+    key, one row per key carrying ``_xs``, its values as doubles in
+    ``order_cols`` order (a sorted ``collect_list`` of structs —
+    deterministic). The per-key fold holds the whole series in one
+    row, so a preflight count first raises ``ValueError`` naming
+    ``op`` on any key above ``max_series_length`` (``None`` opts
+    out)."""
+    v = F.col(value_col).cast("double")
+    cond = v.isNotNull()
+    for c in order_cols:
+        cond = cond & F.col(c).isNotNull()
+    base = df.where(cond)
+    if max_series_length is not None:
+        hot = (
+            base.groupBy(*key_cols)
+            .agg(F.count(F.lit(1)).alias("_n"))
+            .where(F.col("_n") > int(max_series_length))
+            .orderBy(F.col("_n").desc())
+            .limit(1)
+            .collect()
+        )
+        if hot:
+            r = hot[0]
+            key = tuple(r[c] for c in key_cols)
+            raise ValueError(
+                f"{op}: key {key} has {r['_n']} rows, above "
+                f"max_series_length={max_series_length}. The per-key "
+                "fold materializes the whole series in one row — "
+                "pre-aggregate (e.g. to daily points) or pass "
+                "max_series_length=None to override deliberately."
+            )
+    return (
+        base.groupBy(*key_cols)
+        .agg(
+            F.sort_array(
+                F.collect_list(
+                    F.struct(
+                        *[F.col(c) for c in order_cols], v.alias("_v")
+                    )
+                )
+            ).alias("_s")
+        )
+        .select(
+            *key_cols,
+            F.transform(F.col("_s"), lambda s: s["_v"]).alias("_xs"),
+        )
+    )
+
+
 def holt_forecast(
     df: DataFrame,
     key_cols: list[str],
@@ -683,53 +742,15 @@ def holt_forecast(
     ``F.aggregate`` — no Python, no window-per-step, one shuffle by
     key. Per-row memory is O(series length), so the bounded-series
     contract is ENFORCED up front: a preflight count raises on any
-    key above ``max_series_length`` (the
-    :func:`~padua_spark.operators.stats._enforce_bounded_groups`
-    discipline; pass ``None`` to opt out). The identical fold order
-    makes the float recursion engine-reproducible — a SQL twin
-    stepping the same recursion matches bit-for-bit before the 6dp
-    rounding. Output: one row per key:
+    key above ``max_series_length`` (:func:`_sorted_series`; pass
+    ``None`` to opt out). The identical fold order makes the float
+    recursion engine-reproducible — a SQL twin stepping the same
+    recursion matches bit-for-bit before the 6dp rounding. Output: one row per key:
     ``(keys..., n, level, trend, forecast)``.
     """
-    v = F.col(value_col).cast("double")
-    cond = v.isNotNull()
-    for c in order_cols:
-        cond = cond & F.col(c).isNotNull()
-    base = df.where(cond)
-    if max_series_length is not None:
-        hot = (
-            base.groupBy(*key_cols)
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .where(F.col("_n") > int(max_series_length))
-            .orderBy(F.col("_n").desc())
-            .limit(1)
-            .collect()
-        )
-        if hot:
-            r = hot[0]
-            key = tuple(r[c] for c in key_cols)
-            raise ValueError(
-                f"holt_forecast: key {key} has {r['_n']} rows, above "
-                f"max_series_length={max_series_length}. The per-key "
-                "fold materializes the whole series in one row — "
-                "pre-aggregate (e.g. to daily points) or pass "
-                "max_series_length=None to override deliberately."
-            )
-    arr = (
-        base.groupBy(*key_cols)
-        .agg(
-            F.sort_array(
-                F.collect_list(
-                    F.struct(
-                        *[F.col(c) for c in order_cols], v.alias("_v")
-                    )
-                )
-            ).alias("_s")
-        )
-        .select(
-            *key_cols,
-            F.transform(F.col("_s"), lambda s: s["_v"]).alias("_xs"),
-        )
+    arr = _sorted_series(
+        df, key_cols, order_cols, value_col, max_series_length,
+        "holt_forecast",
     )
     n = F.size("_xs")
     x1 = F.element_at("_xs", 1)
@@ -957,9 +978,9 @@ def holt_winters_forecast(
     Forecast ``h`` steps out: ``l_n + h·b_n + s[((n+h−1) mod m)+1]``
     (the most recent seasonal of the target phase).
 
-    Scale shape is holt_forecast's: one shuffle by key, the ordered
-    series collected into ONE in-row array and folded JVM-side with
-    ``F.aggregate`` — state is (level, trend, m seasonals, t), so
+    Scale shape is :func:`_sorted_series`'s: one shuffle by key, the
+    ordered series collected into ONE in-row array and folded JVM-side
+    with ``F.aggregate`` — state is (level, trend, m seasonals, t), so
     per-row memory is O(series + m) and the bounded-series contract
     is ENFORCED up front (same preflight; ``None`` opts out). With
     binary-fraction smoothing constants the float recursion is
@@ -970,45 +991,10 @@ def holt_winters_forecast(
     m = int(period)
     if m < 2:
         raise ValueError("holt_winters_forecast: period must be >= 2")
-    v = F.col(value_col).cast("double")
-    cond = v.isNotNull()
-    for c in order_cols:
-        cond = cond & F.col(c).isNotNull()
-    base = df.where(cond)
-    if max_series_length is not None:
-        hot = (
-            base.groupBy(*key_cols)
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .where(F.col("_n") > int(max_series_length))
-            .orderBy(F.col("_n").desc())
-            .limit(1)
-            .collect()
-        )
-        if hot:
-            r = hot[0]
-            key = tuple(r[c] for c in key_cols)
-            raise ValueError(
-                f"holt_winters_forecast: key {key} has {r['_n']} "
-                f"rows, above max_series_length={max_series_length}; "
-                "pre-aggregate the series or pass None deliberately"
-            )
-    arr = (
-        base.groupBy(*key_cols)
-        .agg(
-            F.sort_array(
-                F.collect_list(
-                    F.struct(
-                        *[F.col(c) for c in order_cols], v.alias("_v")
-                    )
-                )
-            ).alias("_s")
-        )
-        .select(
-            *key_cols,
-            F.transform(F.col("_s"), lambda s: s["_v"]).alias("_xs"),
-        )
-        .where(F.size("_xs") >= 2 * m)
-    )
+    arr = _sorted_series(
+        df, key_cols, order_cols, value_col, max_series_length,
+        "holt_winters_forecast",
+    ).where(F.size("_xs") >= 2 * m)
     n = F.size("_xs")
     a_ = F.lit(float(alpha))
     b_ = F.lit(float(beta))
@@ -1551,7 +1537,7 @@ def croston_forecast(
     recommends).
 
     Scale shape: the recursion is inherently sequential per key —
-    same contract as :func:`holt_forecast`: ONE sorted in-row array
+    the :func:`_sorted_series` contract: ONE sorted in-row array
     per key folded JVM-side (``F.aggregate``, deterministic struct
     sort), one shuffle by key, bounded-series preflight ENFORCED via
     ``max_series_length``. α an exact binary fraction keeps the float
@@ -1563,45 +1549,9 @@ def croston_forecast(
     Beyond the reference; standard per Croston 1972 / Syntetos &
     Boylan 2005.
     """
-    v = F.col(value_col).cast("double")
-    cond = v.isNotNull()
-    for c in order_cols:
-        cond = cond & F.col(c).isNotNull()
-    base = df.where(cond)
-    if max_series_length is not None:
-        hot = (
-            base.groupBy(*key_cols)
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .where(F.col("_n") > int(max_series_length))
-            .orderBy(F.col("_n").desc())
-            .limit(1)
-            .collect()
-        )
-        if hot:
-            r = hot[0]
-            key = tuple(r[c] for c in key_cols)
-            raise ValueError(
-                f"croston_forecast: key {key} has {r['_n']} rows, "
-                f"above max_series_length={max_series_length}. The "
-                "per-key fold materializes the whole series in one "
-                "row — pre-aggregate to coarser periods or pass "
-                "max_series_length=None deliberately."
-            )
-    arr = (
-        base.groupBy(*key_cols)
-        .agg(
-            F.sort_array(
-                F.collect_list(
-                    F.struct(
-                        *[F.col(c) for c in order_cols], v.alias("_v")
-                    )
-                )
-            ).alias("_s")
-        )
-        .select(
-            *key_cols,
-            F.transform(F.col("_s"), lambda s: s["_v"]).alias("_xs"),
-        )
+    arr = _sorted_series(
+        df, key_cols, order_cols, value_col, max_series_length,
+        "croston_forecast",
     )
     a_ = F.lit(float(alpha))
     init = F.struct(
@@ -2548,12 +2498,12 @@ def _prefix_deviations(df, group_cols, order_cols, value_col):
     """The changepoint core of :func:`snht_test` and
     :func:`buishand_range`: ONE group-partitioned ordered window pass
     (running sum ``_c`` = C_k, row index ``_t`` = k) joined to the
-    per-group moments (``_n``, ``_sx``, ``_sxx``). Returns
-    ``(joined, base, s_k, var0)``: the prefix deviation
+    per-group moments (``_n``, ``_sx``, ``_sxx``, ``_lo``, ``_hi``).
+    Returns ``(joined, base, s_k, var0)``: the prefix deviation
     ``S_k = C_k − k·x̄`` and the population variance σ̂², as Columns
-    over ``joined``. ``base`` (non-NULL values) feeds both the window
-    pass and the moments, so it is persisted; track it on the
-    result."""
+    over ``joined``; σ̂² is NULL for a constant series. ``base``
+    (non-NULL values) feeds both the window pass and the moments, so
+    it is persisted; track it on the result."""
     from pyspark import StorageLevel
 
     v = F.col(value_col).cast("double")
@@ -2577,10 +2527,16 @@ def _prefix_deviations(df, group_cols, order_cols, value_col):
         F.count(F.lit(1)).cast("bigint").alias("_n"),
         F.sum("_v").alias("_sx"),
         F.sum(F.col("_v") * F.col("_v")).alias("_sxx"),
+        F.min("_v").alias("_lo"),
+        F.max("_v").alias("_hi"),
     )
     nd = F.col("_n").cast("double")
     mean = F.col("_sx") / nd
-    var0 = (F.col("_sxx") - nd * mean * mean) / nd
+    # a constant series is decided exactly (min = max): the moment
+    # formula cancels to a tiny nonzero variance on values such as 0.1
+    var0 = F.when(
+        F.col("_lo") < F.col("_hi"), (F.col("_sxx") - nd * mean * mean) / nd
+    )
     s_k = F.col("_c") - F.col("_t") * mean
     return stepped.join(mom, on=group_cols), base, s_k, var0
 
@@ -2588,7 +2544,7 @@ def _prefix_deviations(df, group_cols, order_cols, value_col):
 def _earliest_argmax(score):
     """``change_index``: the earliest ``_k`` maximising ``score``;
     NULL when ``score`` is NULL on every row of the group (a
-    degenerate series: n < 2 or σ̂ = 0)."""
+    degenerate series: n < 2 or a constant series)."""
     return F.min_by(
         F.col("_k"),
         F.when(score.isNotNull(), F.struct(-score, F.col("_k"))),
@@ -2622,8 +2578,8 @@ def snht_test(
     aggregation joined back (both in :func:`_prefix_deviations`), one
     argmax roll-up. Output one row per group: ``(groups..., n,
     t0_stat, change_index)``, 6dp; NULL stat and change_index when
-    n < 2 or σ̂ = 0. Asymptotic critical values are tabulated
-    (Khaliq & Ouarda 2007) and n-dependent; reported raw.
+    n < 2 or the series is constant. Asymptotic critical values are
+    tabulated (Khaliq & Ouarda 2007) and n-dependent; reported raw.
     """
     from padua_spark.io_utils import track_cached
 
@@ -2671,7 +2627,7 @@ def buishand_range(
     ``S_k = C_k − k·x̄`` are :func:`_prefix_deviations`, shared with
     :func:`snht_test`. Output one row per group: ``(groups..., n,
     range_stat, rescaled_range, change_index)``, 6dp; NULL stats and
-    change_index when n < 2 or σ̂ = 0.
+    change_index when n < 2 or the series is constant.
     """
     from padua_spark.io_utils import track_cached
 
@@ -3115,6 +3071,96 @@ def periodogram(
     )
 
 
+def _scaling_exponent(
+    df: DataFrame,
+    group_cols: list[str],
+    order_cols: list[str],
+    value_col: str,
+    sizes: list[int],
+    indexed,
+    per_scale,
+    scale_col: str,
+    out_col: str,
+) -> DataFrame:
+    """The scaling-fit scaffold of :func:`hurst_rs` and
+    :func:`dfa_hurst`. Non-NULL values ``_v`` get an ordered window
+    ``wo`` per group; ``indexed(wo, t0)`` lists the columns of the
+    indexed frame besides the group keys (``t0`` is the 0-based row
+    index ``_t0``). That frame is persisted and hash-partitioned ONCE
+    on the group key; ``per_scale(rep, m)`` turns it into
+    ``(groups..., _m, scale_col, _nblocks)`` per block size ``m``. The
+    union over ``sizes`` feeds one log-log OLS of ``scale_col`` on
+    ``m`` over the valid scales; output per group: ``(groups..., n,
+    n_scales, out_col)``, the slope at 6dp and NULL below 2 valid
+    scales."""
+    from functools import reduce
+
+    from pyspark import StorageLevel
+
+    from padua_spark.io_utils import track_cached
+
+    v = F.col(value_col).cast("double")
+    base = df.where(v.isNotNull()).select(
+        *group_cols, *order_cols, v.alias("_v")
+    )
+    wo = Window.partitionBy(*group_cols).orderBy(
+        *[F.col(c).asc() for c in order_cols]
+    )
+    t0 = (F.row_number().over(wo) - 1).cast("bigint").alias("_t0")
+    # the indexed frame feeds |scales|+1 consumers (each scale's
+    # block-window pass plus the row-count frame) — without a persist
+    # the parquet scan + row_number sort re-run per consumer
+    stepped = base.select(*group_cols, *indexed(wo, t0)).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
+    # ONE group-keyed exchange feeds all per-scale passes (guide
+    # §2.4): the cached plan hides its window partitioning (AQE-
+    # cached plans expose no output partitioning), so without this
+    # every scale's (group, block) window AND block aggregation
+    # re-shuffled the frame — 2 exchanges x |scales|. A single
+    # hash-partitioning on the group key satisfies every downstream
+    # ClusteredDistribution over (group, _blk) (partitioning keys are
+    # a subset of the clustering keys), so the per-scale window sorts
+    # run exchange-free. Parallelism is unchanged — the row_number
+    # window upstream already serializes each group into one
+    # partition. Caveat: the same key also caps each scale's window
+    # sort at group cardinality — with few groups (3 at sf10) the
+    # per-scale passes run on that many tasks and the sf1->sf10
+    # exponent sits at about 0.96-0.99; a (group, _blk) shuffle would
+    # parallelize them there.
+    rep = stepped.repartition(*group_cols) if group_cols else stepped
+    scales = reduce(
+        lambda a, b: a.unionAll(b), [per_scale(rep, m) for m in sizes]
+    )
+    pts = scales.where(
+        (F.col(scale_col) > 0) & (F.col("_nblocks") >= 1)
+    ).select(
+        *group_cols,
+        F.log("_m").alias("_lx"),
+        F.log(scale_col).alias("_ly"),
+    )
+    fit = pts.groupBy(*group_cols).agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_scales"),
+        F.sum("_lx").alias("_sx"),
+        F.sum("_ly").alias("_sy"),
+        F.sum(F.col("_lx") * F.col("_lx")).alias("_sxx"),
+        F.sum(F.col("_lx") * F.col("_ly")).alias("_sxy"),
+    )
+    kd = F.col("n_scales").cast("double")
+    sxx = F.col("_sxx") - F.col("_sx") * F.col("_sx") / kd
+    sxy = F.col("_sxy") - F.col("_sx") * F.col("_sy") / kd
+    slope = F.when((F.col("n_scales") >= 2) & (sxx > 0), sxy / sxx)
+    n_rows = rep.groupBy(*group_cols).agg(
+        F.count(F.lit(1)).cast("bigint").alias("n")
+    )
+    out = n_rows.join(fit, on=group_cols, how="left").select(
+        *group_cols, "n",
+        F.coalesce(F.col("n_scales"), F.lit(0)).alias("n_scales"),
+        F.round(slope, 6).alias(out_col),
+    )
+    return track_cached(out, stepped)
+
+
 def hurst_rs(
     df: DataFrame,
     group_cols: list[str],
@@ -3141,48 +3187,16 @@ def hurst_rs(
     (group, block) using two frames of the same window — running sum
     and whole-block mean — so ``S_j = C_j − j·x̄`` needs NO join; the
     per-scale passes are a compile-time-bounded union; the log-log
-    OLS runs on the ≤|scales|-row frame. Output per group:
+    OLS runs on the ≤|scales|-row frame (both
+    :func:`_scaling_exponent`). Output per group:
     ``(groups..., n, n_scales, hurst)``, 6dp; NULL when < 2 valid
     scales.
     """
     sizes = sorted(set(block_sizes or [16, 32, 64, 128, 256]))
     if any(m < 4 for m in sizes):
         raise ValueError("hurst_rs: block sizes must be >= 4")
-    v = F.col(value_col).cast("double")
-    base = df.where(v.isNotNull()).select(
-        *group_cols, *order_cols, v.alias("_v")
-    )
-    wo = Window.partitionBy(*group_cols).orderBy(
-        *[F.col(c).asc() for c in order_cols]
-    )
-    from pyspark import StorageLevel
 
-    from padua_spark.io_utils import track_cached
-
-    # the indexed frame feeds |scales|+1 consumers (each scale's
-    # block-window pass plus the row-count frame) — without a persist
-    # the parquet scan + row_number sort re-run per consumer
-    stepped = base.select(
-        *group_cols, "_v",
-        (F.row_number().over(wo) - 1).cast("bigint").alias("_t0"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    # ONE group-keyed exchange feeds all per-scale passes (guide
-    # §2.4): the cached plan hides its window partitioning (AQE-
-    # cached plans expose no output partitioning), so without this
-    # every scale's (group, block) window AND block aggregation
-    # re-shuffled the frame — 2 exchanges x |scales|. A single
-    # hash-partitioning on the group key satisfies every downstream
-    # ClusteredDistribution over (group, _blk) (partitioning keys are
-    # a subset of the clustering keys), so the 5 window sorts run
-    # exchange-free. Parallelism is unchanged — the row_number window
-    # upstream already serializes each group into one partition.
-    # Caveat: the same key also caps each scale's window sort at group
-    # cardinality — with few groups (3 at sf10) the per-scale passes
-    # run on that many tasks and the sf1->sf10 exponent sits at about
-    # 0.96-0.99; a (group, _blk) shuffle would parallelize them there.
-    rep = stepped.repartition(*group_cols) if group_cols else stepped
-    scale_frames = []
-    for m in sizes:
+    def per_scale(rep, m):
         blk = (F.col("_t0") / m).cast("bigint")
         wb = Window.partitionBy(*group_cols, "_blk").orderBy("_j")
         wrun = wb.rowsBetween(Window.unboundedPreceding,
@@ -3209,7 +3223,7 @@ def hurst_rs(
                 F.col("_m2") - F.col("_mu") * F.col("_mu")
             ).alias("_var"),
         )
-        per_scale = per_block.where(F.col("_var") > 0).groupBy(
+        return per_block.where(F.col("_var") > 0).groupBy(
             *group_cols
         ).agg(
             F.avg(
@@ -3220,37 +3234,11 @@ def hurst_rs(
             *group_cols, F.lit(float(m)).alias("_m"), "_rs",
             "_nblocks",
         )
-        scale_frames.append(per_scale)
-    from functools import reduce
 
-    scales = reduce(lambda a, b: a.unionAll(b), scale_frames)
-    pts = scales.where(
-        (F.col("_rs") > 0) & (F.col("_nblocks") >= 1)
-    ).select(
-        *group_cols,
-        F.log("_m").alias("_lx"),
-        F.log("_rs").alias("_ly"),
+    return _scaling_exponent(
+        df, group_cols, order_cols, value_col, sizes,
+        lambda wo, t0: ["_v", t0], per_scale, "_rs", "hurst",
     )
-    fit = pts.groupBy(*group_cols).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_scales"),
-        F.sum("_lx").alias("_sx"),
-        F.sum("_ly").alias("_sy"),
-        F.sum(F.col("_lx") * F.col("_lx")).alias("_sxx"),
-        F.sum(F.col("_lx") * F.col("_ly")).alias("_sxy"),
-    )
-    kd = F.col("n_scales").cast("double")
-    sxx = F.col("_sxx") - F.col("_sx") * F.col("_sx") / kd
-    sxy = F.col("_sxy") - F.col("_sx") * F.col("_sy") / kd
-    hurst = F.when((F.col("n_scales") >= 2) & (sxx > 0), sxy / sxx)
-    n_rows = rep.groupBy(*group_cols).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n")
-    )
-    out = n_rows.join(fit, on=group_cols, how="left").select(
-        *group_cols, "n",
-        F.coalesce(F.col("n_scales"), F.lit(0)).alias("n_scales"),
-        F.round(hurst, 6).alias("hurst"),
-    )
-    return track_cached(out, stepped)
 
 
 def haar_energy(
@@ -3629,44 +3617,31 @@ def dfa_hurst(
     ``F(m) = √(ΣRSS / (n_blocks·m))``; α = OLS slope of ``ln F(m)``
     on ``ln m``. Per-scale passes are a compile-time-bounded union
     over ONE persisted indexed profile frame; the log-log fit runs
-    on the ≤|scales|-row frame. Output per group: ``(groups..., n,
-    n_scales, dfa_alpha)``, 6dp; NULL when < 2 valid scales.
+    on the ≤|scales|-row frame (both :func:`_scaling_exponent`).
+    Output per group: ``(groups..., n, n_scales, dfa_alpha)``, 6dp;
+    NULL when < 2 valid scales.
 
     Beyond the reference; standard per Peng et al. 1994.
     """
     sizes = sorted(set(block_sizes or [8, 16, 32, 64, 128]))
     if any(m < 4 for m in sizes):
         raise ValueError("dfa_hurst: block sizes must be >= 4")
-    v = F.col(value_col).cast("double")
-    base = df.where(v.isNotNull()).select(
-        *group_cols, *order_cols, v.alias("_v")
-    )
-    wo = Window.partitionBy(*group_cols).orderBy(
-        *[F.col(c).asc() for c in order_cols]
-    )
-    wrun = wo.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    wall = wo.rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    from pyspark import StorageLevel
 
-    from padua_spark.io_utils import track_cached
+    def profile(wo, t0):
+        wrun = wo.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        wall = wo.rowsBetween(
+            Window.unboundedPreceding, Window.unboundedFollowing
+        )
+        return [
+            t0,
+            (
+                F.sum("_v").over(wrun)
+                - F.row_number().over(wo).cast("double")
+                * F.avg("_v").over(wall)
+            ).alias("_y"),
+        ]
 
-    stepped = base.select(
-        *group_cols,
-        (F.row_number().over(wo) - 1).cast("bigint").alias("_t0"),
-        (
-            F.sum("_v").over(wrun)
-            - F.row_number().over(wo).cast("double")
-            * F.avg("_v").over(wall)
-        ).alias("_y"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    # one group-keyed exchange for all scale passes — see hurst_rs
-    # (the cached AQE plan hides partitioning; group ⊆ (group, _blk)
-    # satisfies every per-scale window/aggregation distribution)
-    rep = stepped.repartition(*group_cols) if group_cols else stepped
-    scale_frames = []
-    for m in sizes:
+    def per_scale(rep, m):
         blk = (F.col("_t0") / m).cast("bigint")
         j = (F.col("_t0") % m + 1).cast("double")
         framed = rep.select(
@@ -3697,7 +3672,7 @@ def dfa_hurst(
             - F.col("_sjy_c") * F.col("_sjy_c") / sjj_c,
             F.lit(0.0),
         )
-        per_scale = per_block.groupBy(*group_cols).agg(
+        return per_block.groupBy(*group_cols).agg(
             F.sum(rss).alias("_rss"),
             F.count(F.lit(1)).cast("bigint").alias("_nblocks"),
         ).select(
@@ -3709,37 +3684,11 @@ def dfa_hurst(
             ).alias("_f"),
             "_nblocks",
         )
-        scale_frames.append(per_scale)
-    from functools import reduce
 
-    scales = reduce(lambda a, b: a.unionAll(b), scale_frames)
-    pts = scales.where(
-        (F.col("_f") > 0) & (F.col("_nblocks") >= 1)
-    ).select(
-        *group_cols,
-        F.log("_m").alias("_lx"),
-        F.log("_f").alias("_ly"),
+    return _scaling_exponent(
+        df, group_cols, order_cols, value_col, sizes,
+        profile, per_scale, "_f", "dfa_alpha",
     )
-    fit = pts.groupBy(*group_cols).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_scales"),
-        F.sum("_lx").alias("_sx"),
-        F.sum("_ly").alias("_sy"),
-        F.sum(F.col("_lx") * F.col("_lx")).alias("_sxx"),
-        F.sum(F.col("_lx") * F.col("_ly")).alias("_sxy"),
-    )
-    kd = F.col("n_scales").cast("double")
-    sxx = F.col("_sxx") - F.col("_sx") * F.col("_sx") / kd
-    sxy = F.col("_sxy") - F.col("_sx") * F.col("_sy") / kd
-    alpha = F.when((F.col("n_scales") >= 2) & (sxx > 0), sxy / sxx)
-    n_rows = rep.groupBy(*group_cols).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n")
-    )
-    out = n_rows.join(fit, on=group_cols, how="left").select(
-        *group_cols, "n",
-        F.coalesce(F.col("n_scales"), F.lit(0)).alias("n_scales"),
-        F.round(alpha, 6).alias("dfa_alpha"),
-    )
-    return track_cached(out, stepped)
 
 
 def arch_lm(
