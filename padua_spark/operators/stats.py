@@ -2237,7 +2237,8 @@ def dunn_posthoc(
                                · (1/n_i + 1/n_j))``
 
     on the POOLED midranks, with Benjamini-Hochberg adjustment across
-    the k(k-1)/2 pairs.
+    the k(k-1)/2 pairs. A listed group with no rows has no mean rank:
+    its pairs are not reported and k counts only non-empty groups.
 
     Scale shape: :func:`_pooled_rank_sums` — per-distinct-value
     per-group counts, the distributed two-pass running sum for
@@ -2289,10 +2290,17 @@ def dunn_posthoc(
                     ).alias("mean_rank_b"),
                 )
             )
-    pairs = agg.select(
-        "_tie", "_nt", F.explode(F.array(*structs)).alias("_p")
-    ).select("_p.*", "_tie", "_nt")
-    m_pairs = len(structs)
+    # a listed group with no rows has no mean rank: its pairs are
+    # dropped and left out of the BH count m = C(k non-empty, 2)
+    k = sum([(F.col(f"_n{i}") > 0).cast("int") for i in range(len(gs))])
+    pairs = (
+        agg.select(
+            "_tie", "_nt", (k * (k - 1) / 2).alias("_m"),
+            F.explode(F.array(*structs)).alias("_p"),
+        )
+        .select("_p.*", "_tie", "_nt", "_m")
+        .where((F.col("n_a") > 0) & (F.col("n_b") > 0))
+    )
     nd = F.col("_nt").cast("double")
     var = (
         nd * (nd + 1.0) / 12.0
@@ -2305,9 +2313,8 @@ def dunn_posthoc(
     scored = pairs.select(
         "group_a", "group_b", "n_a", "n_b",
         "mean_rank_a", "mean_rank_b",
-        z.alias("z"),
+        z.alias("z"), "_m",
     ).withColumn("p_normal", _normal_sf_2sided(F.col("z")))
-    m = m_pairs
     w_asc = Window.orderBy("p_normal", "group_a", "group_b")
     w_desc = Window.orderBy(
         F.col("p_normal").desc(),
@@ -2320,10 +2327,10 @@ def dunn_posthoc(
         F.least(
             F.lit(1.0),
             F.min(
-                F.col("p_normal") * F.lit(float(m)) / F.col("_rk")
+                F.col("p_normal") * F.col("_m") / F.col("_rk")
             ).over(w_desc),
         ),
-    ).drop("_rk")
+    ).drop("_rk", "_m")
     return track_cached(out, *cached)
 
 

@@ -4,6 +4,15 @@ migrates by calling one function instead of a notebook of eager steps;
 each returns lazy DataFrames that Catalyst optimizes end-to-end, with
 optional parquet checkpoints at the phase boundaries where the
 notebooks pickled intermediates (SURVEY.md §2.1 S7).
+
+Each pipeline parses its MaxQuant input once: the wide table is pruned
+to the metadata columns and the one measurement kind the pipeline
+consumes before the unpivot (so the CSV scan parses no other kind),
+the min-valid filter runs over a single feature-keyed window instead
+of re-scanning its input for a semi-join, repeat reads of an unchanged
+file reuse the session's memoized schema (``read_maxquant``), and
+design tables and checkpoints are read with declared schemas, so
+building a pipeline fires no reader job once its input was seen.
 """
 
 from __future__ import annotations
@@ -18,7 +27,22 @@ from padua_spark.operators import (
     process as proc,
     stats as st,
 )
-from padua_spark.sources import maxquant_long, read_design, read_maxquant
+from padua_spark.sources import (
+    maxquant_long,
+    parse_expression_columns,
+    read_design,
+    read_maxquant,
+)
+
+
+def _one_kind(wide: DataFrame, kind: str) -> DataFrame:
+    """``wide`` without the expression columns of every kind but
+    ``kind``: the unpivot stacks, and the CSV scan parses, only the
+    kind the pipeline consumes."""
+    return wide.drop(*[
+        p["column"] for p in parse_expression_columns(wide.columns)
+        if p["kind"] != kind
+    ])
 
 
 def phospho_lfq(
@@ -46,7 +70,9 @@ def phospho_lfq(
         wide = flt.filter_localization_probability(
             wide, localization_threshold
         )
-    meas, features = maxquant_long(wide, zeros_to_null=True)
+    meas, features = maxquant_long(
+        _one_kind(wide, kind), zeros_to_null=True
+    )
     # One measurement kind only — mixing Intensity with LFQ intensity
     # would double every (feature, sample) cell.
     intens = meas.filter(
@@ -64,7 +90,9 @@ def phospho_lfq(
         joined.write.mode("overwrite").parquet(
             f"{checkpoint_dir}/normalized_long"
         )
-        joined = spark.read.parquet(f"{checkpoint_dir}/normalized_long")
+        joined = spark.read.schema(joined.schema).parquet(
+            f"{checkpoint_dir}/normalized_long"
+        )
     collapse_keys = [
         c for c in ["feature_id", "Group", "Timepoint", "Replicate"]
         if c in joined.columns
@@ -102,7 +130,9 @@ def protein_groups_ratio(
     wide = flt.remove_reverse(wide)
     wide = flt.remove_contaminants(wide)
     wide = flt.remove_only_identified_by_site(wide)
-    meas, features = maxquant_long(wide, zeros_to_null=True)
+    meas, features = maxquant_long(
+        _one_kind(wide, ratio_kind), zeros_to_null=True
+    )
     ratios = meas.filter(
         (F.col("kind") == ratio_kind) & F.col("sample_label").isNotNull()
     )
@@ -147,7 +177,7 @@ def msp_enrichment(
     the design width, bounded) → broadcast design join → per-Group
     roll-up over the sample-domain frame.
     """
-    wide = read_maxquant(spark, msp_path)
+    wide = _one_kind(read_maxquant(spark, msp_path), "Intensity")
     meas, _features = maxquant_long(wide, zeros_to_null=True)
     flagged = (
         meas.filter(

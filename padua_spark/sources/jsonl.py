@@ -107,11 +107,10 @@ def split_corrupt_via_sink(
     raw = read_jsonl_docs(spark, src_path, schema=schema,
                           corrupt_col=corrupt_col)
     clean_cols = [c for c in raw.columns if c != corrupt_col]
-    raw.where(F.col(corrupt_col).isNull()).select(*clean_cols).write.mode(
-        "overwrite"
-    ).parquet(clean_dir)
-    clean = spark.read.parquet(clean_dir)
-    lines = spark.read.text(src_path)
+    written = raw.where(F.col(corrupt_col).isNull()).select(*clean_cols)
+    written.write.mode("overwrite").parquet(clean_dir)
+    clean = spark.read.schema(written.schema).parquet(clean_dir)
+    lines = spark.read.schema("value string").text(src_path)
     parsed = F.from_json(
         F.col("value"),
         f"{schema}, {corrupt_col} string",

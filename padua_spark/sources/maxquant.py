@@ -20,7 +20,9 @@ into the ``multiplicity`` key.
 from __future__ import annotations
 
 import re
+import weakref
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -42,6 +44,37 @@ _EXPR_PATTERNS: list[tuple[str, re.Pattern]] = [
 ]
 
 
+# Reader options of every MaxQuant scan; part of the schema memo key.
+_READ_OPTIONS = (("sep", "\t"), ("header", "true"))
+
+# session -> {(qualified path, length, modificationTime, options): schema}.
+# Weak-keyed like ``__spark_entry__._T_CACHE``: a stopped session's
+# entries are reclaimed with it.
+_SCHEMA_MEMO: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
+    weakref.WeakKeyDictionary()
+)
+
+
+def _file_version(spark: SparkSession, path: str) -> tuple | None:
+    """``(qualified path, length, modificationTime)`` of ``path`` through
+    the Hadoop FileSystem API (any file system), or None when it is not
+    a single existing file (a directory, a glob, a missing path)."""
+    jvm = spark._jvm
+    hpath = jvm.org.apache.hadoop.fs.Path(path)
+    try:
+        fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+        status = fs.getFileStatus(hpath)
+    except Py4JJavaError:
+        return None
+    if not status.isFile():
+        return None
+    return (
+        status.getPath().toString(),
+        status.getLen(),
+        status.getModificationTime(),
+    )
+
+
 def read_maxquant(
     spark: SparkSession,
     path: str,
@@ -52,17 +85,30 @@ def read_maxquant(
 
     Reference: ``io.read_maxquant`` (io.py:6-18) — ``pd.read_csv(f,
     delimiter='\\t', header=0, index_col='id')``. Spark: a CSV scan with
-    schema inference; at scale, convert once to Parquet and read that
-    (schema declared → column pruning + predicate pushdown reach the
-    scan).
+    schema inference, run ONCE per file version per session: the
+    inferred schema is memoized under the file's Hadoop ``FileStatus``
+    (qualified path, length, modification time) and the reader
+    options, and a repeat read of an unchanged single file declares it
+    (``.schema``), so it fires no header or inference job. A rewritten
+    file has a new length or modification time and is inferred again;
+    a directory or glob is inferred on every read. At scale, convert
+    once to Parquet and read that (schema declared → column pruning +
+    predicate pushdown reach the scan).
     """
-    df = (
-        spark.read.option("sep", "\t")
-        .option("header", True)
-        .option("inferSchema", True)
-        .csv(path)
-    )
-    return df
+    version = _file_version(spark, path)
+    memo = _SCHEMA_MEMO.setdefault(spark, {})
+    key = None if version is None else (*version, _READ_OPTIONS)
+    schema = memo.get(key)
+    if schema is None:
+        df = (
+            spark.read.options(**dict(_READ_OPTIONS))
+            .option("inferSchema", True)
+            .csv(path)
+        )
+        if key is not None:
+            memo[key] = df.schema
+        return df
+    return spark.read.options(**dict(_READ_OPTIONS)).schema(schema).csv(path)
 
 
 def parse_expression_columns(

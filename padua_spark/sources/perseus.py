@@ -22,6 +22,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from padua_spark.sources.design import _csv_names, _string_schema
+
 # Reference field→type map (io.py:44-65), extended by dtype fallback.
 _KNOWN_TYPES = {
     "Amino acid": "C",
@@ -82,20 +84,21 @@ def write_perseus(df: DataFrame, path: str) -> None:
 def read_perseus(spark: SparkSession, path: str) -> DataFrame:
     """Read a Perseus TSV, dropping annotation rows (``#!…`` markers)
     and applying the type row's casts (reference: ``io.read_perseus``,
-    io.py:21-30 collapses the multi-row header).
+    io.py:21-30 collapses the multi-row header). The header line read
+    here gives the all-string schema the scan declares, so it fires no
+    header job.
     """
     with open(path) as f:
-        header = f.readline().rstrip("\n").split("\t")
+        header = _csv_names(f.readline().rstrip("\n"), "\t")
         type_rows = []
-        pos = f.tell()
         line = f.readline()
         while line.startswith("#!"):
             type_rows.append(line.rstrip("\n").split("\t"))
-            pos = f.tell()
             line = f.readline()
     df = (
         spark.read.option("sep", "\t")
         .option("header", True)
+        .schema(_string_schema(header))
         .csv(path)
         .filter(~F.col(header[0]).startswith("#!"))
     )

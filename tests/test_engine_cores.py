@@ -132,7 +132,10 @@ def _table_dir(tmp_path, name, template, rows, columns):
     )
     cols = ", ".join(columns)
     marks = ", ".join("?" for _ in columns)
-    con.executemany(f"INSERT INTO {name} ({cols}) VALUES ({marks})", rows)
+    if rows:
+        con.executemany(
+            f"INSERT INTO {name} ({cols}) VALUES ({marks})", rows
+        )
     con.execute(
         f"COPY {name} TO '{tmp_path}/{name}.parquet' (FORMAT PARQUET)"
     )
@@ -288,49 +291,19 @@ _RANK_CASES = {
 }
 
 
-# where the oracle parts from the engine's documented row: an empty
-# listed group adds no Kruskal-Wallis term (the oracle's 0/0 is NULL);
-# one pooled distinct value leaves A2 NULL (the oracle reports 0.0)
-_RANK_DOCUMENTED = {
-    ("kruskal_wallis", "empty_group"): {
-        "h_stat": 1.714286, "h_stat_corrected": 1.764706, "n_total": 6,
-        "k_groups": 3, "tie_term": 6, "p_chi2": 0.413808099,
-    },
-    ("anderson_darling_ksamp", "all_tied"): {
-        "a2_akn": None, "n_total": 5, "k_groups": 3, "n_distinct": 1,
-    },
-}
-
-
-_DUNN_EMPTY_GROUP = pytest.mark.xfail(
-    strict=True,
-    reason="dunn_posthoc keeps the pairs of an empty group, with a "
-    "non-NULL p_adjusted; the oracle drops them",
-)
-
-
 @pytest.mark.parametrize("name, case", [
-    pytest.param(name, case, marks=(
-        [_DUNN_EMPTY_GROUP]
-        if (name, case) == ("dunn_posthoc", "empty_group") else []
-    ))
+    (name, case)
     for name in ["kruskal_wallis", "dunn_posthoc", "anderson_darling_ksamp",
                  "cuzick_trend", "van_der_waerden", "fligner_killeen"]
     for case in sorted(_RANK_CASES)
 ])
 def test_rank_core_degenerate(spark, tmp_path, name, case):
     """``_pooled_group_counts`` callers over groups A, N, R when one
-    listed group is empty or every value ties: equal to the oracle or
-    to the documented row."""
+    listed group is empty or every value ties: equal to the oracle."""
     d = _table_dir(
         tmp_path, "lineitem", "lineitem", _RANK_CASES[case], _LINE_COLS
     )
-    want = _RANK_DOCUMENTED.get((name, case))
-    if want is None:
-        assert _engine_vs_oracle(spark, name, d, ["lineitem"])
-    else:
-        assert [r.asDict() for r in em.queries()[name](spark, d).collect()
-                ] == [want]
+    assert _engine_vs_oracle(spark, name, d, ["lineitem"])
 
 
 def _block_rows(per_user):

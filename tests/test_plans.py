@@ -91,15 +91,22 @@ def test_ttest_single_pass_partial_agg(spark):
     assert simple.count("Exchange") == 1, simple[:2000]
 
 
-def test_min_valid_semi_join(spark):
+def test_min_valid_one_exchange_no_join(spark):
+    """The min-valid filter is two windows over one feature-keyed
+    partitioning: one scan, one Exchange and one Sort, both on the
+    feature key, and no join back to its input."""
     li = _li(spark).withColumn(
         "val", F.when(F.col("l_discount") > 0, F.col("l_quantity"))
     )
     out = flt.minimum_valid_values_in_any_group(
         li, ["l_partkey"], ["l_returnflag"], "val", n=8
     )
-    plan = explain_str(out)
-    assert "LeftSemi" in plan, plan[:2000]
+    plan = explain_str(out, mode="simple")
+    assert plan.count("Exchange") == 1, plan[:3000]
+    assert plan.count("Exchange hashpartitioning(l_partkey#") == 1, plan
+    assert plan.count("Sort [l_partkey#") == 1, plan[:3000]
+    assert "Join" not in plan, plan[:3000]
+    assert plan.count("FileScan") == 1, plan[:3000]
 
 
 def test_imputation_no_shuffle_of_fact(spark):

@@ -13297,3 +13297,54 @@ def test_no_create_dataframe_outside_local_frame():
         "createDataFrame outside io_utils.local_frame: "
         + ", ".join(offenders)
     )
+
+
+def test_sources_and_pipelines_declare_read_schemas():
+    """Lint: a file read in ``padua_spark/sources/`` or ``pipelines.py``
+    declares its schema (``.schema(`` in the reader chain), so building a
+    frame fires no header, inference or footer job. The one exception is
+    the first read in ``read_maxquant``: it infers a MaxQuant table's
+    schema once per file version and memoizes it for the repeat reads."""
+    import ast
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parents[1]
+    pkg = root / "padua_spark"
+    files = sorted((pkg / "sources").glob("*.py")) + [pkg / "pipelines.py"]
+    terminals = {"csv", "parquet", "json", "text", "orc", "load"}
+
+    def chain(node):
+        attrs = []
+        while isinstance(node, (ast.Call, ast.Attribute)):
+            if isinstance(node, ast.Attribute):
+                attrs.append(node.attr)
+            node = node.func if isinstance(node, ast.Call) else node.value
+        return attrs
+
+    inferring = []
+    for path in files:
+        tree = ast.parse(path.read_text(), str(path))
+        for fn in ast.walk(tree):
+            if not isinstance(fn, ast.FunctionDef):
+                continue
+            for node in ast.walk(fn):
+                if not (isinstance(node, ast.Call)
+                        and isinstance(node.func, ast.Attribute)
+                        and node.func.attr in terminals):
+                    continue
+                attrs = chain(node.func.value)
+                if ({"read", "readStream"} & set(attrs)
+                        and "schema" not in attrs):
+                    inferring.append(
+                        (path.name, fn.name, node.lineno, node.col_offset)
+                    )
+    first_maxquant = min(
+        (r for r in inferring if r[:2] == ("maxquant.py", "read_maxquant")),
+        key=lambda r: r[2:], default=None,
+    )
+    assert first_maxquant is not None  # the memoized read was scanned
+    offenders = [r for r in inferring if r != first_maxquant]
+    assert not offenders, (
+        "file reads without a declared schema: "
+        + ", ".join(f"{f}:{line} ({fn})" for f, fn, line, _ in offenders)
+    )
